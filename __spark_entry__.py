@@ -22,8 +22,8 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on sf0.001: the reference pipeline transposed onto
-    the star schema (recode → filter → group-sum → explicit pivot →
-    row-count join → argmax/taste/bucket derivations)."""
+    the star schema (recode → one group-by for the category sums and the
+    row count → join to orders → argmax/taste/bucket derivations)."""
     return all_queries()["flagship_profile"](spark, SMOKE_SF_DIR)
 
 

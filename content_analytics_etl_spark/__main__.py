@@ -23,6 +23,7 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 
@@ -36,18 +37,18 @@ def _cmd_etl(args: argparse.Namespace) -> int:
     flat = read_viewing_log(
         spark, f"{args.input}/*.json*", flatten=True, date_from_filename=True
     )
-    if args.start or args.end:
-        if args.start:
-            flat = flat.filter(F.col("log_date") >= F.to_date(F.lit(args.start), "yyyyMMdd"))
-        if args.end:
-            flat = flat.filter(F.col("log_date") <= F.to_date(F.lit(args.end), "yyyyMMdd"))
-    flat = flat.drop("log_date").cache()  # one scan for both pipeline branches
+    if args.start:
+        flat = flat.filter(F.col("log_date") >= F.to_date(F.lit(args.start), "yyyyMMdd"))
+    if args.end:
+        flat = flat.filter(F.col("log_date") <= F.to_date(F.lit(args.end), "yyyyMMdd"))
+    written = Observation("etl")  # counts rows in the write's own job
     result = run_viewing_pipeline(flat, fidelity=not args.corrected)
+    result = result.observe(written, F.count(F.lit(1)).alias("rows"))
     if args.format == "csv":
         write_csv_single(result, args.output)
     else:
         write_parquet_partitioned(result, args.output)
-    print(f"wrote {result.count()} contract profiles to {args.output}")
+    print(f"wrote {written.get['rows']} contract profiles to {args.output}")
     return 0
 
 

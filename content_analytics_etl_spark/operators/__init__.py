@@ -1,18 +1,12 @@
 from .recode import recode_category
-from .profile import (
-    count_devices,
-    pivot_profile,
-    sum_by_category,
-    attach_device_count,
-)
+from .profile import category_profile, count_devices, pivot_profile
 from .olap import argmax_label, taste_label, bucketize
 
 __all__ = [
     "recode_category",
+    "category_profile",
     "count_devices",
-    "sum_by_category",
     "pivot_profile",
-    "attach_device_count",
     "argmax_label",
     "taste_label",
     "bucketize",

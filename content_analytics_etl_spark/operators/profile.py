@@ -1,15 +1,14 @@
 """Profile aggregation operators (SURVEY.md §2.3 A1-A4, §2.4 J1).
 
 The reference builds one wide row per contract: per-category summed
-durations (group-sum + pivot) joined with a device count. Generalized
-here over any (key, category, measure) triple. Scale notes:
+durations (group-sum + pivot) inner-joined with a device count.
+``category_profile`` builds it in one ``groupBy`` (one scan, one exchange,
+no join) over any (key, category, measure) triple. Scale notes:
 
-- ``pivot`` always takes the **explicit value list** — the reference's
+- categories are always an **explicit value list** — the reference's
   dynamic pivot (``ETL_full.py:63``) costs an extra distinct-collect job
   and produces a data-dependent schema that crashes its own downstream
   ``greatest`` when a category is absent (SURVEY §7 "hard parts").
-- Both aggregation branches and the join shuffle on the same key, so
-  Catalyst reuses the exchange; no manual repartition needed.
 - Device count exposes BOTH semantics: the reference's row-count quirk
   (A3: counts log rows, ``ETL_full.py:42-45``) and the corrected
   ``countDistinct`` — callers choose fidelity vs. fixed.
@@ -19,10 +18,35 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["count_devices", "sum_by_category", "pivot_profile", "attach_device_count"]
+__all__ = ["category_profile", "count_devices", "pivot_profile"]
+
+
+def category_profile(
+    df: DataFrame,
+    key: str,
+    category: str,
+    measure: str,
+    categories: Sequence[str],
+    *,
+    devices: Column,
+) -> DataFrame:
+    """A1-A4 + P8 + J1 in one aggregation: per ``key``, the sum of
+    ``measure`` for each category in ``categories`` order (0 when absent),
+    then ``devices``, an aliased aggregate over all the key's rows (A3).
+    A key is kept when at least one row carries a listed category — the
+    rows the reference's filter-then-inner-join keeps, so a key with only
+    unlisted rows drops and one whose listed rows sum to 0 stays. Unlike
+    the join, a NULL key forms a group; filter it first if unwanted."""
+    sums = [
+        F.coalesce(F.sum(F.when(F.col(category) == c, F.col(measure))), F.lit(0)).alias(c)
+        for c in categories
+    ]
+    listed = F.count_if(F.col(category).isin(list(categories))).alias("_listed_rows")
+    wide = df.groupBy(key).agg(*sums, devices, listed)
+    return wide.filter(F.col("_listed_rows") > 0).drop("_listed_rows")
 
 
 def count_devices(
@@ -44,19 +68,6 @@ def count_devices(
     return df.select(key, device_col).groupBy(key).agg(agg)
 
 
-def sum_by_category(
-    df: DataFrame,
-    key: str,
-    category: str,
-    measure: str,
-    *,
-    out_col: str | None = None,
-) -> DataFrame:
-    """A1/A2 with the P7 rename folded into the agg alias (the reference
-    renames ``sum(TotalDuration)`` after the fact — ``ETL_full.py:62``)."""
-    return df.groupBy(key, category).agg(F.sum(measure).alias(out_col or measure))
-
-
 def pivot_profile(
     df: DataFrame,
     key: str,
@@ -75,10 +86,3 @@ def pivot_profile(
     if fill is not None:
         wide = wide.na.fill(fill, subset=list(categories))
     return wide
-
-
-def attach_device_count(profile: DataFrame, devices: DataFrame, key: str) -> DataFrame:
-    """J1: USING-style inner equi-join (``ETL_full.py:67``). Both sides
-    are aggregates of the same scan keyed identically, so the planner
-    reuses the exchange; with AQE the small side goes broadcast."""
-    return profile.join(devices, on=key, how="inner")

@@ -5,10 +5,10 @@ Re-expression of the reference's canonical pipeline
 with its scale problems fixed:
 
 - explicit schema (no inference scan);
-- explicit pivot values (no discovery job, stable schema — downstream
+- explicit category values (no discovery job, stable schema — downstream
   ``greatest`` can't crash on a missing category);
-- one cached flattened frame per run (the reference re-executes the whole
-  DAG per action — SURVEY §3 step 4);
+- one ``groupBy`` in place of the reference's two branches and their
+  join: one scan, no cache (the reference re-executes the DAG per action);
 - ``coalesce(1)`` CSV for small outputs, partitioned parquet at scale.
 
 ``fidelity=True`` preserves the reference's observable quirks
@@ -22,12 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.olap import argmax_label, bucketize, taste_label
-from .operators.profile import (
-    attach_device_count,
-    count_devices,
-    pivot_profile,
-    sum_by_category,
-)
+from .operators.profile import category_profile
 from .operators.recode import VIEWING_CATEGORIES, VIEWING_CATEGORY_MAP, recode_category
 
 __all__ = ["etl_process", "olap_process", "run_viewing_pipeline"]
@@ -46,22 +41,19 @@ SECONDS_PER_DAY = 86400  # ETL_full.py:131
 
 
 def etl_process(flat: DataFrame, *, fidelity: bool = True) -> DataFrame:
-    """Flattened log rows → one wide row per Contract.
-
-    Mirrors ``ETL_process`` (``ETL_full.py:74-90``): device count off the
-    pre-recode frame (branch A), recode → filters → group-sum → pivot
-    (branch B), inner join on Contract.
+    """Flattened log rows → one wide row per Contract: the rows of
+    ``ETL_process`` (``ETL_full.py:74-90``: device count joined to the
+    recoded, filtered category sums) from one aggregation. Sentinel and
+    NULL contracts never survived that join, so they are filtered first.
     """
-    devices = count_devices(flat, "Contract", "Mac", distinct=not fidelity)
-    recoded = flat.withColumn("Type", recode_category("AppName", VIEWING_CATEGORY_MAP))
-    filtered = recoded.filter(
-        (F.col("Contract") != "0") & (F.col("Type") != "Error")
-    )  # P3 (sentinel; NULL contracts drop via 3VL) + P4
-    stats = sum_by_category(filtered, "Contract", "Type", "TotalDuration")
-    wide = pivot_profile(
-        stats, "Contract", "Type", "TotalDuration", VIEWING_CATEGORIES, fill=0
+    recoded = flat.filter(F.col("Contract") != "0").withColumn(  # P3; NULLs drop via 3VL
+        "Type", recode_category("AppName", VIEWING_CATEGORY_MAP)
+    )  # unmapped apps → 'Error', which no category matches (P4)
+    devices = F.count(F.lit(1)) if fidelity else F.countDistinct("Mac")
+    return category_profile(
+        recoded, "Contract", "Type", "TotalDuration", VIEWING_CATEGORIES,
+        devices=devices.alias("TotalDevices"),
     )
-    return attach_device_count(wide, devices, "Contract")
 
 
 def olap_process(profile: DataFrame) -> DataFrame:
@@ -78,7 +70,5 @@ def olap_process(profile: DataFrame) -> DataFrame:
 
 
 def run_viewing_pipeline(flat: DataFrame, *, fidelity: bool = True) -> DataFrame:
-    """Full pipeline over an already-flattened log frame. Caching the
-    input is the caller's choice (do it when the same run also computes
-    other branches)."""
+    """Full pipeline over an already-flattened log frame."""
     return olap_process(etl_process(flat, fidelity=fidelity))

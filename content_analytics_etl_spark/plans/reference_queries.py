@@ -7,10 +7,11 @@ The reference pipeline transposed per FIXTURES.md §2: ``Contract`` ↔
 values with an explicit value list.
 
 The flagship query (``entry``'s workload) exercises ~80% of the §2
-inventory in one plan: scan → CASE/isin recode (P5) → sentinel filter
-(P3/P4) → group-sum (A1/A2 + P7-as-alias) → explicit-value pivot + fill
-(A4/P8) → row-count join (A3 + J1) → argmax label (F3/F4) →
-null-skipping concat (F5) → arithmetic + bucketize (F6/F7).
+inventory in one plan: scan → CASE/isin recode (P5) → one group-by for
+the explicit-value category sums with fill, the row count and the
+all-'Error' key drop (A1-A4/P4/P8 + P7-as-alias) → join to orders (J1) →
+argmax label (F3/F4) → null-skipping concat (F5) → arithmetic +
+bucketize (F6/F7).
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.olap import argmax_label, bucketize, taste_label
-from ..operators.profile import attach_device_count, count_devices, pivot_profile
+from ..operators.profile import category_profile, count_devices, pivot_profile
 from ..operators.recode import recode_category
 from ._util import dec, dsum, t
 
@@ -53,18 +54,14 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         recode_category(F.concat("l_returnflag", "l_linestatus"), FLAG_CATEGORY_MAP),
     ).withColumn("price_dec", dec("l_extendedprice"))
 
-    # Branch A (A3 fidelity semantics: row count per key, off pre-filter frame)
-    devices = count_devices(li, "l_orderkey", "l_linenumber", out_col="n_items")
-    # Branch B: filter → group-sum → explicit pivot → fill
-    stats = flat.filter(F.col("cat") != "Error").select("l_orderkey", "cat", "price_dec")
-    wide = pivot_profile(stats, "l_orderkey", "cat", "price_dec", FLAG_CATEGORIES, fill=0)
-    wide = wide.select(
-        "l_orderkey", *[F.col(c).cast("double").alias(c) for c in FLAG_CATEGORIES]
+    # A3 fidelity semantics: n_items counts every line, 'Error' lines too
+    wide = category_profile(
+        flat, "l_orderkey", "cat", "price_dec", FLAG_CATEGORIES,
+        devices=F.count(F.lit(1)).alias("n_items"),
     )
-
-    profile = attach_device_count(wide, devices, "l_orderkey").join(
-        orders, F.col("l_orderkey") == F.col("o_orderkey"), "inner"
-    ).drop("o_orderkey")
+    profile = wide.select(
+        "l_orderkey", *[F.col(c).cast("double").alias(c) for c in FLAG_CATEGORIES], "n_items"
+    ).join(orders, F.col("l_orderkey") == F.col("o_orderkey"), "inner").drop("o_orderkey")
 
     total = sum(F.col(c) for c in FLAG_CATEGORIES)
     return (

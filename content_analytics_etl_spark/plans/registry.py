@@ -137,6 +137,7 @@ DRIVER_WINDOW: list[str] = [
     "embedding_power_iteration",
     "embedding_pq_train",
     "events_key_skew_profile",
+    "flagship_profile",
     "graph_common_neighbors",
     "graph_common_neighbors_pruned",
     "graph_kcore_decomposition",
@@ -175,7 +176,6 @@ DRIVER_WINDOW: list[str] = [
     "events_distinct_sketch_rollup",
     "events_ema_smoothing",
     "events_mad_outliers",
-    "events_markov_transitions",
 ]
 
 

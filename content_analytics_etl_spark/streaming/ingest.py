@@ -17,10 +17,19 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import VIEWING_LOG_SCHEMA
 
 __all__ = ["ingest_viewing_logs", "ingest_viewing_logs_with_dlq"]
+
+
+def _await_backlog(q: StreamingQuery, timeout_s: float) -> None:
+    """Stop and raise if the pass outlives ``timeout_s`` (0 → 1 ms:
+    ``awaitTermination`` refuses a zero timeout)."""
+    if not q.awaitTermination(max(timeout_s, 0.001)):
+        q.stop()
+        raise TimeoutError(f"ingest stream {q.id} still running after {timeout_s} s")
 
 
 def ingest_viewing_logs(
@@ -34,7 +43,8 @@ def ingest_viewing_logs(
     """One incremental ingest pass (availableNow): new
     ``YYYYMMDD.jsonl`` files in ``input_dir`` → flattened rows appended
     under ``output_dir/log_date=.../``. Idempotent per file via the
-    checkpoint; call again whenever new days land."""
+    checkpoint; call again whenever new days land. A pass still running
+    after ``timeout_s`` is stopped and raises ``TimeoutError``."""
     raw = spark.readStream.schema(VIEWING_LOG_SCHEMA).json(input_dir)
     flat = raw.select(
         "_source.*",
@@ -57,7 +67,7 @@ def ingest_viewing_logs(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    _await_backlog(q, timeout_s)
 
 
 def ingest_viewing_logs_with_dlq(
@@ -142,4 +152,4 @@ def ingest_viewing_logs_with_dlq(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    _await_backlog(q, timeout_s)

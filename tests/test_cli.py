@@ -3,27 +3,115 @@ reference-script replacement must run end-to-end in-process."""
 
 from __future__ import annotations
 
+import csv
 import glob
+import re
+
+import pytest
+from test_pipeline import _src
+from test_pipeline_fuzz import _reference_sim
 
 from content_analytics_etl_spark.__main__ import main
 
+DAY = 86400
+MALFORMED = "this is not json"
 
-def test_cli_etl_on_reference_samples(spark, tmp_path, capsys):
+# (Contract, Mac, TotalDuration, AppName) per YYYYMMDD day file, with the
+# FIXTURES.md §1 edge rows; Contract None means the key is absent. The
+# CLI runs over 20220402..20220403, so the first day must not count.
+DAYS = {
+    "20220401": [
+        ("ONLY_DAY1", "AA", 500, "VOD"),
+        ("SHARED", "AA", 1000, "SPORT"),
+    ],
+    "20220402": [
+        ("0", "AA", 10, "VOD"),  # sentinel
+        (None, "AA", 10, "VOD"),  # NULL contract
+        ("HNH1", "AA", 10, "UNKNOWN_APP"),  # Error row, still a device row
+        ("HNH1", "AA", 100, "KPLUS"),
+        ("HNH1", "BB", 50, "KPlus"),
+        ("HNH1", "BB", 7, "kplus"),  # wrong case → Error
+        *[("MULTI", f"M{i % 3}", 60 + i, "VOD") for i in range(5)],  # 3 Macs, 5 rows
+        ("DUP", "D1", 42, "RELAX"),
+        ("DUP", "D1", 42, "RELAX"),
+        ("SPORT_ONLY", "S1", 1200, "SPORT"),
+        ("ALL5", "A5", 20, "VOD"),
+        ("ALL5", "A5", 30, "RELAX"),
+        ("ALL5", "A5", 40, "SPORT"),
+        ("ALL5", "A5", 50, "CHANNEL"),
+        ("ALL5", "A5", 10, "CHILD"),
+        ("TIE", "T1", 200, "CHILD"),  # Child = Movie → Child
+        ("TIE", "T1", 200, "VOD"),
+        ("TIE", "T1", 30, "SPORT"),
+        ("LOW_EDGE", "L1", 10 * DAY - 1, "DSHD"),
+        ("MEDIUM_EDGE", "M1", 10 * DAY, "FIMS"),
+        ("HIGH_EDGE", "H1", 20 * DAY, "BHD"),
+        ("ERROR_ONLY", "E1", 300, "UNKNOWN_APP"),  # dropped
+        ("ZERO", "Z1", 0, "RELAX"),  # kept
+        ("SHARED", "AA", 100, "VOD"),
+    ],
+    "20220403": [  # no CHILD rows in this file
+        ("SHARED", "BB", 300, "CHANNEL"),
+        ("HNH1", "CC", 5, "VOD"),
+        ("MULTI", "M0", 1, "DANET"),
+    ],
+}
+IN_RANGE = ["--start", "20220402", "--end", "20220403"]
+COLUMNS = [
+    "Contract", "TVDuration", "MovieDuration", "RelaxDuration", "ChildDuration",
+    "SportDuration", "TotalDevices", "most_watch", "Taste", "Active_day",
+]
+
+
+def _write_drops(d) -> str:
+    d.mkdir()
+    for day, rows in DAYS.items():
+        lines = [_src(*r) for r in rows]
+        lines.insert(len(lines) // 2, MALFORMED)
+        (d / f"{day}.json").write_text("\n".join(lines) + "\n")
+    return str(d)
+
+
+def _etl(drops: str, out: str, capsys) -> int:
+    assert main(["etl", "--input", drops, "--output", out, *IN_RANGE]) == 0
+    m = re.search(r"wrote (\d+) contract profiles", capsys.readouterr().out)
+    return int(m.group(1))
+
+
+def test_cli_etl_matches_reference_simulation(spark, tmp_path, capsys):
     out = str(tmp_path / "profiles")
-    rc = main(
-        [
-            "etl",
-            "--input", "/root/reference/Dataset",
-            "--output", out,
-            "--start", "20220401",
-            "--end", "20220402",
-        ]
-    )
-    assert rc == 0
+    wrote = _etl(_write_drops(tmp_path / "drops"), out, capsys)
     files = glob.glob(f"{out}/part-*.csv")
     assert len(files) == 1  # coalesce(1): single CSV, no shuffle
-    header = open(files[0]).readline().strip().split(",")
-    assert "Contract" in header and "most_watch" in header and "Taste" in header
+    with open(files[0], newline="") as fh:
+        reader = csv.DictReader(fh)
+        assert reader.fieldnames == COLUMNS
+        got = {
+            r["Contract"]: tuple(
+                r[c] for c in (
+                    "ChildDuration", "MovieDuration", "RelaxDuration", "SportDuration",
+                    "TVDuration", "TotalDevices", "most_watch", "Taste", "Active_day",
+                )
+            )
+            for r in reader
+        }
+    in_range = [r for day in ("20220402", "20220403") for r in DAYS[day]]
+    want = {
+        c: tuple(str(v) for v in row) for c, row in _reference_sim(in_range).items()
+    }
+    assert "ONLY_DAY1" not in want and "ERROR_ONLY" not in want and "ZERO" in want
+    assert got == want
+    assert wrote == len(got)
+
+
+def test_cli_etl_leaves_nothing_cached(spark, tmp_path, capsys):
+    # each call reads a new drop directory, as each day's job does; a
+    # cached input of an earlier call would not be reused, only kept
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    for i in range(2):
+        drops = _write_drops(tmp_path / f"drops{i}")
+        _etl(drops, str(tmp_path / f"profiles{i}"), capsys)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before
 
 
 def test_cli_query_runs(spark, capsys):

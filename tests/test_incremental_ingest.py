@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from content_analytics_etl_spark.sources.readers import read_viewing_log
@@ -64,6 +65,19 @@ def test_incremental_ingest_processes_only_new_files(spark, tmp_path):
         date_from_filename=True,
     )
     assert {tuple(r) for r in both.collect()} == {tuple(r) for r in batch.collect()}
+
+
+def test_ingest_that_outlives_its_timeout_raises(spark, tmp_path):
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _day_file(inp, "20220401", 40)
+    running = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError):
+        ingest_viewing_logs(
+            spark, str(inp), str(tmp_path / "out"), str(tmp_path / "ckpt"), timeout_s=0
+        )
+    # the stalled stream was stopped, not left running
+    assert {q.id for q in spark.streams.active} <= running
 
 
 def test_dlq_ingest_splits_and_is_incremental(spark, tmp_path):
