@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..frames import local_frame
 from ..functions.vectors import dot_product
 
 __all__ = [
@@ -63,8 +64,8 @@ def _centroid_df(spark: SparkSession, centroids: list[list[float]]) -> DataFrame
             T.StructField("cv", T.ArrayType(T.DoubleType())),
         ]
     )
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)], schema
+    return local_frame(
+        spark, [(i, [float(x) for x in c]) for i, c in enumerate(centroids)], schema
     )
 
 
@@ -209,7 +210,8 @@ def assign_clusters_literal_hof(
             ]
         )
     )
-    mat = spark.createDataFrame(
+    mat = local_frame(
+        spark,
         [([(i, [float(x) for x in c]) for i, c in enumerate(centroids)],)],
         T.StructType([T.StructField("cmat", mat_type)]),
     )

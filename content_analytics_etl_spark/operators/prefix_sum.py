@@ -43,12 +43,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..cache import materialize_and_release
+from ..frames import local_frame
 
 _PID = "__psum_pid"
 
 
 _IEEE_SUB_BITS = 5
-_IEEE_SENTINEL = -(1 << 40)  # all non-positive / NULL / NaN values
+_IEEE_SENTINEL = -(1 << 40)  # all non-positive / NULL values
+_IEEE_NAN = 1 << 40  # NaN, which Spark orders above every other double
 
 
 def ieee_bucket_asc(col: str, sub_bits: int = _IEEE_SUB_BITS) -> Column:
@@ -70,13 +72,13 @@ def ieee_bucket_asc(col: str, sub_bits: int = _IEEE_SUB_BITS) -> Column:
     the ranked relation) disappears from every prefix-sum query (guide
     §1.2 step 1 / §5: no driver round-trip, one fewer pass).  The
     trade is balance: buckets are equal-width in log-value rather than
-    equal-count.  Uniform, lognormal and Zipf shapes all spread over
-    ≥ 64 buckets with max-bucket share ≤ ~2 % except ties (measured in
-    tests/test_round15_ops.py); tie-heavy columns collapse ties into
-    one bucket exactly as quantile boundaries did.  Values ≤ 0 / NULL
-    / NaN all land in one sentinel bucket BELOW every positive bucket
-    — monotone as long as the order direction puts them first (callers
-    here have strictly positive keys; the sentinel is defensive).
+    equal-count (2^sub_bits buckets per binade), so a column whose mass
+    sits in one narrow value range fills few buckets; tie-heavy columns
+    collapse ties into one bucket exactly as quantile boundaries did.
+    Values ≤ 0 and NULL land in one sentinel bucket BELOW every
+    positive bucket, and NaN in one bucket ABOVE them all, which is
+    where Spark sorts each under ascending order with its default
+    NULLS FIRST (NaN is the largest double).
 
     At 100 TB the collect stays O(#binades · 2^sub_bits) ≤ ~4k rows
     for the full double range — same control-plane contract as the
@@ -92,17 +94,20 @@ def ieee_bucket_asc(col: str, sub_bits: int = _IEEE_SUB_BITS) -> Column:
     pid = (
         e.cast("long") * F.lit(1 << (sub_bits + 2)) + sub.cast("long")
     )
-    return F.when(
-        x.isNull() | F.isnan(x) | (x <= 0.0), F.lit(_IEEE_SENTINEL)
-    ).otherwise(pid)
+    return (
+        F.when(F.isnan(x), F.lit(_IEEE_NAN))
+        .when(x.isNull() | (x <= 0.0), F.lit(_IEEE_SENTINEL))
+        .otherwise(pid)
+    )
 
 
 def ieee_bucket_desc(col: str, sub_bits: int = _IEEE_SUB_BITS) -> Column:
     """Descending twin of :func:`ieee_bucket_asc` (pid 0-ish holds the
     largest values): the negated ascending bucket — monotone
-    non-decreasing along the value DESCENDING, non-positive/NULL/NaN
-    values in one sentinel bucket ABOVE every positive bucket (they
-    sort last descending)."""
+    non-decreasing along the value DESCENDING, with NaN in a bucket
+    BELOW every other (Spark sorts NaN first descending) and
+    non-positive/NULL values in one sentinel bucket ABOVE every
+    positive bucket (they sort last under the default NULLS LAST)."""
     return -ieee_bucket_asc(col, sub_bits)
 
 
@@ -169,9 +174,14 @@ def distributed_prefix_sum(
     stats = (
         tagged.groupBy(_PID)
         .agg(F.sum(value_col).alias("s"), F.count(F.lit(1)).alias("c"))
-        .orderBy(_PID)
         .collect()
     )
+    if any(r[_PID] is None for r in stats):
+        tagged.unpersist()
+        raise ValueError("distributed_prefix_sum: pid is NULL for some rows")
+    # O(#pids) rows: sorting them here saves the range-sampling job and
+    # sort stage an orderBy would add to the collect
+    stats.sort(key=lambda r: r[_PID])
     total = sum(r["s"] for r in stats)
     rows, acc_s, acc_c = [], 0, 0
     for r in stats:
@@ -179,9 +189,10 @@ def distributed_prefix_sum(
         acc_s += r["s"]
         acc_c += r["c"]
     # long pid: composite (group-index · stride + ieee bucket) pids
-    # exceed int32 once the stride leaves room for the full ieee range
-    offsets = spark.createDataFrame(
-        rows, f"{_PID} long, __psum_off long, __psum_off_rank long"
+    # exceed int32 once the stride leaves room for the full ieee range;
+    # a local relation, so the broadcast below runs no job
+    offsets = local_frame(
+        spark, rows, f"{_PID} long, __psum_off long, __psum_off_rank long"
     )
     w = W.partitionBy(_PID).orderBy(*order)
     out = tagged.withColumn(
@@ -200,10 +211,8 @@ def distributed_prefix_sum(
     out = out.drop(
         _PID, "__psum_local", "__psum_off", "__psum_off_rank", "__psum_rn"
     )
-    # r15 note: a caller-managed lazy mode (skip this persist+count,
-    # release tagged with the caller's terminal materialization) was
-    # tried for graph_negative_samples and measured WORSE in an
-    # interleaved same-session A/B (min 4.7 -> 6.3 s: the result
-    # persist + double window re-evaluation outweigh the saved count
-    # job) — the eager materialization below is the measured-best shape.
+    # Eager on purpose: without this persist + count the caller's action
+    # re-runs the upstream aggregate and both windows, and lazy variants
+    # measured no faster (part_revenue_abc warm 5.2 against 5.35 CPU-s)
+    # or slower (graph_negative_samples 4.7 -> 6.3 s)
     return materialize_and_release(out, tagged), total

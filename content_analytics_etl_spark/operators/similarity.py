@@ -30,6 +30,7 @@ from operator import add
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.hashing import portable_hash64
 from ..functions.vectors import dot_product, l2_norm, to_double_array
 
@@ -558,7 +559,7 @@ def cosine_rank_assign(
         # empty centroid relation: the old HOF chain produced an empty
         # result; np.asarray([]) here would be 1-D and crash the kernel
         # inside the Arrow worker (ADVICE r14, low)
-        return e.sparkSession.createDataFrame([], out_schema)
+        return local_frame(e.sparkSession, [], out_schema)
     cells = np.asarray([c for c, _, _ in cent_sorted], dtype=np.int32)
     cmat = np.asarray([cv for _, cv, _ in cent_sorted], dtype=np.float64)
     cn = np.asarray([n for _, _, n in cent_sorted], dtype=np.float64)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cache import session_materialized
+from ..frames import local_frame
 from ..functions.hashing import DUCKDB_HASH64, portable_hash64
 from ._util import rank_limited, source_fingerprint, t
 from .dedup_queries import (
@@ -249,7 +250,7 @@ def corpus_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     for s in srcs:
         off_rows.append((s, off))
         off += totals[s]
-    offs = spark.createDataFrame(off_rows, "source string, src_off long")
+    offs = local_frame(spark, off_rows, "source string, src_off long")
     scored.unpersist()
     cum = F.col("cum_global") - F.col("src_off")
     return (
@@ -300,7 +301,8 @@ def corpus_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         cum_col="cum",
     )
     k = SYS_SAMPLE_K
-    pts = spark.createDataFrame(
+    pts = local_frame(
+        spark,
         [(i, ((2 * i + 1) * int(total)) // (2 * k)) for i in range(k)],
         "pick_idx int, point long",
     )

@@ -27,6 +27,7 @@ from ..operators.dedup import (
     simhash60_agg,
 )
 from ..cache import session_materialized
+from ..frames import local_frame
 from ..operators.prefix_sum import distributed_prefix_sum
 from ._util import materialize_and_release, source_fingerprint, t
 
@@ -371,7 +372,8 @@ def dedup_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalesce counts to 0, and NULL-guard the ratios so a vacuous
     # config reports n_candidates=0 / precision NULL / recall 0 instead
     # of vanishing from the report. Oracle mirrors.
-    cfg = spark.createDataFrame(
+    cfg = local_frame(
+        spark,
         [(int(b), int(r)) for b, r in LSH_TUNE_CONFIGS],
         "bands int, rows_per_band int",
     )

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.hashing import loglog_reg_rho
 from ..operators.prefix_sum import distributed_prefix_sum, ieee_bucket_asc
 from ..sources.writers import write_parquet_partitioned
@@ -470,7 +471,7 @@ def events_quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.sum("b.c").alias("cum"))
     )
     tot = bins.agg(F.sum("c").alias("total_rows"))
-    qs = spark.createDataFrame([(q,) for q in QSKETCH_QS], "q double")
+    qs = local_frame(spark, [(q,) for q in QSKETCH_QS], "q double")
     target = F.ceil(F.col("q") * F.col("total_rows").cast("double")).cast(
         "bigint"
     )

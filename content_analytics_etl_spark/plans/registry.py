@@ -129,6 +129,7 @@ DRIVER_WINDOW: list[str] = [
     "corpus_systematic_sample",
     "corpus_token_budget_sample",
     "dedup_clusters",
+    "dedup_minhash_band_tuning",
     "dedup_simhash",
     "doc_perplexity_buckets",
     "doc_winnow_overlap",
@@ -137,6 +138,7 @@ DRIVER_WINDOW: list[str] = [
     "embedding_power_iteration",
     "embedding_pq_train",
     "events_key_skew_profile",
+    "events_quantile_sketch_rollup",
     "flagship_profile",
     "graph_common_neighbors",
     "graph_common_neighbors_pruned",
@@ -174,8 +176,6 @@ DRIVER_WINDOW: list[str] = [
     "events_daily_from_hourly",
     "events_daily_mv_refresh",
     "events_distinct_sketch_rollup",
-    "events_ema_smoothing",
-    "events_mad_outliers",
 ]
 
 

@@ -56,6 +56,7 @@ from ..operators.similarity import (
     pq_argmin_codes,
 )
 from ..cache import session_materialized
+from ..frames import local_frame
 from ..index_store import index_version, persisted_index
 from ._util import materialize_and_release, source_fingerprint, t
 
@@ -2281,8 +2282,8 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final frame from the already-collected O(dim) vector — the same
     # _centroid_df convention embedding_kmeans uses; re-deriving it from
     # lineage would run the third corpus pass a second time
-    out = spark.createDataFrame(
-        [(d, float(z)) for d, z in enumerate(w)], "d int, w double"
+    out = local_frame(
+        spark, [(d, float(z)) for d, z in enumerate(w)], "d int, w double"
     ).select(
         "d",
         (F.col("w") / F.lit(norm)).alias("loading"),
@@ -2380,8 +2381,8 @@ def embedding_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(1, d, float(z / n1), float(n1)) for d, z in enumerate(w1)] + [
         (2, d, float(z / n2), float(n2)) for d, z in enumerate(w2)
     ]
-    out = spark.createDataFrame(
-        rows, "component int, d int, loading double, spectral_norm double"
+    out = local_frame(
+        spark, rows, "component int, d int, loading double, spectral_norm double"
     )
     return materialize_and_release(out, e)
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.hashing import md5_fingerprint
 from ..functions.text_metrics import marker_hits, norm_text, tokens
 from ..operators.dedup import shingle_rows
@@ -220,9 +221,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         cum_col="cum",
         rank_col="rank",
     )
-    cuts = spark.createDataFrame(
-        [(c,) for c in VOCAB_CUTOFFS], "cutoff int"
-    )
+    cuts = local_frame(spark, [(c,) for c in VOCAB_CUTOFFS], "cutoff int")
     return (
         ranked.join(F.broadcast(cuts), F.col("rank") <= F.col("cutoff"))
         .groupBy("cutoff")
@@ -1628,8 +1627,8 @@ def doc_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     pid = lang_idx.cast("long") * F.lit(1 << 42) + ieee_bucket_asc(
         "perplexity"
     )
-    lang_off = spark.createDataFrame(
-        off_rows, "lang string, lang_off long, n_lang long"
+    lang_off = local_frame(
+        spark, off_rows, "lang string, lang_off long, n_lang long"
     )
     ranked, _ = distributed_prefix_sum(
         spark,

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..frames import local_frame
 from ..operators.merge import merge_upsert
 
 __all__ = ["apply_cdc_stream", "latest_snapshot"]
@@ -56,7 +57,7 @@ def latest_snapshot(
     """Current state: the highest complete version, or empty."""
     vs = _versions(snapshot_dir)
     if not vs:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(vs[-1][1])
 
 
@@ -108,7 +109,7 @@ def apply_cdc_stream(
         base = (
             spark.read.schema(target_schema).parquet(base_vs[-1][1])
             if base_vs
-            else spark.createDataFrame([], target_schema)
+            else local_frame(spark, [], target_schema)
         )
         merged = merge_upsert(base, winning, key=key)
         merged.write.mode("overwrite").parquet(
