@@ -1,8 +1,13 @@
 """Plan-shape regression guard: the number of shuffle Exchanges in each
-key query's physical plan, pinned at sf0.001. Every extra shuffle at
-100 TB is a full pass of the fact data over the network, so a refactor
+key query's pre-AQE physical plan, pinned at sf0.001. Every extra shuffle
+at 100 TB is a full pass of the fact data over the network, so a refactor
 that silently adds one is a scale regression even when results stay
 correct — exactly the class the correctness gate cannot see.
+
+``shuffle_count`` walks the plan tree and counts each exchange once: a
+cached relation's build plan once however many scans read it, a reused
+exchange not again, subqueries included. The plan text is no measure: it
+prints an executed AQE plan twice and a cached build once per scan.
 
 The assertion is one-sided (``<=``): FEWER shuffles than recorded is an
 improvement (update the baseline); more fails. Broadcast-exchange counts
@@ -30,39 +35,30 @@ MAX_SHUFFLES = {
     "events_asof_join": 1,
     "events_range_join": 0,
     "doc_tfidf_top_terms": 4,
-    # dedup_minhash_lsh: unpinned in r9 — it now reads the
-    # session-materialized _minhash_sig16 producer, so the plan string
-    # embeds the cached build lineage (7 → 9 TEXT exchanges while the
-    # executed signature work moved to producer_build_seconds), the
-    # same cache-state artifact as the other producer-backed queries.
-    # dedup_simhash: unpinned in r15 — r14 (49d84fe) persisted the
-    # 60-bit signature relation for the invocation (it feeds BOTH band
-    # self-join sides; measured 3.1 → 1.9 s), so the executed-plan
-    # STRING embeds the cached build lineage on each side plus the
-    # probe chain (5 → 14 TEXT exchanges while the executed signature
-    # work halved) — the same cache-state artifact as dedup_minhash_lsh
-    # above. Caught only now: the r14 driver pytest aborted at the
-    # stale-window guard before reaching this file.
-    # dedup_ngram_jaccard_prefix: unpinned in r9 — the per-doc ranked
-    # array is now persisted (prefix + verify consumers; 5.31 → ~0.8 s
-    # at sf0.1, PERF 57), so the plan string embeds the cached lineage
-    # per consumer and the text count became a cache-state artifact
-    # (13 → 54 TEXT exchanges while executed work dropped ~7×), same
-    # class as doc_sparse_cosine_topk / the producer-backed queries.
+    # dedup_minhash_lsh (reads the session-materialized _minhash_sig16
+    # producer), dedup_simhash (persists its 60-bit signature relation
+    # for both band self-join sides) and dedup_ngram_jaccard_prefix
+    # (persists the per-doc ranked array for its prefix and verify
+    # consumers, PERF 57) are unpinned: their pins were plan-text counts
+    # that repeated the cached lineage, and no walk count has been
+    # recorded for their current plans.
+    # the band relation, persisted since 49d84fe, feeds both sides of
+    # the band-key join and is counted once: 9 before that persist, 6
+    # after
     "sim_neardup_pairs": 9,
     # 6 → 8 in round 12: migrated to the scaled+probed band index
     # (hyperplane_band_rows: posexplode spread + per-(id, plane) and
     # per-(id, band) aggregations replace the packed single-bucket
     # aggregation) — two extra COMPACT n·nb-row exchanges bought
     # recall 0.062 → 0.153 at sf1 and view-agreement with
-    # sim_range_search (PERF 75)
+    # sim_range_search (PERF 75). Its band relation is persisted like
+    # sim_neardup_pairs' since 49d84fe: 8 before that persist, 5 after
     "sim_semantic_decontaminate": 8,
-    # 3 serving-side + 1 inside the embedded cached-build lineage: the
-    # session-materialized PQ code table's one-time argmin shuffle
-    # (PERF 52) prints inside the InMemoryTableScan node, so the plan
-    # STRING counts it on every read even though it executes once per
-    # corpus snapshot
-    "sim_ann_pq_adc": 4,
+    # 2 serving-side + the session-materialized PQ code table's one-time
+    # argmin shuffle (PERF 52), counted once in its cached build. The
+    # plan text counted 4: that build printed twice, under the AQE final
+    # and initial plans
+    "sim_ann_pq_adc": 3,
     "doc_ngram_scrub": 3,  # r4: per-doc covered-array agg replaced the 3×-exploded distinct
     "doc_winnow": 1,
     "doc_chunk": 0,
@@ -71,23 +67,21 @@ MAX_SHUFFLES = {
     "multimodal_frame_decode": 0,
     "doc_pack_sequences": 1,
     "doc_quality_classifier": 0,  # margin folds inside the scan projection
-    # --- round-8b additions (pre-AQE string counts; producer-backed
-    # queries — kcore, negatives, the ANN paths, band tuning — are NOT
-    # pinned: their plan text embeds the session-cached build lineage,
-    # so the string count is an artifact of cache state, not shape)
-    "dedup_sorted_neighborhood": 10,  # prefix-sum rank + probe join + verify
+    # --- round-8b additions. Producer-backed queries (kcore, negatives,
+    # the ANN paths, band tuning) are not pinned: no walk count has been
+    # recorded for them.
+    # prefix-sum rank + probe join + verify; the plan text counted 10,
+    # repeating the prefix sum's persisted build
+    "dedup_sorted_neighborhood": 3,
     "doc_duplicated_spans": 6,
-    "corpus_systematic_sample": 4,
-    # doc_kneser_ney_perplexity / doc_domain_surprisal: unpinned in r9 —
-    # the LM family now consumes the session-materialized
-    # _lm_token_counts/_lm_bigram_counts producers (VERDICT r8 #2), so
-    # the plan string embeds the cached build lineage once per derived
-    # count relation and the string count is a cache-state artifact,
-    # same class as the other producer-backed queries above.
-    # doc_sparse_cosine_topk: unpinned — its weight relation is now
-    # persisted (3 non-reuse-identical consumers; 1.38 → 0.69 s at
-    # sf0.1), so the plan string embeds the cached lineage 3× and the
-    # count is a cache-state artifact like the producer-backed queries
+    # the plan text counted 4, repeating the prefix sum's persisted build
+    "corpus_systematic_sample": 1,
+    # doc_kneser_ney_perplexity / doc_domain_surprisal (read the
+    # session-materialized _lm_token_counts/_lm_bigram_counts producers,
+    # VERDICT r8 #2) and doc_sparse_cosine_topk (persists its weight
+    # relation for 3 consumers) are unpinned: their pins were plan-text
+    # counts that repeated the cached lineage, and no walk count has
+    # been recorded for their current plans.
     # r9: 8 → 10 — the label join became FULL OUTER (one-sided labels
     # must appear; ADVICE r8), which Spark cannot broadcast, so both
     # sides exchange on label. Both are #labels-row constant-size
@@ -104,11 +98,54 @@ _EXCHANGE = re.compile(
 )
 
 
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def shuffle_count(df) -> int:
+    """Shuffle exchanges in ``df``'s pre-AQE physical plan, each counted
+    once. Walks the plan tree over py4j rather than the plan text, which
+    prints an executed AQE plan twice (final and initial) and a cached
+    relation's build plan once per scan that reads it:
+
+    - ``AdaptiveSparkPlanExec`` is followed into its ``initialPlan``;
+    - a query stage into its ``plan``, an ``InMemoryTableScanExec`` into
+      its relation's ``cachedPlan``, each distinct cached build once;
+    - a ``ReusedExchangeExec`` is a leaf, so its exchange counts only
+      where it was first planned;
+    - subqueries are walked like children.
+    """
+    jvm = df.sparkSession._jvm
+    seen_builds: set[int] = set()
+
+    def walk(node) -> int:
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(node.initialPlan())
+        if kind.endswith("QueryStageExec"):
+            return walk(node.plan())
+        n = 0
+        if kind == "InMemoryTableScanExec":
+            build = node.relation().cachedPlan()
+            key = jvm.java.lang.System.identityHashCode(build)
+            if key not in seen_builds:
+                seen_builds.add(key)
+                n += walk(build)
+        elif kind == "ShuffleExchangeExec" and _EXCHANGE.match(
+            node.simpleString(100)
+        ):
+            n += 1
+        for child in _seq(node.children()) + _seq(node.subqueries()):
+            n += walk(child)
+        return n
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 @pytest.mark.parametrize("name", sorted(MAX_SHUFFLES))
 def test_shuffle_count_does_not_regress(spark, sf_dir, name):
     df = all_queries()[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = len(_EXCHANGE.findall(plan))
+    n = shuffle_count(df)
     assert n <= MAX_SHUFFLES[name], (
         f"{name}: {n} shuffle exchanges (recorded max {MAX_SHUFFLES[name]}) — "
         "a new shuffle is a scale regression; if intentional, update the "
@@ -147,6 +184,38 @@ def test_topk_compiles_to_take_ordered(spark, sf_dir, name):
     )
     fplan = df._jdf.queryExecution().explainString(mode)
     assert single_partition_violations(fplan) == []
+
+
+class TestShuffleCounter:
+    """``shuffle_count`` must count a shuffle once however often the plan
+    text repeats it, and still see a shuffle added on top."""
+
+    def test_counts_cached_build_once_and_sees_added_shuffle(self, spark):
+        from pyspark.sql import functions as F
+
+        base = (
+            spark.range(1000)
+            .groupBy((F.col("id") % 10).alias("k"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .persist()
+        )
+        joined = None
+        try:
+            base.count()
+            joined = (
+                base.alias("a")
+                .join(F.broadcast(base.alias("b")), "k")
+                .persist()
+            )
+            joined.count()
+            text = joined._jdf.queryExecution().executedPlan().toString()
+            assert len(_EXCHANGE.findall(text)) > 1
+            assert shuffle_count(joined) == 1
+            assert shuffle_count(joined.repartition(3, "k")) == 2
+        finally:
+            if joined is not None:
+                joined.unpersist()
+            base.unpersist()
 
 
 class TestSinglePartitionAudit:
