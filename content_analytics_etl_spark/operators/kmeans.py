@@ -5,13 +5,12 @@ is the trainer that would replace that seed at production quality).
 
 Spark-first shape, per iteration (ONE job, ONE k-group shuffle):
 
-1. **Assign** — the centroids live on the driver between iterations, so
-   the nearest-centroid step inlines them as LITERAL arrays and takes
-   ``array_min`` over the k (d2, cid) structs ROW-LOCALLY: a pure map,
-   no crossJoin row multiplication, no corpus-wide window shuffle.
-   d2 = ``|v|² − 2·v·c + |c|²`` from fold-based dot products, ties →
-   lowest cid — identical arithmetic and tie rule to the relational
-   ``assign_clusters`` (which stays for DataFrame-valued centroids).
+1. **Assign** — the centroids live on the driver between iterations and
+   ride into the row-local Arrow kernel ``d2_argmin_assign``: a pure
+   map, no crossJoin row multiplication, no corpus-wide window shuffle.
+   d2 = ``(|v|² − 2·v·c) + |c|²`` from the exact dot-product folds, ties
+   → lowest cid — the arithmetic and tie rule of the fold expressions
+   and the oracles.
 2. **Update + SSE, fused** — ``posexplode`` to the (cluster, dim)
    decimal-exact mean grid as before, with the per-cluster SSE decimal
    partial riding in the pos=0 cell — one job per iteration instead of
@@ -19,8 +18,8 @@ Spark-first shape, per iteration (ONE job, ONE k-group shuffle):
    bit-identical run to run (double Σ is order-dependent; see
    plans/_util.py policy).
 3. **Collect** — the k-row centroid+SSE aggregate (a few KB at any
-   corpus scale) is collected to the driver and re-inlined as literals
-   for the next iteration. This is the one legitimate driver
+   corpus scale) is collected to the driver and handed to the next
+   iteration's assign kernel. This is the one legitimate driver
    materialization in the engine: centroids are O(k·dim) by definition,
    independent of corpus size, and collecting them truncates the
    lineage so iteration N's plan doesn't embed iterations 1…N−1.
@@ -32,19 +31,18 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..frames import local_frame
-from ..functions.vectors import dot_product
+from ..functions.vectors import fold_dot, select_topn
+from .similarity import map_chunks
 
 __all__ = [
     "KMeansModel",
     "kmeans_fit",
-    "assign_clusters",
     "assign_clusters_literal",
-    "assign_clusters_literal_hof",
     "d2_argmin_assign",
 ]
 
@@ -57,120 +55,55 @@ class KMeansModel:
     sse_history: list[float]  # total SSE after each iteration
 
 
-def _centroid_df(spark: SparkSession, centroids: list[list[float]]) -> DataFrame:
-    schema = T.StructType(
-        [
-            T.StructField("cid", T.IntegerType()),
-            T.StructField("cv", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    return local_frame(
-        spark, [(i, [float(x) for x in c]) for i, c in enumerate(centroids)], schema
-    )
-
-
-def assign_clusters(corpus: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the k-row centroid
-    relation, rank-1 window on squared L2 (ties → lowest cid).
-    ``corpus`` needs columns (vec_id, v: array<double>)."""
-    d2 = (
-        dot_product(F.col("v"), F.col("v"))
-        - 2.0 * dot_product(F.col("v"), F.col("cv"))
-        + dot_product(F.col("cv"), F.col("cv"))
-    )
-    ranked = (
-        corpus.crossJoin(F.broadcast(cent))
-        .select("vec_id", "v", "cid", d2.alias("d2"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cid"))
-            ),
-        )
-    )
-    return ranked.filter(F.col("rk") == 1).select("vec_id", "v", "cid", "d2")
-
-
 def d2_argmin_assign(
     corpus: DataFrame,
     cent_pairs: list[tuple[int, list[float]]],
     *,
     id_col: str = "vec_id",
     passthrough: tuple[str, ...] = (),
-    chunk_rows: int = 8192,
 ) -> DataFrame:
-    """Nearest-centroid assignment as a row-local Arrow kernel — the
-    r15 optimization (guide §4.2) replacing the per-row interpreted HOF
-    chains (``assign_clusters_literal``'s transform/array_min pool and
-    ``assign_clusters``'s broadcast crossJoin × rank-1 window, which
-    additionally paid a full corpus-wide partitionBy(vec_id) exchange).
-    The k×dim centroid matrix rides in as a task closure (the
+    """Nearest-centroid assignment as a row-local Arrow kernel. The
+    k×dim centroid matrix rides in as a task closure (the
     kmeans-centroid collect policy: O(k·dim) index metadata, never
     corpus data); each Arrow batch computes its own argmin — no row
     multiplication, no exchange, one pass.
 
-    BIT-IDENTICAL to both HOF forms and the oracles: d2 accumulates
-    dimension-by-dimension with the ``dot_product`` left-fold IEEE
-    sequence (one multiply, one add per step — numpy does not fuse),
-    combined as ``(v·v − 2·(v·c)) + c·c`` in the exact expression
-    order, and ties resolve to the LOWEST cid because the centroid
-    matrix is cid-sorted and ``np.argmin`` returns the first minimum —
-    the lexicographic struct-min / row_number (d2 ASC, cid ASC) rule.
-    Parity is pinned in tests/test_round15_ops.py and (transitively)
-    tests/test_kmeans.py's model-vs-assign_clusters contract.
+    BIT-IDENTICAL to both HOF forms and the oracles: every dot is
+    ``fold_dot``, combined as ``(v·v − 2·(v·c)) + c·c`` in the exact
+    expression order, and ties resolve to the LOWEST cid because the
+    centroid matrix is cid-sorted and ``select_topn`` is stable — the
+    lexicographic struct-min / row_number (d2 ASC, cid ASC) rule. A
+    NaN component gives a NaN d2, which raises. Parity with both HOF
+    forms (tests/vector_refs.py) is pinned in tests/test_round15_ops.py.
 
     ``cent_pairs``: (cid, centroid) pairs, any order, cids need not be
     contiguous. ``corpus`` needs (id_col, v[, *passthrough]); output is
     (id_col[, *passthrough], cid int, d2 double), same row count."""
-    import numpy as np
-    import pandas as pd
-
     cent_sorted = sorted((int(c), [float(x) for x in cv]) for c, cv in cent_pairs)
     cids = np.asarray([c for c, _ in cent_sorted], dtype=np.int32)
     cmat = np.asarray([cv for _, cv in cent_sorted], dtype=np.float64)
-    k, dim = cmat.shape
-    # c·c per centroid: the same left fold, vectorized across centroids
-    dcc = np.zeros(k, dtype=np.float64)
-    for d in range(dim):
-        dcc += cmat[:, d] * cmat[:, d]
+    dcc = fold_dot(cmat, cmat)
 
-    in_fields = {f.name: f for f in corpus.schema.fields}
-    out_schema = T.StructType(
-        [in_fields[id_col]]
-        + [in_fields[c] for c in passthrough]
-        + [
+    def assign(ch):
+        X = np.stack(ch["v"].to_numpy())
+        d2 = (fold_dot(X, X)[:, None] - 2.0 * fold_dot(X[:, None], cmat)) + dcc
+        idx = select_topn(d2, 1)[:, 0]
+        out = {c: ch[c] for c in (id_col, *passthrough)}
+        out["cid"] = cids[idx]
+        out["d2"] = d2[np.arange(len(idx)), idx]
+        return out
+
+    return map_chunks(
+        corpus,
+        [id_col, "v", *passthrough],
+        [
+            id_col,
+            *passthrough,
             T.StructField("cid", T.IntegerType(), False),
             T.StructField("d2", T.DoubleType(), False),
-        ]
+        ],
+        assign,
     )
-    out_cols = [id_col, *passthrough, "cid", "d2"]
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for start in range(0, len(pdf), chunk_rows):
-                ch = pdf.iloc[start : start + chunk_rows]
-                X = np.stack(ch["v"].to_numpy())
-                n = X.shape[0]
-                dv = np.zeros(n, dtype=np.float64)
-                dvc = np.zeros((n, k), dtype=np.float64)
-                for d in range(dim):
-                    xd = X[:, d]
-                    dv += xd * xd
-                    dvc += xd[:, None] * cmat[:, d]
-                d2 = (dv[:, None] - 2.0 * dvc) + dcc[None, :]
-                idx = np.argmin(d2, axis=1)  # first min -> lowest cid
-                data = {id_col: ch[id_col]}
-                for c in passthrough:
-                    data[c] = ch[c]
-                data["cid"] = cids[idx]
-                data["d2"] = d2[np.arange(n), idx]
-                yield pd.DataFrame(data)[out_cols]
-
-    in_cols = [id_col, "v"]
-    in_cols += [c for c in passthrough if c not in in_cols]
-    return corpus.select(*in_cols).mapInPandas(assign, schema=out_schema)
 
 
 def assign_clusters_literal(
@@ -179,57 +112,10 @@ def assign_clusters_literal(
     """Nearest-centroid assignment with driver-resident centroids —
     since r15 a thin wrapper over the :func:`d2_argmin_assign` Arrow
     kernel (cid = list index), keeping the (vec_id, v, cid, d2) output
-    contract. The former HOF form is retained as
-    :func:`assign_clusters_literal_hof` — the parity reference the
-    kernel is pinned against."""
+    contract."""
     return d2_argmin_assign(
         corpus, list(enumerate(centroids)), passthrough=("v",)
     ).select("vec_id", "v", "cid", "d2")
-
-
-def assign_clusters_literal_hof(
-    corpus: DataFrame, centroids: list[list[float]]
-) -> DataFrame:
-    """Nearest-centroid assignment with DRIVER-RESIDENT centroids:
-    the k×dim matrix rides in as ONE broadcast row (array of (cid, cv)
-    structs — plan DATA, deliberately not inlined literals: literal
-    centroids change the generated code each Lloyd iteration and every
-    iteration pays a fresh Janino compile, measured 3.6 → 8.0 s on the
-    full trainer). d2 per centroid is computed row-locally inside a
-    ``transform`` lambda and the winner is ``array_min`` over the k
-    (d2, cid) structs — lexicographic struct order gives (d2 ASC,
-    cid ASC), the same tie rule as ``assign_clusters``'s window. No
-    row multiplication (the crossJoin build side is exactly 1 row),
-    no corpus shuffle. Same (vec_id, v, cid, d2) output."""
-    spark = corpus.sparkSession
-    mat_type = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("cid", T.IntegerType()),
-                T.StructField("cv", T.ArrayType(T.DoubleType())),
-            ]
-        )
-    )
-    mat = local_frame(
-        spark,
-        [([(i, [float(x) for x in c]) for i, c in enumerate(centroids)],)],
-        T.StructType([T.StructField("cmat", mat_type)]),
-    )
-
-    def _cand(c):
-        # same operation ORDER as assign_clusters: (v·v − 2·v·c) + c·c
-        d2 = (
-            dot_product(F.col("v"), F.col("v"))
-            - 2.0 * dot_product(F.col("v"), c["cv"])
-            + dot_product(c["cv"], c["cv"])
-        )
-        return F.struct(d2.alias("d2"), c["cid"].alias("cid"))
-
-    best = F.array_min(F.transform(F.col("cmat"), _cand))
-    return corpus.crossJoin(F.broadcast(mat)).select(
-        "vec_id", "v", best.getField("cid").alias("cid"),
-        best.getField("d2").alias("d2"),
-    )
 
 
 def kmeans_fit(

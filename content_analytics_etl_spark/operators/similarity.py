@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (BASELINE extension).
 
-Three tiers, per the scale story:
+Two tiers, per the scale story:
 
 1. **Brute-force cosine top-k** (``brute_topk``): broadcast the query
    set, fold-based dot products (functions/vectors.py), per-query
@@ -13,26 +13,41 @@ Three tiers, per the scale story:
    int; equi-join on the signature bucket → candidates → exact cosine
    verify. Linear shuffle instead of the quadratic pair scan — the
    100 TB path for near-dup detection.
-3. **Pandas-UDF batch matmul** (``brute_topk_matmul``): Arrow-batched
-   numpy matmul against the broadcast query matrix — the throughput
-   variant of tier 1 (~10-100× less per-row overhead). NOT bit-identical
-   to the fold (BLAS reassociates float adds), so it backs benchmarks,
-   not oracle checks.
+
+The Arrow kernels below (PQ codes, IVF cosine ranking, k-nearest by
+squared L2) score against a driver-collected matrix with the shared
+NumPy core of functions/vectors.py (``fold_dot``/``fold_d2`` +
+``select_topn``), so their scores and tie order are bit-identical to the
+fold expressions and the DuckDB oracles.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-from functools import reduce
-from operator import add
+from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
 from ..frames import local_frame
 from ..functions.hashing import portable_hash64
-from ..functions.vectors import dot_product, l2_norm, to_double_array
+from ..functions.vectors import (
+    dot_product,
+    fold_d2,
+    fold_dot,
+    l2_norm,
+    select_topn,
+    to_double_array,
+)
 
 __all__ = [
     "hyperplane_matrix",
@@ -40,17 +55,15 @@ __all__ = [
     "add_hyperplane_bucket",
     "hyperplane_bucket_agg",
     "hyperplane_band_rows",
-    "brute_topk_matmul",
-    "brute_topk_chunked",
+    "map_chunks",
     "exact_d2_topn_cogroup",
     "pq_argmin_codes",
     "cosine_rank_assign",
 ]
 
-# Above this many query rows the fold-based broadcast path is the wrong
-# tool (driver ships |Q|·dim doubles to every task AND evaluates
-# |Q|·|corpus| interpreted folds); route to the chunked Arrow matmul.
-BROADCAST_QUERY_LIMIT = 10_000
+# Rows per kernel call: bounds a kernel's (rows × candidates) score
+# matrix, e.g. 4096 × 775 IVF cells = 25 MB of doubles.
+CHUNK_ROWS = 4096
 
 
 def hyperplane_matrix(n_planes: int, dim: int, seed: str = "lsh") -> list[list[float]]:
@@ -322,80 +335,45 @@ def hyperplane_band_rows(
     )
 
 
-def brute_topk_matmul(
-    corpus: DataFrame,
-    queries_pdf,  # pandas DataFrame: id + list-of-float vectors
-    k: int = 5,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Throughput variant: numpy matmul per Arrow batch against the
-    broadcast query matrix. Returns (query_id, cand_id, cosine) rows;
-    top-k selection still via window (exact)."""
-    import numpy as np
+def _chunks(pdf: pd.DataFrame):
+    for start in range(0, len(pdf), CHUNK_ROWS):
+        yield pdf.iloc[start : start + CHUNK_ROWS]
 
-    q_ids = queries_pdf[id_col].to_numpy()
-    q_mat = np.stack(queries_pdf[vec_col].to_numpy()).astype("float64")
-    q_norm = np.linalg.norm(q_mat, axis=1)
 
-    def score(batches: Iterator):
-        import pandas as pd
+def _schema(out_fields: list, *inputs: DataFrame) -> StructType:
+    """A name takes that column's field from the first input that has
+    it; a ``StructField`` is a new column."""
+    fields: dict = {}
+    for df in reversed(inputs):
+        fields.update((f.name, f) for f in df.schema.fields)
+    return StructType(
+        [fields[f] if isinstance(f, str) else f for f in out_fields]
+    )
 
+
+def map_chunks(
+    df: DataFrame,
+    in_cols: list[str],
+    out_fields: list,
+    kernel: Callable[[pd.DataFrame], dict] | None,
+) -> DataFrame:
+    """``df.select(*in_cols).mapInPandas``, calling ``kernel`` on every
+    ``CHUNK_ROWS``-row slice of each Arrow batch; the kernel returns the
+    output columns as a dict. The output schema is built once, here:
+    each of ``out_fields`` is an input column name (its field is reused)
+    or a new ``StructField``. ``kernel=None`` means there is nothing to
+    score against: an empty frame of that schema, no job."""
+    schema = _schema(out_fields, df)
+    if kernel is None:
+        return local_frame(df.sparkSession, [], schema)
+    names = schema.fieldNames()
+
+    def run(batches):
         for pdf in batches:
-            c_mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            c_ids = pdf[id_col].to_numpy()
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            sims = (c_mat @ q_mat.T) / np.outer(c_norm, q_norm)
-            n_c, n_q = sims.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(q_ids, n_c),
-                    "cand_id": np.repeat(c_ids, n_q),
-                    "cosine": sims.ravel(),
-                }
-            )
+            for ch in _chunks(pdf):
+                yield pd.DataFrame(kernel(ch))[names]
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, schema="query_id long, cand_id long, cosine double"
-    ).filter(F.col("query_id") != F.col("cand_id"))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def brute_topk_chunked(
-    corpus: DataFrame,
-    queries_pdf,  # pandas DataFrame: id + list-of-float vectors
-    k: int = 5,
-    *,
-    chunk_rows: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Large-|Q| exact top-k: split the query set into fixed-size chunks,
-    run the Arrow batch-matmul scorer per chunk, union the results.
-
-    Size contract: per-task memory is O(chunk_rows × dim) for the query
-    matrix plus one Arrow batch of the corpus — independent of |Q|, so
-    an arbitrarily large query set never has to fit in one broadcast.
-    The corpus is scanned once per chunk (⌈|Q|/chunk_rows⌉ scans); at
-    scale that is the standard block-nested sweep and each scan is an
-    embarrassingly parallel map with no shuffle until the final window.
-    Callers with |Q| ≤ BROADCAST_QUERY_LIMIT should prefer
-    ``brute_topk`` (single scan, oracle-exact fold arithmetic)."""
-    out = None
-    for start in range(0, len(queries_pdf), chunk_rows):
-        chunk = brute_topk_matmul(
-            corpus,
-            queries_pdf.iloc[start : start + chunk_rows],
-            k,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        out = chunk if out is None else out.unionByName(chunk)
-    if out is None:
-        raise ValueError("empty query set")
-    return out
+    return df.select(*dict.fromkeys(in_cols)).mapInPandas(run, schema=schema)
 
 
 def pq_argmin_codes(
@@ -404,36 +382,23 @@ def pq_argmin_codes(
     *,
     id_col: str = "vec_id",
     passthrough: tuple[str, ...] = (),
-    chunk_rows: int = 8192,
 ) -> DataFrame:
     """Nearest-codeword assignment per (id, m) sub-vector row, ROW-LOCAL
-    against a driver-resident codebook — the optimization-round
-    replacement (guide §2.3/§2.4) for the ``sub ⋈ broadcast(cb)`` ×
-    rank-window chain, which materialized N·PQ_M·PQ_KS rows (×256 the
-    input) and pushed them through a partitionBy(vec_id, m) exchange:
-    at 600k vectors that is ~1.2G shuffled rows for an argmin whose
-    codebook is 128 KB.  Here the codebook rides in as a task closure
-    and each Arrow batch computes its own argmins — zero extra rows,
-    zero exchanges, one pass.
+    against a driver-resident codebook: the codebook rides in as a task
+    closure and each Arrow batch computes its own argmins — no
+    ``sub ⋈ broadcast(cb)`` rows (N·PQ_M·PQ_KS of them), no exchange.
 
-    BIT-IDENTICAL to the old chain and to the DuckDB oracles' ``ad``
-    CTE (``list_sum(list_transform(... (x−y)*(x−y)))`` + row_number
-    (d2 ASC, k ASC)): the squared-L2 accumulates dimension-by-dimension
-    — ``t = x_d − c_d`` rounds, ``t·t`` rounds, ``acc + t²`` rounds —
-    the exact IEEE sequence of the JVM ``aggregate(zip_with(...))``
-    fold (numpy does not fuse multiply-add), and ties resolve to the
-    LOWEST k because the per-m codeword matrix is k-sorted and
-    ``np.argmin`` returns the first minimum.  Parity with the old chain
-    is pinned by ``tests/test_round14_ops.py::test_pq_argmin_parity``.
+    BIT-IDENTICAL to that join + (d2 ASC, k ASC) rank window and to the
+    DuckDB oracles' ``ad`` CTE: d2 is ``fold_d2``, and ties resolve to
+    the LOWEST k because the per-m codeword matrix is k-sorted and
+    ``select_topn`` is stable (``test_pq_argmin_parity``).
 
     ``codebook_rows``: the collected (m, k, cv) rows — bounded
     O(PQ_M·PQ_KS·SUB_DIM) by construction (the kmeans-centroid
     collect policy: index metadata, never corpus data).
     ``sub`` needs (id_col, m, subv[, *passthrough]); output is
-    (id_col, m, k[, *passthrough]) with the same row count."""
-    import numpy as np
-    import pandas as pd
-
+    (id_col, m, k[, *passthrough]), one row per input row whose m has
+    codewords — any other row drops, as in the old inner join."""
     by_m: dict[int, list] = {}
     for r in codebook_rows:
         by_m.setdefault(int(r["m"]), []).append((int(r["k"]), list(r["cv"])))
@@ -445,52 +410,26 @@ def pq_argmin_codes(
         for m, rows in by_m.items()
     }
 
-    in_fields = {f.name: f for f in sub.schema.fields}
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    def assign(ch: pd.DataFrame) -> dict:
+        marr = ch["m"].to_numpy()
+        kout = np.full(len(ch), -1, dtype=np.int32)
+        for m, (ks, cmat) in cmats.items():
+            mask = marr == m
+            if mask.any():
+                X = np.stack(ch["subv"].to_numpy()[mask])
+                d2 = fold_d2(X[:, None], cmat)
+                kout[mask] = ks[select_topn(d2, 1)[:, 0]]
+        keep = kout >= 0  # -1: no codebook for this m
+        out = {c: ch[c].to_numpy()[keep] for c in (id_col, "m", *passthrough)}
+        out["k"] = kout[keep]
+        return out
 
-    out_schema = StructType(
-        [in_fields[id_col], in_fields["m"], StructField("k", IntegerType(), False)]
-        + [in_fields[c] for c in passthrough]
+    return map_chunks(
+        sub,
+        [id_col, "m", "subv", *passthrough],
+        [id_col, "m", StructField("k", IntegerType(), False), *passthrough],
+        assign if cmats else None,
     )
-    out_cols = [id_col, "m", "k", *passthrough]
-
-    def assign(batches: Iterator):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            marr = pdf["m"].to_numpy()
-            # -1 sentinel: an input m with no codebook entry must DROP
-            # (the old broadcast inner join's semantics), not emit
-            # uninitialized np.empty garbage (ADVICE r14, low)
-            kout = np.full(len(pdf), -1, dtype=np.int32)
-            for m, (ks, cmat) in cmats.items():
-                mask = marr == m
-                if not mask.any():
-                    continue
-                rows = pdf["subv"][mask].to_numpy()
-                idx_out = np.empty(mask.sum(), dtype=np.int64)
-                for start in range(0, len(rows), chunk_rows):
-                    X = np.stack(rows[start : start + chunk_rows])
-                    # exact left fold of (x−y)² per dimension — one
-                    # sub, one mul, one add per step, matching
-                    # aggregate(zip_with(a, b, (x,y) -> (x−y)*(x−y)))
-                    acc = np.zeros((X.shape[0], cmat.shape[0]))
-                    for d in range(X.shape[1]):
-                        tdiff = X[:, d, None] - cmat[:, d]
-                        acc += tdiff * tdiff
-                    idx_out[start : start + chunk_rows] = np.argmin(acc, axis=1)
-                kout[mask] = ks[idx_out]
-            data = {id_col: pdf[id_col], "m": pdf["m"], "k": kout}
-            for c in passthrough:
-                data[c] = pdf[c]
-            out = pd.DataFrame(data)[out_cols]
-            if (kout < 0).any():  # inner-join semantics: no match → drop
-                out = out[out["k"] >= 0]
-            yield out
-
-    in_cols = [id_col, "m", "subv"]
-    in_cols += [c for c in passthrough if c not in in_cols]
-    return sub.select(*in_cols).mapInPandas(assign, schema=out_schema)
 
 
 def cosine_rank_assign(
@@ -498,26 +437,20 @@ def cosine_rank_assign(
     cent_rows: list,
     nprobe: int,
     keep_mask,
-    *,
-    chunk_rows: int = 4096,
 ) -> DataFrame:
-    """Row-local nearest-centroid ranking by cosine, Arrow-vectorized —
-    the r14-optimization replacement for the IVF coarse assignment's
-    per-row HOF struct pool (`transform` over a broadcast collect_list
-    matrix + `array_sort` + slice), which at 600k vectors × 775 cells
-    was the measured 1521-s build wall on this sandbox (the same
-    interpreted-lambda constant PERF 86 cut from the clustered build).
+    """Row-local nearest-centroid ranking by cosine, Arrow-vectorized
+    against a driver-collected centroid matrix (no per-row HOF struct
+    pool over a broadcast collect_list).
 
-    BIT-IDENTICAL ranking: the dot accumulates dimension-by-dimension
-    (one elementwise multiply + one add per step — the
-    ``functions/vectors.dot_product`` left-fold IEEE sequence), then
+    BIT-IDENTICAL ranking: the dot is ``fold_dot``, then
     ``negcs = -(dot / (nrm · cn))`` with the same operation order as
-    the HOF chain and the oracle's ``cosine DESC``; ranking is a STABLE
-    argsort over a cell-ascending centroid matrix, so bit-equal cosines
+    the HOF chain and the oracle's ``cosine DESC``; ``select_topn`` is
+    stable over a cell-ascending centroid matrix, so bit-equal cosines
     resolve to the lower cell id exactly like the lexicographic
     struct sort / the oracle's ``ORDER BY cs DESC, cell ASC``.
-    Precondition (shared with the HOF path, test-pinned): no zero-norm
-    vectors or centroids, so no NaN cosines.
+    A zero-norm vector or centroid gives a NaN cosine, which raises
+    (the oracle ranks NaN first, the HOF sort last; the corpora have
+    none — ``test_no_zero_norm_embeddings``).
 
     ``cent_rows``: collected (cell, cv, cn) rows — bounded
     O(cells·dim) = O(√N·dim) under the module's cell policy (the
@@ -529,76 +462,48 @@ def cosine_rank_assign(
 
     ``e`` needs (vec_id, v array<double>, nrm double); output is
     (vec_id, v, nrm, cell int, cv array<double>, crank int)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("vec_id", LongType(), False),
-            StructField("v", ArrayType(DoubleType()), False),
-            StructField("nrm", DoubleType(), False),
-            StructField("cell", IntegerType(), False),
-            StructField("cv", ArrayType(DoubleType()), False),
-            StructField("crank", IntegerType(), False),
-        ]
-    )
-
     cent_sorted = sorted(
         ((int(r["cell"]), list(r["cv"]), float(r["cn"])) for r in cent_rows)
     )
-    if not cent_sorted:
-        # empty centroid relation: the old HOF chain produced an empty
-        # result; np.asarray([]) here would be 1-D and crash the kernel
-        # inside the Arrow worker (ADVICE r14, low)
-        return local_frame(e.sparkSession, [], out_schema)
     cells = np.asarray([c for c, _, _ in cent_sorted], dtype=np.int32)
     cmat = np.asarray([cv for _, cv, _ in cent_sorted], dtype=np.float64)
     cn = np.asarray([n for _, _, n in cent_sorted], dtype=np.float64)
     cvs = [cv for _, cv, _ in cent_sorted]
-    nsel = min(int(nprobe), len(cells))
 
-    def assign(batches: Iterator):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for start in range(0, len(pdf), chunk_rows):
-                ch = pdf.iloc[start : start + chunk_rows]
-                X = np.stack(ch["v"].to_numpy())
-                nrm = ch["nrm"].to_numpy()
-                ids = ch["vec_id"].to_numpy()
-                # exact left fold (the dot_product sequence)
-                dots = np.zeros((X.shape[0], cmat.shape[0]))
-                for d in range(X.shape[1]):
-                    dots += X[:, d, None] * cmat[:, d]
-                negcs = -(dots / (nrm[:, None] * cn[None, :]))
-                idx = np.argsort(negcs, axis=1, kind="stable")[:, :nsel]
-                b = X.shape[0]
-                vec_ids = np.repeat(ids, nsel)
-                cranks = np.tile(np.arange(1, nsel + 1, dtype=np.int32), b)
-                keep = keep_mask(vec_ids, cranks)
-                flat_idx = idx.ravel()[keep]
-                rows_rep = np.repeat(np.arange(b), nsel)[keep]
-                yield pd.DataFrame(
-                    {
-                        "vec_id": vec_ids[keep],
-                        "v": ch["v"].to_numpy()[rows_rep],
-                        "nrm": nrm[rows_rep],
-                        "cell": cells[flat_idx],
-                        "cv": [cvs[i] for i in flat_idx],
-                        "crank": cranks[keep],
-                    }
-                )
+    def assign(ch: pd.DataFrame) -> dict:
+        v = ch["v"].to_numpy()
+        X = np.stack(v)
+        nrm = ch["nrm"].to_numpy()
+        negcs = -(fold_dot(X[:, None], cmat) / (nrm[:, None] * cn[None, :]))
+        idx = select_topn(negcs, int(nprobe))
+        b, nsel = idx.shape
+        vec_ids = np.repeat(ch["vec_id"].to_numpy(), nsel)
+        cranks = np.tile(np.arange(1, nsel + 1, dtype=np.int32), b)
+        keep = keep_mask(vec_ids, cranks)
+        flat_idx = idx.ravel()[keep]
+        rows_rep = np.repeat(np.arange(b), nsel)[keep]
+        return {
+            "vec_id": vec_ids[keep],
+            "v": v[rows_rep],
+            "nrm": nrm[rows_rep],
+            "cell": cells[flat_idx],
+            "cv": [cvs[i] for i in flat_idx],
+            "crank": cranks[keep],
+        }
 
-    return e.select("vec_id", "v", "nrm").mapInPandas(assign, schema=out_schema)
+    return map_chunks(
+        e,
+        ["vec_id", "v", "nrm"],
+        [
+            "vec_id",
+            "v",
+            "nrm",
+            StructField("cell", IntegerType(), False),
+            StructField("cv", ArrayType(DoubleType()), False),
+            StructField("crank", IntegerType(), False),
+        ],
+        assign if cent_sorted else None,
+    )
 
 
 def exact_d2_topn_cogroup(
@@ -608,19 +513,13 @@ def exact_d2_topn_cogroup(
     *,
     key: str = "gid",
     passthrough: tuple[str, ...] = (),
-    chunk_rows: int = 4096,
 ) -> DataFrame:
     """Nearest-``n`` ranking of every ``left`` row against its cogroup's
-    ``right`` rows by squared L2, Arrow-batched numpy — and, unlike
-    ``brute_topk_matmul``, BIT-IDENTICAL to the
-    ``functions/vectors.dot_product`` left fold (and therefore to the
-    DuckDB oracle expressions): the dot is accumulated
-    dimension-by-dimension with one elementwise multiply + one add per
-    step — the exact IEEE rounding sequence of the JVM fold and of the
-    SQL ``_DOT`` macro, with none of BLAS's reassociation.  numpy does
-    not fuse multiply-add, and multiplication by the literal 2.0 is
-    exact in binary floating point, so every intermediate rounds where
-    the fold rounds (parity pinned by
+    ``right`` rows by squared L2, Arrow-batched numpy, BIT-IDENTICAL to
+    the ``functions/vectors.dot_product`` left fold (and therefore to
+    the DuckDB oracle expressions): the dot is ``fold_dot``, and
+    multiplication by the literal 2.0 is exact in binary floating point,
+    so every intermediate rounds where the fold rounds (parity pinned by
     ``tests/test_round14_ops.py::test_cogroup_assignment_parity``).
 
     Column contract (callers rename going in/out):
@@ -628,58 +527,36 @@ def exact_d2_topn_cogroup(
       right: (``key``, rid, rv array<double>, rn2 double)
       out  : (id, rid, d2 double, *passthrough) — ≤ ``n`` rows per left
              row: the ``n`` smallest by (d2 ASC, rid ASC).  Ties resolve
-             to the smaller rid by a STABLE argsort over a rid-sorted
+             to the smaller rid by ``select_topn`` over a rid-sorted
              right matrix.  d2 = (n2 − 2·dot(v, rv)) + rn2, the exact
              operation order of the plans' ``_CLUS_D2`` oracle macro.
-             NaN d2 (never produced by finite inputs — no division)
-             would rank last in numpy, Spark and DuckDB alike.
+             A NaN d2 (a NaN vector component) raises.
 
     Scale shape: one hash exchange per side on ``key``; per-task memory
-    is O(chunk_rows × |right group|) doubles regardless of group size
-    (the left group streams through in chunks); compute is a vectorized
-    batch sweep instead of per-row HOF struct pools — the measured
-    ~10-40× constant cut that closed VERDICT r13 #4."""
-    import numpy as np
-    import pandas as pd
-
-    lf = {f.name: f for f in left.schema.fields}
-    rf = {f.name: f for f in right.schema.fields}
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        [lf["id"], rf["rid"], StructField("d2", DoubleType(), False)]
-        + [lf[c] for c in passthrough]
+    is O(CHUNK_ROWS × |right group|) doubles regardless of group size
+    (the left group streams through in chunks)."""
+    out_schema = _schema(
+        ["id", "rid", StructField("d2", DoubleType(), False), *passthrough],
+        left,
+        right,
     )
-    out_cols = ["id", "rid", "d2", *passthrough]
+    out_cols = out_schema.fieldNames()
 
     def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame(
-                {
-                    "id": pd.Series(dtype="int64"),
-                    "rid": pd.Series(dtype="int64"),
-                    "d2": pd.Series(dtype="float64"),
-                    **{c: pd.Series(dtype="object") for c in passthrough},
-                }
-            )
+            return pd.DataFrame(columns=out_cols)
         rpdf = rpdf.sort_values("rid", kind="stable")
         cmat = np.stack(rpdf["rv"].to_numpy())  # (m, dim)
         rn2 = rpdf["rn2"].to_numpy()
         rids = rpdf["rid"].to_numpy()
-        m = cmat.shape[0]
-        nsel = min(n, m)
         outs = []
-        for start in range(0, len(lpdf), chunk_rows):
-            ch = lpdf.iloc[start : start + chunk_rows]
+        for ch in _chunks(lpdf):
             vmat = np.stack(ch["v"].to_numpy())  # (b, dim)
             n2 = ch["n2"].to_numpy()
-            # exact left fold: t = v_d * c_d rounds, acc += t rounds —
-            # per element the same op sequence as aggregate(zip_with)
-            dots = np.zeros((vmat.shape[0], m))
-            for d in range(vmat.shape[1]):
-                dots += vmat[:, d, None] * cmat[:, d]
+            dots = fold_dot(vmat[:, None], cmat)
             d2 = (n2[:, None] - 2.0 * dots) + rn2[None, :]
-            idx = np.argsort(d2, axis=1, kind="stable")[:, :nsel]
+            idx = select_topn(d2, n)
+            nsel = idx.shape[1]
             data = {
                 "id": np.repeat(ch["id"].to_numpy(), nsel),
                 "rid": rids[idx].ravel(),

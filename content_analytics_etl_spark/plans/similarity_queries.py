@@ -5,10 +5,7 @@ Scale contract (round-2 revision — the two round-1 weak marks fixed):
 - **Bounded query sets.** Every top-k query's query side is
   ``vec_id % QUERY_MOD == 0 AND vec_id < QUERY_CAP`` — at most
   ``QUERY_CAP / QUERY_MOD`` = 20 rows at ANY corpus size, so the
-  broadcast is a constant, not a corpus fraction. Query sets larger
-  than the broadcast threshold route to
-  ``operators/similarity.brute_topk_chunked`` (chunked Arrow matmul —
-  bounded memory, no broadcast of the full query set).
+  broadcast is a constant, not a corpus fraction.
 - **No unbounded quadratic scan.** ``sim_neardup_pairs`` is now banded
   hyperplane-LSH candidate generation (equi-join, linear shuffle) +
   exact cosine verification — the same physical shape as
@@ -37,10 +34,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.vectors import dot_product, l2_norm, to_double_array
+from ..functions.vectors import (
+    dot_product,
+    fold_d2,
+    fold_dot,
+    l2_norm,
+    select_topn,
+    to_double_array,
+)
 from ..operators.kmeans import (
-    _centroid_df,
-    assign_clusters,
     assign_clusters_literal,
     d2_argmin_assign,
     kmeans_fit,
@@ -844,12 +846,8 @@ def _ivf_coarse_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     value).  Carrying cv (the cell centroid) keeps residual
     computation index-local.
 
-    Round 13: ranking is ROW-LOCAL against one broadcast collect_list
-    centroid matrix (the ``_clus_assign`` posture) — the previous
-    crossJoin + rank window pushed N·cells rows through a
-    partitionBy(vec_id) exchange, which at 600k vectors × 775 cells is
-    ~465M 550-byte rows (~250 GB of shuffle writes): the 600k audit
-    run filled the disk before this fix (PERF.md round 13).  The
+    Ranking is ROW-LOCAL (``cosine_rank_assign``): no N·cells
+    crossJoin rows and no partitionBy(vec_id) exchange.  The
     materialized index also keeps ONLY the rows its consumers read —
     crank = 1 for every vector (cell membership / codes) plus
     crank ≤ nprobe for the bounded ``_query_side`` rows (probe lists)
@@ -857,23 +855,16 @@ def _ivf_coarse_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsets of what is kept, so results are unchanged."""
 
     def build() -> DataFrame:
-        # r14 optimization (guide §4.2; the PERF-86 posture applied to
-        # the IVF assign): the r13 row-local HOF chain — `transform`
-        # over the broadcast collect_list centroid matrix + array_sort
-        # + slice — priced every vector at `cells` interpreted struct
-        # lambdas (600k × 775 cells × 64-dim fold = the measured
-        # 1521-s build wall on this sandbox). The ranking now runs in
-        # an Arrow kernel against the driver-collected centroid matrix
-        # (bounded O(cells·dim) = O(√N·dim) — the kmeans-centroid
-        # collect policy) with the exact dot_product fold sequence and
-        # stable argsort tie rule, so every emitted (vec_id, cell,
-        # crank) row is bit-identical to the HOF chain's (parity test:
-        # tests/test_round14_ops.py::test_ivf_assign_kernel_parity).
-        # The params relation's values are unchanged — the 1-row
-        # (cells, nprobe) aggregate is collected instead of broadcast;
-        # the oracle derives the same integers in SQL.
-        # NaN precondition unchanged (ADVICE r13, low): no zero-norm
-        # vectors/centroids, pinned by test_no_zero_norm_embeddings.
+        # The ranking runs in an Arrow kernel against the
+        # driver-collected centroid matrix (bounded O(cells·dim) =
+        # O(√N·dim) — the kmeans-centroid collect policy), bit-identical
+        # to the oracle's fold and (cosine DESC, cell ASC) order
+        # (test_ivf_assign_kernel_parity). The 1-row (cells, nprobe)
+        # params aggregate is collected; the oracle derives the same
+        # integers in SQL.
+        # A zero-norm vector or centroid would give a NaN cosine, which
+        # the kernel refuses; the corpora have none, pinned by
+        # test_no_zero_norm_embeddings.
         e = t(spark, sf_dir, "embeddings").select(
             "vec_id", to_double_array("embedding").alias("v")
         ).withColumn("nrm", l2_norm(F.col("v")))
@@ -899,64 +890,6 @@ def _ivf_coarse_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fp = source_fingerprint(sf_dir, "embeddings")
     return session_materialized(spark, f"ann_ivf_assign:{fp}", build)
-
-
-def _ivf_coarse_assign_hof(e: DataFrame, params: DataFrame) -> DataFrame:
-    """The r13 row-local HOF reference implementation of the coarse
-    assignment (broadcast collect_list matrix + transform/array_sort/
-    slice) — kept as the parity pin for ``cosine_rank_assign``'s
-    vectorized fold + stable-argsort tie rule, the same role
-    ``_clus_assign_broadcast`` plays for the cogroup kernel."""
-    cent = (
-        e.crossJoin(F.broadcast(params.select("cells")))
-        .filter(F.col("vec_id").between(1, F.col("cells")))
-        .select(
-            F.col("vec_id").cast("int").alias("cell"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-        )
-    )
-    cmat = cent.agg(
-        F.collect_list(F.struct("cell", "cv", "cn")).alias("cmat")
-    ).crossJoin(params.select("nprobe"))
-
-    def _cand(c):
-        # negated cosine so lexicographic ASC struct order equals the
-        # oracle's (cs DESC, cell ASC); cell is unique so the cv field
-        # never participates in the comparison.
-        negcs = -(
-            dot_product(F.col("v"), c["cv"]) / (F.col("nrm") * c["cn"])
-        )
-        return F.struct(
-            negcs.alias("negcs"),
-            c["cell"].alias("cell"),
-            c["cv"].alias("cv"),
-        )
-
-    return (
-        e.crossJoin(F.broadcast(cmat))
-        .select(
-            "vec_id",
-            "v",
-            "nrm",
-            F.posexplode(
-                F.slice(
-                    F.array_sort(F.transform(F.col("cmat"), _cand)),
-                    1,
-                    F.col("nprobe"),
-                )
-            ),
-        )
-        .select(
-            "vec_id",
-            "v",
-            "nrm",
-            F.col("col.cell").alias("cell"),
-            F.col("col.cv").alias("cv"),
-            (F.col("pos") + 1).cast("int").alias("crank"),
-        )
-        .filter((F.col("crank") == 1) | _query_side())
-    )
 
 
 def _ann_topk(
@@ -1157,12 +1090,9 @@ def _pq_code_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     system stores — 4 bytes/vector instead of 256."""
 
     def build() -> DataFrame:
-        # r14 optimization (guide §2.3/§2.4): row-local Arrow argmin
-        # against the driver-collected codebook (bounded PQ_M·PQ_KS×
-        # SUB_DIM — the kmeans-centroid collect policy) replaces the
-        # broadcast join + rank window that materialized N·PQ_M·PQ_KS
-        # rows (×PQ_KS the input) and shuffled them on (vec_id, m).
-        # Bit-identical d2 fold and tie rule — see pq_argmin_codes.
+        # row-local Arrow argmin against the driver-collected codebook
+        # (bounded PQ_M·PQ_KS×SUB_DIM — the kmeans-centroid collect
+        # policy); bit-identical d2 fold and tie rule (pq_argmin_codes)
         sub = _pq_subvectors(spark, sf_dir)
         cb_rows = _pq_codebook(sub).collect()
         return pq_argmin_codes(sub, cb_rows)
@@ -1342,10 +1272,8 @@ def _ivfpq_code_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit) in every sweep."""
 
     def build() -> DataFrame:
-        # r14 optimization: row-local Arrow argmin against the
-        # driver-collected residual codebook — same rewrite as
-        # _pq_code_table (removes the N·PQ_M·PQ_KS join+window rows),
-        # bit-identical d2 fold and tie rule (pq_argmin_codes).
+        # row-local Arrow argmin against the driver-collected residual
+        # codebook, as in _pq_code_table (pq_argmin_codes)
         ranked = _ivf_coarse_assign(spark, sf_dir)
         resid = F.zip_with("v", "cv", lambda x, y: x - y)
         assigned = ranked.filter(F.col("crank") == 1).select(
@@ -1367,6 +1295,10 @@ def _ivfpq_code_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivfpq_resid_sub,
         _ivfpq_cb,
         pq_argmin_codes,
+        cosine_rank_assign,
+        fold_d2,
+        fold_dot,
+        select_topn,
         _ivf_params_rel,
         PQ_M,
         PQ_SUB_DIM,
@@ -1574,10 +1506,8 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at 60M vectors).  All three ranking passes (vector→super,
 # cell→super ownership, vector→cells-of-probed-supers) run through
 # ``operators/similarity.exact_d2_topn_cogroup`` — vectorized numpy
-# with the EXACT dot_product fold order, bit-identical to the HOF path
-# (parity test) and to the DuckDB oracle windows; this is also the
-# VERDICT r13 #4 build-constant cut (the per-row HOF struct pools were
-# ~6400 non-codegen'd 64-d dots per vector — 1601 s at 600k).
+# with the EXACT dot_product fold order, bit-identical to the HOF form
+# in tests/vector_refs.py (parity test) and to the DuckDB oracle windows.
 CLUS_PROBE = 6  # cells per vector (p)
 CLUS_TARGET = 24  # target vectors per cell (T, fixed — this is what
 # makes the pair scan linear: candidates ≈ (p²·T/2)·N at any N)
@@ -1638,154 +1568,6 @@ def _clus_params_rel(e: DataFrame) -> DataFrame:
     )
 
 
-def _clus_assign_broadcast(e: DataFrame, params: DataFrame) -> DataFrame:
-    """(vec_id, cid) rows, ≤ CLUS_PROBE per vector — the round-13
-    broadcast/HOF form of the two-level quantizer, kept as the PARITY
-    REFERENCE for the production cogroup path (``_clus_assign`` below;
-    ``tests/test_round14_ops.py`` pins row-set equality).  Not in any
-    registered query's plan: its grouped-cell broadcast is the shape
-    whose 33 MB bound forced the r13 CLUS_K_CAP, and its per-row HOF
-    struct pools are the measured 1601-s-at-600k build constant
-    (VERDICT r13 #1/#4) — both replaced by the sid-equi-join Arrow
-    kernel.  Semantics (identical to the production path and the
-    oracle): rank the s super-centroids (the s lowest-vec_id vectors),
-    keep the CLUS_SUPER_PROBE nearest, then rank ONLY the cells owned
-    by those supers (cell centroids = the k lowest-vec_id vectors,
-    each owned by its rank-≤CLUS_CELL_SPILL nearest supers) and keep
-    the CLUS_PROBE nearest — (d2, id) lexicographic tie order, Lloyd's
-    deterministic init at both levels, the ``kmeans_assign`` contract."""
-    sup = (
-        e.crossJoin(F.broadcast(params))
-        .filter(F.col("vec_id") < F.col("s"))
-        .select(
-            F.col("vec_id").cast("int").alias("sid"),
-            F.col("v").alias("sv"),
-            dot_product(F.col("v"), F.col("v")).alias("sn2"),
-        )
-    )
-    smat = sup.agg(F.collect_list(F.struct("sid", "sv", "sn2")).alias("smat"))
-    cent = (
-        e.crossJoin(F.broadcast(params))
-        .filter(F.col("vec_id") < F.col("k"))
-        .select(
-            F.col("vec_id").cast("int").alias("cid"),
-            F.col("v").alias("cv"),
-            dot_product(F.col("v"), F.col("v")).alias("cn2"),
-        )
-    )
-
-    def _sup_cand(base_n2, base_v):
-        # same operation ORDER as assign_clusters: (v·v − 2·v·s) + s·s
-        def inner(t):
-            d2 = base_n2 - 2.0 * dot_product(base_v, t["sv"]) + t["sn2"]
-            return F.struct(d2.alias("d2"), t["sid"].alias("sid"))
-
-        return inner
-
-    # cell → owning supers: rank-≤CLUS_CELL_SPILL against the broadcast
-    # super matrix, row-local (k rows, s dots each).  R > 1 is spilled
-    # assignment (ScaNN's SOAR): boundary cells are visible from both
-    # adjacent supers, recovering the pairs whose two members probe
-    # different super sets.
-    owned = (
-        cent.crossJoin(F.broadcast(smat))
-        .select(
-            "cid",
-            "cv",
-            "cn2",
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            F.col("smat"),
-                            _sup_cand(F.col("cn2"), F.col("cv")),
-                        )
-                    ),
-                    1,
-                    CLUS_CELL_SPILL,
-                )
-            ).alias("o"),
-        )
-        .select("cid", "cv", "cn2", F.col("o.sid").alias("sid"))
-    )
-    # one broadcast row carrying BOTH matrices: the super list and the
-    # super-grouped cells (33 MB at the k cap — CLUS_K_CAP's bound)
-    gmat = owned.groupBy("sid").agg(
-        F.collect_list(F.struct("cid", "cv", "cn2")).alias("cells")
-    )
-    mats = smat.crossJoin(
-        gmat.agg(F.collect_list(F.struct("sid", "cells")).alias("gmat"))
-    )
-
-    def _cell_cand(c):
-        d2 = F.col("n2") - 2.0 * dot_product(F.col("v"), c["cv"]) + c["cn2"]
-        return F.struct(d2.alias("d2"), c["cid"].alias("cid"))
-
-    return (
-        e.select(
-            "vec_id", "v", dot_product(F.col("v"), F.col("v")).alias("n2")
-        )
-        .crossJoin(F.broadcast(mats))
-        .withColumn(
-            "psids",
-            F.transform(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            F.col("smat"),
-                            _sup_cand(F.col("n2"), F.col("v")),
-                        )
-                    ),
-                    1,
-                    CLUS_SUPER_PROBE,
-                ),
-                lambda t: t["sid"],
-            ),
-        )
-        .select(
-            "vec_id",
-            F.explode(
-                # With CLUS_CELL_SPILL > 1 a cell owned by two probed
-                # supers appears twice in the flattened pool (its
-                # (d2, cid) structs are bit-identical — same fold).
-                # Each cid appears ≤ R times, so every one of the top-p
-                # DISTINCT cells lies within the top R·p entries of the
-                # sorted multiset: sort, slice R·p, THEN dedup — the
-                # O(n²) array_distinct runs over R·p structs instead of
-                # the whole p1·R·k/s pool (measured 3× on the whole
-                # assignment, PERF.md round 13).
-                F.slice(
-                    F.array_distinct(
-                        F.slice(
-                            F.array_sort(
-                                F.transform(
-                                    F.flatten(
-                                        F.transform(
-                                            F.filter(
-                                                F.col("gmat"),
-                                                lambda g: F.array_contains(
-                                                    F.col("psids"), g["sid"]
-                                                ),
-                                            ),
-                                            lambda g: g["cells"],
-                                        )
-                                    ),
-                                    _cell_cand,
-                                )
-                            ),
-                            1,
-                            CLUS_CELL_SPILL * CLUS_PROBE,
-                        )
-                    ),
-                    1,
-                    CLUS_PROBE,
-                )
-            ).alias("s"),
-        )
-        .select("vec_id", F.col("s.cid").alias("cid"))
-    )
-
-
 def _clus_assign(e: DataFrame, params: DataFrame) -> DataFrame:
     """(vec_id, cid) rows, ≤ CLUS_PROBE per vector — the two-level
     quantizer's PRODUCTION assignment (round 14, VERDICT r13 #1 + #4):
@@ -1795,8 +1577,9 @@ def _clus_assign(e: DataFrame, params: DataFrame) -> DataFrame:
     corpus size.
 
     Three cogrouped Arrow passes (``exact_d2_topn_cogroup`` — numpy
-    with the exact ``dot_product`` fold order, bit-identical to
-    ``_clus_assign_broadcast``'s HOF chain, parity-pinned):
+    with the exact ``dot_product`` fold order, bit-identical to the
+    round-13 broadcast/HOF chain, parity-pinned against its copy in
+    ``tests/vector_refs.py``):
 
     1. vector → supers: vectors salted into g = ceil(N/8192) groups,
        the s-row super matrix replicated per salt (g·s small rows);
@@ -1911,6 +1694,8 @@ def _clus_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         build,
         _clus_assign,
         exact_d2_topn_cogroup,
+        fold_dot,
+        select_topn,
         _clus_params_rel,
         CLUS_PROBE,
         CLUS_TARGET,
@@ -2279,9 +2064,9 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     w, norm = _power_rounds(e)  # r9: loop shared with embedding_pca_top2
-    # final frame from the already-collected O(dim) vector — the same
-    # _centroid_df convention embedding_kmeans uses; re-deriving it from
-    # lineage would run the third corpus pass a second time
+    # final frame from the already-collected O(dim) vector, as a local
+    # frame; re-deriving it from lineage would run the third corpus
+    # pass a second time
     out = local_frame(
         spark, [(d, float(z)) for d, z in enumerate(w)], "d int, w double"
     ).select(
@@ -2319,19 +2104,10 @@ def _power_rounds(e: DataFrame, deflate: list | None = None):
             for pdf in batches:
                 X = np.vstack(pdf["x"].to_numpy())
                 if d1 is not None:
-                    acc1 = np.zeros(len(X), dtype=np.float64)
-                    for d in range(DIM):
-                        acc1 = acc1 + X[:, d] * d1[d]
-                    Xp = np.empty_like(X)
-                    for d in range(DIM):
-                        Xp[:, d] = X[:, d] - acc1 * d1[d]
-                    X = Xp
-                acc = np.zeros(len(X), dtype=np.float64)
-                for d in range(DIM):
-                    acc = acc + X[:, d] * varr[d]
-                for d in range(DIM):
-                    q = np.floor(X[:, d] * acc * 1e9 + 0.5).astype(np.int64)
-                    tot[d] += q.sum()
+                    X = X - fold_dot(X, d1)[:, None] * d1
+                acc = fold_dot(X, varr)
+                q = np.floor(X * acc[:, None] * 1e9 + 0.5).astype(np.int64)
+                tot += q.sum(axis=0)
             yield pd.DataFrame({"d": np.arange(DIM, dtype=np.int32), "p": tot})
 
         w_df = (
@@ -2342,7 +2118,8 @@ def _power_rounds(e: DataFrame, deflate: list | None = None):
             .groupBy("d")
             .agg((F.sum("p").cast("double") / F.lit(1e9)).alias("w"))
         )
-        w = [r["w"] for r in w_df.orderBy("d").collect()]
+        # 64 rows: sorted here, not by an orderBy's sampling job + sort
+        w = [r["w"] for r in sorted(w_df.collect(), key=lambda r: r["d"])]
         s = 0.0
         for z in w:  # ordered fold — mirrors list_sum exactly
             s += z * z

@@ -1,6 +1,6 @@
 """Self-consistency tests for the approximate operators: MinHash-LSH
 recall vs exact Jaccard, SimHash behavior on identical/perturbed text,
-ANN vs brute-force, and the pandas-matmul fast path vs the fold path."""
+and ANN vs brute-force."""
 
 from __future__ import annotations
 
@@ -11,15 +11,10 @@ from content_analytics_etl_spark.operators.dedup import (
     simhash60,
     word_shingles,
 )
-from content_analytics_etl_spark.operators.similarity import (
-    brute_topk,
-    brute_topk_matmul,
-)
 from content_analytics_etl_spark.plans.dedup_queries import (
     dedup_minhash_lsh,
     dedup_ngram_jaccard,
 )
-from content_analytics_etl_spark.sources.readers import load_table
 
 
 def test_minhash_lsh_finds_exact_jaccard_pairs(spark, sf_dir):
@@ -86,23 +81,6 @@ def test_simhash_agg_matches_fold_spec(spark, sf_dir):
 def test_jaccard_column(spark):
     df = spark.createDataFrame([(["a", "b", "c"], ["b", "c", "d"])], ["x", "y"])
     assert df.select(jaccard("x", "y").alias("j")).collect()[0]["j"] == 0.5
-
-
-def test_matmul_topk_matches_fold_topk(spark, sf_dir):
-    """The BLAS fast path must produce the same neighbor IDs/ranks as the
-    exact fold path (cosines may differ in ulps; ids must not)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") % 100 == 0)
-    fold = {
-        (r["query_id"], r["rank"]): r["cand_id"]
-        for r in brute_topk(e, q, k=3).collect()
-    }
-    qpdf = q.toPandas()
-    mat = {
-        (r["query_id"], r["rank"]): r["cand_id"]
-        for r in brute_topk_matmul(e, qpdf, k=3).collect()
-    }
-    assert fold == mat
 
 
 def test_ann_lsh_recall_vs_brute(spark, sf_dir):

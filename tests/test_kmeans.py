@@ -7,12 +7,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from content_analytics_etl_spark.functions.vectors import to_double_array
-from content_analytics_etl_spark.operators.kmeans import (
-    _centroid_df,
-    assign_clusters,
-    kmeans_fit,
-)
+from content_analytics_etl_spark.operators.kmeans import kmeans_fit
 from content_analytics_etl_spark.sources.readers import load_table
+from vector_refs import _centroid_df, assign_clusters
 
 K = 4
 ITERS = 3

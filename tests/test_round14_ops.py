@@ -39,9 +39,9 @@ def _e(spark, sf_dir):
 def _parity(spark, sf_dir):
     from content_analytics_etl_spark.plans.similarity_queries import (
         _clus_assign,
-        _clus_assign_broadcast,
         _clus_params_rel,
     )
+    from vector_refs import _clus_assign_broadcast
 
     e = _e(spark, sf_dir)
     got = {
@@ -320,9 +320,9 @@ def _ivf_parity(spark, sf_dir):
     from content_analytics_etl_spark.plans.similarity_queries import (
         QUERY_CAP,
         QUERY_MOD,
-        _ivf_coarse_assign_hof,
         _ivf_params_rel,
     )
+    from vector_refs import _ivf_coarse_assign_hof
 
     e = _e(spark, sf_dir)
     params = _ivf_params_rel(e)

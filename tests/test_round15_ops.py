@@ -79,13 +79,13 @@ def test_d2_argmin_assign_parity(spark, sf001_dir):
     (assign_clusters) bit-for-bit on real data: same winner cid, same
     winner d2 doubles."""
     from content_analytics_etl_spark.functions.vectors import to_double_array
-    from content_analytics_etl_spark.operators.kmeans import (
+    from content_analytics_etl_spark.operators.kmeans import d2_argmin_assign
+    from content_analytics_etl_spark.plans._util import t
+    from vector_refs import (
+        _centroid_df,
         assign_clusters,
         assign_clusters_literal_hof,
-        d2_argmin_assign,
-        _centroid_df,
     )
-    from content_analytics_etl_spark.plans._util import t
 
     e = t(spark, sf001_dir, "embeddings").select(
         "vec_id", to_double_array("embedding").alias("v")

@@ -71,16 +71,28 @@ def test_prefix_sum_offsets_are_a_local_scan(spark):
     out.unpersist()
 
 
+def _warm_job_count(spark, sf_dir, name: str) -> int:
+    """Jobs of a second call of query ``name``, counted by job group."""
+    fn = all_queries()[name]
+    fn(spark, sf_dir).collect()
+    sc = spark.sparkContext
+    group = f"test-warm-{name}"
+    sc.setJobGroup(group, f"warm {name}", False)
+    try:
+        fn(spark, sf_dir).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_warm_part_revenue_abc_job_count(spark, sf001_dir):
     """A warm call runs 7 jobs; with its prefix-sum offsets collected
     through an orderBy and built from a Python list it ran 11."""
-    fn = all_queries()["part_revenue_abc"]
-    fn(spark, sf001_dir).collect()
-    sc = spark.sparkContext
-    group = "test-warm-part-revenue-abc"
-    sc.setJobGroup(group, "warm part_revenue_abc", False)
-    try:
-        fn(spark, sf001_dir).collect()
-    finally:
-        sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+    assert _warm_job_count(spark, sf001_dir, "part_revenue_abc") <= 7
+
+
+def test_warm_embedding_pca_top2_job_count(spark, sf001_dir):
+    """A warm call runs 16 jobs; with each power round's 64-row
+    weight vector collected through an orderBy (a range-sampling job
+    and a sort stage per round) it ran 28."""
+    assert _warm_job_count(spark, sf001_dir, "embedding_pca_top2") <= 16
