@@ -24,26 +24,16 @@ rounded and matches the JVM bit-for-bit.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import materialize_and_release  # noqa: F401  (re-export)
 from ..sources.readers import load_table
 
 __all__ = [
     "t",
-    "materialize_once",
     "dsum",
     "davg",
     "dec",
-    "source_fingerprint",
-    "warehouse_root",
-    "materialize_and_release",
     "rank_limited",
 ]
 
@@ -53,31 +43,6 @@ DEC = "decimal(18,6)"
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a star-schema table with its declared schema."""
     return load_table(spark, sf_dir, name)
-
-
-def source_fingerprint(sf_dir: str, *tables: str) -> str:
-    """Content fingerprint of the named source tables: md5 over each
-    file's (relative path, size, mtime_ns). Derived-layout caches
-    (partitioned rewrites, bucketed tables) key on this instead of the
-    path alone, so regenerating the data at the same sf_dir produces a
-    NEW cache entry rather than silently serving the stale one."""
-    h = hashlib.md5(sf_dir.encode())
-    for table in tables:
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        files = (
-            sorted(
-                os.path.join(dp, fn)
-                for dp, _, fns in os.walk(path)
-                for fn in fns
-            )
-            if os.path.isdir(path)
-            else [path]
-        )
-        for p in files:
-            st = os.stat(p)
-            rel = os.path.relpath(p, sf_dir)
-            h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return h.hexdigest()[:12]
 
 
 def rank_limited(
@@ -109,52 +74,6 @@ def rank_limited(
         *[F.col(f"_s.{c}").alias(c) for c in out_cols],
         (F.col("_pos") + 1).cast("int").alias(rank_col),
     )
-
-
-# materialize_and_release moved to ..cache (package root) so operators
-# can share the cache-lifetime discipline without a circular import;
-# re-exported here for the plan modules.
-
-
-def warehouse_root(spark: SparkSession) -> str:
-    """Local filesystem path of the Spark SQL warehouse (from the
-    session conf, not a hard-coded absolute path)."""
-    uri = spark.conf.get("spark.sql.warehouse.dir")
-    if uri.startswith("file:"):
-        uri = "/" + uri[len("file:"):].lstrip("/")
-    return uri
-
-
-def materialize_once(
-    root: str, final_dir: str, prefix: str, write: Callable[[str], None]
-) -> None:
-    """Write-once warehouse materialization with the pid-tmp + rename +
-    prune discipline (VERDICT r7 #8 / r8 #6, applied uniformly):
-
-    - skip if ``final_dir`` already carries a ``_SUCCESS`` marker;
-    - otherwise ``write()`` into a pid-suffixed tmp dir and ``rename``
-      it into place — atomic on one filesystem, so a concurrent writer
-      either wins the rename (we discard our tmp and use theirs) or
-      loses harmlessly; a rename failure WITHOUT a complete winner
-      re-raises (perms, EXDEV — a real error, not a race);
-    - prune sibling dirs with the same logical ``prefix`` but a
-      superseded content-fingerprint suffix (testdata regeneration
-      strands one dir per old snapshot otherwise).
-    """
-    if os.path.exists(os.path.join(final_dir, "_SUCCESS")):
-        return
-    tmp = f"{final_dir}.tmp-{os.getpid()}"
-    write(tmp)
-    try:
-        os.rename(tmp, final_dir)
-    except OSError:  # concurrent writer won the rename — use theirs
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final_dir, "_SUCCESS")):
-            raise  # rename failed for a real reason (perms, EXDEV)
-    keep = os.path.basename(final_dir)
-    for d in os.listdir(root):
-        if d.startswith(prefix) and ".tmp-" not in d and d != keep:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
 
 
 def dec(col: Column | str) -> Column:

@@ -12,7 +12,6 @@ results hash-match the DuckDB oracle regardless of partitioning.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -23,15 +22,9 @@ from ..operators.merge import merge_upsert
 from ..operators.prefix_sum import distributed_prefix_sum, ieee_bucket_desc
 from ..operators.scd import scd2_apply
 from ..sources.writers import compact_parquet
-from ._util import (
-    dec,
-    dsum,
-    materialize_and_release,
-    materialize_once,
-    source_fingerprint,
-    t,
-    warehouse_root,
-)
+from ..cache import materialize_and_release
+from ..index_store import materialize_once, source_fingerprint
+from ._util import dec, dsum, t
 from .text_queries import _NORM_SQL, _TOKS_SQL  # oracle-side tokenizer
 from ..functions.text_metrics import tokens
 
@@ -621,12 +614,8 @@ def warehouse_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the hash match proves compaction is lossless row-for-row and
     value-for-value; the file-count contract (ceil(bytes/target) output
     files, far fewer than the fragments) is asserted in
-    tests/test_compaction.py. Layouts are cached per source-content
-    fingerprint, same staleness policy as the partitioned/bucketed
-    layouts."""
-    key = source_fingerprint(sf_dir, "orders")
-    root = warehouse_root(spark)
-    compacted = os.path.join(root, f"orders_compact_{key}")
+    tests/test_compaction.py. The compacted table is a derived layout
+    (``index_store``)."""
 
     def build(tmp: str) -> None:
         # the fragmented input is build-scoped staging, pid-suffixed so
@@ -642,9 +631,9 @@ def warehouse_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_parquet(spark, frag, tmp, target_file_bytes=4 << 20)
         shutil.rmtree(frag, ignore_errors=True)
 
-    # write-once via pid-tmp + rename + prune (VERDICT r8 #6: this site
-    # previously did an unguarded check-then-write)
-    materialize_once(root, compacted, "orders_compact_", build)
+    compacted = materialize_once(
+        spark, "orders_compact", sf_dir, source_fingerprint(sf_dir, "orders"), build
+    )
     return (
         spark.read.parquet(compacted)
         .groupBy("o_orderstatus")
@@ -1115,15 +1104,7 @@ def events_daily_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-out. At 100 TB the merge becomes partition-overwrite of the
     affected day partitions; the plan shape (aggregate the delta only,
     keyed join onto the MV) is unchanged — history is never rescanned.
-    Snapshot cached per source fingerprint (compaction's staleness
-    policy)."""
-    # the cutoff is part of the cache key: a snapshot built at one
-    # cutoff silently double-counts (or drops) the interval between two
-    # cutoffs if reused after MV_CUTOFF changes
-    key = source_fingerprint(sf_dir, "events")
-    snap_path = os.path.join(
-        warehouse_root(spark), f"events_daily_mv_{key}_{MV_CUTOFF}"
-    )
+    The snapshot is a derived layout (``index_store``)."""
     e = t(spark, sf_dir, "events")
     cutoff = F.lit(MV_CUTOFF).cast("timestamp")
 
@@ -1135,12 +1116,14 @@ def events_daily_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec("value")).alias("sv"),
         )
 
-    # write-once via pid-tmp + rename + prune (VERDICT r8 #6: this site
-    # previously did an unguarded check-then-write)
-    materialize_once(
-        warehouse_root(spark),
-        snap_path,
-        "events_daily_mv_",
+    # the cutoff is part of the content key: a snapshot built at one
+    # cutoff double-counts (or drops) the interval between two cutoffs
+    # if reused after MV_CUTOFF changes
+    snap_path = materialize_once(
+        spark,
+        "events_daily_mv",
+        sf_dir,
+        f"{source_fingerprint(sf_dir, 'events')}_{MV_CUTOFF}",
         lambda tmp: daily(e.filter(F.col("ts") < cutoff))
         .write.mode("overwrite")
         .parquet(tmp),
@@ -1228,19 +1211,17 @@ def star_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def warehouse_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink round-trip — the engine's second columnar format
     (Spark ships an ORC reader/writer with the same predicate-pushdown /
-    column-pruning contract as parquet): orders is materialized ONCE per
-    source-content fingerprint as an ORC table, read back with a
+    column-pruning contract as parquet): orders is materialized as an
+    ORC table (a derived layout, ``index_store``), read back with a
     declared schema, and aggregated. The oracle computes the identical
     aggregate from the parquet source, so the hash match proves the
     ORC write+read is lossless row-for-row and value-for-value (the
     ``warehouse_compact_roundtrip`` proof shape, pointed at a format)."""
-    key = source_fingerprint(sf_dir, "orders")
-    root = warehouse_root(spark)
-    orc_dir = os.path.join(root, f"orders_orc_{key}")
-    materialize_once(
-        root,
-        orc_dir,
-        "orders_orc_",
+    orc_dir = materialize_once(
+        spark,
+        "orders_orc",
+        sf_dir,
+        source_fingerprint(sf_dir, "orders"),
         lambda tmp: t(spark, sf_dir, "orders")
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
         .write.mode("overwrite")
@@ -1263,21 +1244,18 @@ def warehouse_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def warehouse_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source/sink round-trip — completing the format matrix
     next to parquet (everywhere), the CSV sink (S5) and the ORC
-    round-trip: customer is materialized ONCE per source-content
-    fingerprint as a JSON-lines table, read back with a DECLARED schema
+    round-trip: customer is materialized as a JSON-lines table (a
+    derived layout, ``index_store``), read back with a DECLARED schema
     (the S1 no-inference-scan policy), and aggregated; the oracle
     computes the identical aggregate from the parquet source. Doubles
     survive because Spark's JSON writer emits shortest-repr doubles and
     the reader parses to nearest — an exact round-trip — so the hash
-    match proves losslessness, not just row counts. Same write-once
-    tmp+rename+prune discipline as the ORC materialization."""
-    key = source_fingerprint(sf_dir, "customer")
-    root = warehouse_root(spark)
-    json_dir = os.path.join(root, f"customer_json_{key}")
-    materialize_once(
-        root,
-        json_dir,
-        "customer_json_",
+    match proves losslessness, not just row counts."""
+    json_dir = materialize_once(
+        spark,
+        "customer_json",
+        sf_dir,
+        source_fingerprint(sf_dir, "customer"),
         lambda tmp: t(spark, sf_dir, "customer")
         .select("c_custkey", "c_mktsegment", "c_acctbal")
         .write.mode("overwrite")
@@ -1300,24 +1278,21 @@ def warehouse_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def warehouse_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source/sink round-trip — the reference's OWN sink format
     (S5) promoted to a verified round-trip, completing the matrix
-    (parquet / ORC / JSON-lines / CSV): orders is materialized once per
-    source-content fingerprint as headered CSV, read back with a
+    (parquet / ORC / JSON-lines / CSV): orders is materialized as
+    headered CSV (a derived layout, ``index_store``), read back with a
     DECLARED schema (no inference scan), and aggregated; the oracle
     computes the identical aggregate from the parquet source, so the
     hash match proves the text round-trip is lossless. Doubles survive
     via shortest-repr write + nearest parse (the JSON argument);
     timestamps carry explicit microsecond format on BOTH write and read
     — the default millisecond pattern would silently truncate µs and
-    fail the max-timestamp column. Same write-once tmp+rename+prune
-    discipline as the ORC/JSON materializations."""
-    key = source_fingerprint(sf_dir, "orders")
-    root = warehouse_root(spark)
-    csv_dir = os.path.join(root, f"orders_csv_{key}")
+    fail the max-timestamp column."""
     ts_fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    materialize_once(
-        root,
-        csv_dir,
-        "orders_csv_",
+    csv_dir = materialize_once(
+        spark,
+        "orders_csv",
+        sf_dir,
+        source_fingerprint(sf_dir, "orders"),
         lambda tmp: t(spark, sf_dir, "orders")
         .select("o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate")
         .write.mode("overwrite")

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from ..cache import session_materialized
 from ..frames import local_frame
 from ..functions.hashing import DUCKDB_HASH64, portable_hash64
-from ._util import rank_limited, source_fingerprint, t
+from ..index_store import source_fingerprint
+from ._util import rank_limited, t
 from .dedup_queries import (
     ORACLES as D_ORACLES,
     dedup_decontaminate,

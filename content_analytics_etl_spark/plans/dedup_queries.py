@@ -26,10 +26,11 @@ from ..operators.dedup import (
     shingled,
     simhash60_agg,
 )
-from ..cache import session_materialized
+from ..cache import materialize_and_release, session_materialized
 from ..frames import local_frame
 from ..operators.prefix_sum import distributed_prefix_sum
-from ._util import materialize_and_release, source_fingerprint, t
+from ..index_store import source_fingerprint
+from ._util import t
 
 JACCARD_THRESHOLD = 0.5
 SIMHASH_MAX_HAMMING = 6

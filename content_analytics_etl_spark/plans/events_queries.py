@@ -14,8 +14,6 @@ no per-user driver loops.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -23,7 +21,8 @@ from ..frames import local_frame
 from ..functions.hashing import loglog_reg_rho
 from ..operators.prefix_sum import distributed_prefix_sum, ieee_bucket_asc
 from ..sources.writers import write_parquet_partitioned
-from ._util import dec, dsum, rank_limited, source_fingerprint, t, warehouse_root
+from ..index_store import materialize_once, source_fingerprint
+from ._util import dec, dsum, rank_limited, t
 
 SESSION_GAP_SECONDS = 1800  # 30 min
 
@@ -239,18 +238,22 @@ PRUNE_START, PRUNE_END = "2024-01-10", "2024-01-12"
 
 
 def _partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Date-partitioned materialization of ``events`` (written once per
-    source-content fingerprint, reused after — regenerated source data
-    gets a fresh directory instead of a stale hit). This is the Phase-2
-    layout the engine replaces the reference's filename arithmetic with
-    — the partition column is a real hive-style directory key, so
-    Catalyst prunes out-of-range days at planning time."""
-    key = source_fingerprint(sf_dir, "events")
-    out = os.path.join(warehouse_root(spark), f"events_by_date_{key}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        e = t(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
-        write_parquet_partitioned(e, out, "date")
-    return out
+    """Date-partitioned ``events``, a derived layout (``index_store``).
+    This is the Phase-2 layout the engine replaces the reference's
+    filename arithmetic with — the partition column is a real hive-style
+    directory key, so Catalyst prunes out-of-range days at planning
+    time."""
+    return materialize_once(
+        spark,
+        "events_by_date",
+        sf_dir,
+        source_fingerprint(sf_dir, "events"),
+        lambda tmp: write_parquet_partitioned(
+            t(spark, sf_dir, "events").withColumn("date", F.to_date("ts")),
+            tmp,
+            "date",
+        ),
+    )
 
 
 def events_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

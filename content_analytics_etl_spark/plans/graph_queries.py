@@ -24,8 +24,9 @@ from pyspark.sql import functions as F
 from ..functions.hashing import DUCKDB_HASH64, portable_hash64
 from ..operators.graph import common_neighbor_scores
 from ..operators.prefix_sum import distributed_prefix_sum, ieee_bucket_asc
-from ..cache import session_materialized
-from ._util import materialize_and_release, source_fingerprint, t
+from ..cache import materialize_and_release, session_materialized
+from ..index_store import source_fingerprint
+from ._util import t
 from .dedup_queries import ORACLES as _DEDUP_ORACLES
 from .dedup_queries import neardup_pair_graph
 

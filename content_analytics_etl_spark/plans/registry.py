@@ -57,74 +57,14 @@ _MODULES = [
     graph_queries,
 ]
 
-# The first 50 names the driver will hash.  One line per family block.
-#
-# Round-7 rotation — STALENESS policy (VERDICT r6 #1).  Lifetime driver
-# coverage reached 173/173 in round 6, so the old rule ("every
-# never-verified query must be in the window") became vacuous.  The
-# window is now computed by ``tools/rotate_window.py``:
-#
-#   1. every query with NO lifetime driver verdict (new this round), then
-#   2. fill the remaining slots with the queries whose most recent
-#      driver verdict is OLDEST (ties broken by name),
-#
-# using ``tools/lifetime_driver_verified.json``, which since round 7
-# records {name: last_green_round} instead of a flat list.  The r06
-# scan-layout change altered every query's physical read path while
-# 123/173 queries' latest verdict predated it — this policy re-hashes
-# every query against the drifting tree every ~3-4 rounds.
-# ``tests/test_driver_window.py`` asserts DRIVER_WINDOW == the canonical
-# computation, so a skipped rotation is a red test, not a judge finding.
-#
-# Round-9 rotation (history, reworded per ADVICE r9): the window led
-# with the 12 never-verified round-9 additions, then filled with the 16
-# remaining round-3-verdict names plus the 22 alphabetically-first
-# round-4-verdict names (12 + 16 + 22 = 50).  CORRECTNESS_r09 came back
-# 50/50 green, lifting lifetime coverage to 227/227.
-#
-# Round-10 rotation: the 3 never-verified round-10 additions lead
-# (unverified-first), then the oldest-verdict fill — the remaining
-# round-4-verdict names (the round-4 era is the oldest cohort left
-# after r09 consumed its first 22; its three alphabetically-last names
-# yield to the new queries and return next round).
-# Round-11 rotation: CORRECTNESS_r10 came back 50/50 (lifetime
-# 230/230), and the lifetime record became CONTENT-KEYED (ADVICE r10,
-# medium): each verdict carries a fingerprint of the query's plan
-# source + oracle SQL (tools/qfp.py), and rotate_window treats a
-# fingerprint mismatch as unverified.  (The original comment here
-# claimed the round-11 rewrites led that window; in fact their lifetime
-# records were pre-r11 bare ints with no fingerprint, so the drift rule
-# could not fire on them — the ADVICE r11 medium finding.)
-# Round-12 rotation: CORRECTNESS_r11 came back 50/50 (lifetime
-# 235/235), and fingerprint-LESS records are now themselves unverified
-# (ADVICE r11, medium): a pre-r11 bare-int record cannot prove the
-# verified content is the current content, so all 180 of them re-enter
-# the window oldest-round-first until re-hashed and stamped.  This
-# window leads with the round-12 additions (sim_neardup_clustered +
-# its audit, sim_range_recall_audit, multimodal_jpeg_decode — never
-# verified), then the four
-# round-12 REWRITES whose recorded fingerprints no longer match
-# (sim_ann_recall_audit, sim_neardup_recall_audit, sim_range_search,
-# sim_semantic_decontaminate — the drift rule firing as designed),
-# then the first 42 of that backlog (the r03/r04-era cohorts: joins,
-# windows, set-ops, early dedup/doc).
-# Round-15 rotation (the VERDICT r14 gate fix): CORRECTNESS_r14 came
-# back 50/50, but the r14 optimizer session rewrote the plan source of
-# 14 registered queries AFTER the last rotation and never re-rotated —
-# the shipped window excluded every one of them (tests/
-# test_driver_window.py was red; VERIFY_r14 tests_ok false).  This
-# window leads with the fingerprint-drifted rewrites, then the
-# oldest-verdict fill (the r12-era cohort: remaining sim_ann top-k
-# family, events_* windows, etc.).  Re-rotated WITHIN round 15 after
-# each batch of r15 rewrites (the kmeans/PCA Arrow-kernel commit
-# 5ec00cb added embedding_kmeans, embedding_pca_top2, kmeans_assign,
-# sim_semdedup to the drifted set — the same
-# rewrite-after-rotation staleness r14 shipped, caught by the guard
-# this time and fixed before the round closed), so the shipped window
-# always contains every query this round's commits touched.
-# Canonical computation: ``python tools/rotate_window.py`` (checked by
-# tests/test_driver_window.py).  Audit trail: no query has ever failed a
-# driver verdict and stayed failed.
+# The first 50 names the driver will hash. The window holds every query
+# that is unverified first: never driver-verified, recorded without a
+# content fingerprint (tools/qfp.py), or whose fingerprint differs from
+# the one recorded with its last green verdict in
+# tools/lifetime_driver_verified.json. The remaining
+# slots go to the queries whose last verdict is oldest (ties by name).
+# ``python tools/rotate_window.py`` computes it, and
+# tests/test_driver_window.py checks that this list equals that result.
 DRIVER_WINDOW: list[str] = [
     "corpus_systematic_sample",
     "corpus_token_budget_sample",
@@ -137,6 +77,7 @@ DRIVER_WINDOW: list[str] = [
     "embedding_pca_top2",
     "embedding_power_iteration",
     "embedding_pq_train",
+    "events_daily_mv_refresh",
     "events_key_skew_profile",
     "events_quantile_sketch_rollup",
     "flagship_profile",
@@ -144,6 +85,7 @@ DRIVER_WINDOW: list[str] = [
     "graph_common_neighbors_pruned",
     "graph_kcore_decomposition",
     "graph_negative_samples",
+    "join_bucketed",
     "kmeans_assign",
     "orders_open_backlog",
     "part_affinity",
@@ -155,6 +97,9 @@ DRIVER_WINDOW: list[str] = [
     "sim_semantic_decontaminate",
     "sim_semdedup",
     "vocab_coverage_curve",
+    "warehouse_csv_roundtrip",
+    "warehouse_json_roundtrip",
+    "warehouse_orc_roundtrip",
     "sim_ann_ivf_topk",
     "sim_ann_lsh_topk",
     "sim_ann_multiprobe_topk",
@@ -171,11 +116,6 @@ DRIVER_WINDOW: list[str] = [
     "doc_winnow",
     "events_active_streaks",
     "events_approx_percentile_bound",
-    "events_attribution",
-    "events_cusum_drift",
-    "events_daily_from_hourly",
-    "events_daily_mv_refresh",
-    "events_distinct_sketch_rollup",
 ]
 
 

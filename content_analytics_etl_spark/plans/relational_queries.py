@@ -12,13 +12,13 @@ queries partition by a key (never a global window without partitioning).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.skew import salted_join
-from ._util import davg, dec, dsum, source_fingerprint, t, warehouse_root
+from ..index_store import index_version, persisted_index, source_fingerprint
+from ..schemas import STAR_SCHEMAS
+from ._util import davg, dec, dsum, t
 
 # ---------------------------------------------------------------------------
 # Join family
@@ -211,36 +211,32 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUCKETS = 8
 
 
-def _bucketed_name(sf_dir: str, table: str) -> str:
-    # Keyed by source CONTENT (file sizes/mtimes), not just the path:
-    # regenerated data at the same sf_dir gets a fresh bucketed table
-    # instead of a stale catalog hit.
-    return f"{table}_b_{source_fingerprint(sf_dir, table)}"
+def _bucketed(spark: SparkSession, sf_dir: str, table: str, key: str) -> DataFrame:
+    """``table`` as a persisted index bucketed and sorted on ``key``."""
+    return persisted_index(
+        spark,
+        f"{table}_bucketed",
+        sf_dir,
+        source_fingerprint(sf_dir, table),
+        index_version(STAR_SCHEMAS[table].simpleString(), key, _BUCKETS),
+        lambda: t(spark, sf_dir, table),
+        bucket_cols=(key,),
+        n_buckets=_BUCKETS,
+        sort_cols=(key,),
+    )
 
 
 def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-free fact-fact join via bucketing: orders and lineitem are
-    written ONCE per sf_dir as bucketed+sorted tables on the join key
-    (8 buckets, spark-warehouse); the recurring join then plans a
-    sort-merge with NO Exchange on either side — the co-located-join
-    strategy for joins that repeat across a pipeline
-    (tests/test_bucketed_join.py asserts the exchange-free plan for this
-    registered query). At 100 TB this converts every repeat of the
-    orders⋈lineitem join from two fact shuffles to zero."""
-    for table, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        name = _bucketed_name(sf_dir, table)
-        if not spark.catalog.tableExists(name):
-            (
-                t(spark, sf_dir, table)
-                .write.bucketBy(_BUCKETS, key)
-                .sortBy(key)
-                .mode("overwrite")
-                .format("parquet")
-                .option("path", os.path.join(warehouse_root(spark), name))
-                .saveAsTable(name)
-            )
-    li = spark.table(_bucketed_name(sf_dir, "lineitem"))
-    o = spark.table(_bucketed_name(sf_dir, "orders")).hint("merge")
+    persisted indexes (``index_store``) bucketed and sorted on the join
+    key; the recurring join then plans a sort-merge with NO Exchange on
+    either side — the co-located-join strategy for joins that repeat
+    across a pipeline (tests/test_bucketed_join.py asserts the
+    exchange-free plan for this registered query). At 100 TB this
+    converts every repeat of the orders⋈lineitem join from two fact
+    shuffles to zero."""
+    li = _bucketed(spark, sf_dir, "lineitem", "l_orderkey")
+    o = _bucketed(spark, sf_dir, "orders", "o_orderkey").hint("merge")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("o_orderpriority")

@@ -57,10 +57,10 @@ from ..operators.similarity import (
     hyperplane_matrix,
     pq_argmin_codes,
 )
-from ..cache import session_materialized
+from ..cache import materialize_and_release, session_materialized
 from ..frames import local_frame
-from ..index_store import index_version, persisted_index
-from ._util import materialize_and_release, source_fingerprint, t
+from ..index_store import index_version, persisted_index, source_fingerprint
+from ._util import t
 
 DIM = 64
 # Round-10 ANN operating point (VERDICT r9 #8): k = 10 (the audit is
@@ -1380,8 +1380,10 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-cluster vec_id with cosine ≥ ``SEMDEDUP_COSINE``; the kept set
     is exactly the rows with ``is_dup = false``.
 
-    Scale shape: assignment is the broadcast-centroid rank-1 window
-    (``kmeans_assign``); the pair search is an equi-join on ``cid``. The
+    Scale shape: assignment is the row-local Arrow argmin
+    (``d2_argmin_assign``) against the collected k-row centroid
+    relation, with no exchange; the pair search is an equi-join on
+    ``cid``. The
     within-cluster scan is quadratic in CLUSTER size, not corpus size —
     SemDeDup's contract is that k grows with the corpus (k ≈ N/target
     cluster size), holding per-cluster work constant, so total pair work
@@ -1398,12 +1400,8 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", to_double_array("embedding").alias("v"))
         .withColumn("nrm", l2_norm(F.col("v")))
     )
-    # r15: assignment via the row-local d2_argmin_assign Arrow kernel
-    # (collected bounded k-row centroid relation) instead of the
-    # broadcast crossJoin × rank-1 window — drops the corpus-wide
-    # partitionBy(vec_id) exchange AND the e ⋈ assigned re-join (nrm
-    # rides through the kernel as a passthrough column); bit-identical
-    # d2 fold and tie rule, so the query stays oracle-exact.
+    # nrm rides through the kernel as a passthrough column, so the
+    # assigned frame needs no re-join with e
     cent_rows = [
         (r["cid"], r["cv"])
         for r in e.filter(F.col("vec_id") < KMEANS_K)
@@ -2175,9 +2173,10 @@ def embedding_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the per-(subspace, centroid, dimension) old→new component table
     a trainer would feed back into the next iteration.
 
-    Scale shape: identical to the encoder — the KS·M-row codebook
-    broadcasts, the corpus slices shuffle-free, one argmin window on
-    (vec_id, m) and one keyed mean per (m, k, dim). The per-dim mean is
+    Scale shape: identical to the encoder — the KS·M-row codebook is
+    collected, the corpus slices shuffle-free, a row-local Arrow argmin
+    (``pq_argmin_codes``) assigns each (vec_id, m) with no exchange,
+    and one keyed mean runs per (m, k, dim). The per-dim mean is
     an exact BIGINT sum of 1e-9-grid fixed-point components over an
     exact integer count, so the new codebook is bit-identical under any
     partitioning and across engines."""
@@ -2203,10 +2202,8 @@ def embedding_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = sub.filter(F.col("vec_id").between(1, PQ_KS)).select(
         "m", F.col("vec_id").cast("int").alias("k"), F.col("subv").alias("cv")
     )
-    # r14 optimization: row-local Arrow argmin against the collected
-    # codebook (see _pq_code_table — removes the N·PQ_M·PQ_KS broadcast
-    # join + (vec_id, m) rank-window shuffle; bit-identical d2 fold and
-    # tie rule via pq_argmin_codes).
+    # row-local Arrow argmin against the collected codebook, with the
+    # oracle's d2 fold and tie rule (pq_argmin_codes)
     assigned = pq_argmin_codes(
         sub, cb.collect(), passthrough=("subv",)
     ).select("m", "k", "subv")

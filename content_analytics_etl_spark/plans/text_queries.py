@@ -19,14 +19,9 @@ from ..functions.hashing import md5_fingerprint
 from ..functions.text_metrics import marker_hits, norm_text, tokens
 from ..operators.dedup import shingle_rows
 from ..operators.prefix_sum import distributed_prefix_sum, ieee_bucket_asc, ieee_bucket_desc
-from ..cache import session_materialized
-from ._util import (
-    DEC,
-    materialize_and_release,
-    rank_limited,
-    source_fingerprint,
-    t,
-)
+from ..cache import materialize_and_release, session_materialized
+from ..index_store import source_fingerprint
+from ._util import DEC, rank_limited, t
 
 # Marker vocabularies for the language-ID heuristic. The synthetic corpus
 # draws from one shared vocabulary, so these partition that vocabulary

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..index_store import materialize_once
 from ..schemas import STAR_SCHEMAS, TABLE_NAMES, VIEWING_LOG_SCHEMA
 
 __all__ = [
@@ -95,11 +96,9 @@ def _layout_stats_cached(path: str, mtime_ns: int) -> tuple[int, int]:
     return m.num_rows, m.num_row_groups
 
 
-def _scan_parallel_dir(
-    spark: SparkSession, path: str, name: str
-) -> tuple[str, int] | None:
-    """``(dir, ways)`` for a multi-file copy of ``path`` when the source
-    layout cannot feed the work it carries, else None.
+def _scan_split(spark: SparkSession, path: str, name: str) -> tuple[str, int] | None:
+    """``(content key, ways)`` of a multi-file copy of ``path`` when the
+    source layout cannot feed the work it carries, else None.
 
     Spark's parquet split granularity is the ROW GROUP: the testdata
     generator writes each table as ONE file with ~1M-row row groups, so
@@ -107,22 +106,16 @@ def _scan_parallel_dir(
     pre-shuffle operator chain: decode, filter, partial agg, tokenize,
     explode — in ONE task on a 32-core session, whatever
     ``maxPartitionBytes`` says. Production data arrives as many files
-    and never trips this; when a source CAN'T parallelize, the engine
-    materializes a size-adaptive copy once per content fingerprint (the
-    same write-once-per-fingerprint discipline as the date-partitioned
-    and bucketed layouts) and scans that.  ``ways`` is
-    ``min(cores, ceil(rows / rows_per_task))`` (SCAN_ROWS_PER_TASK) —
-    a flat cores-way split is pure per-file overhead on MB-scale
-    tables (PERF 36). Kill switch: ``SPARK_GRAFT_SCAN_LAYOUT=off``.
+    and never trips this; when a source CAN'T parallelize, ``load_table``
+    scans a size-adaptive copy, a derived layout
+    ``scan_parallel_{name}`` of the source file (``index_store``).
+    ``ways`` is ``min(cores, ceil(rows / rows_per_task))``
+    (SCAN_ROWS_PER_TASK) — a flat cores-way split is pure per-file
+    overhead on MB-scale tables (PERF 36).
 
-    Dir name = source tag + content key (size, mtime, declared schema)
-    + ``w{ways}``, so a testdata regen or a STAR_SCHEMAS change never
-    reads a stale copy. The content key and the split width are SEPARATE
-    name components: pruning removes only dirs whose content key is
-    stale, never a same-content copy with a different ``ways`` that a
-    concurrent session with a different parallelism may be mid-read."""
-    if os.environ.get("SPARK_GRAFT_SCAN_LAYOUT", "on") == "off":
-        return None
+    The content key covers the file's size and mtime and the declared
+    schema; the split width is the layout's ``_w{ways}`` suffix, so
+    sessions of different parallelism share one content key."""
     if not os.path.isfile(path):
         return None  # directory sources are already multi-file
     st = os.stat(path)
@@ -132,18 +125,11 @@ def _scan_parallel_dir(
     ways = min(cores, -(-rows // target))
     if rows < SCAN_LAYOUT_MIN_ROWS or ways < 2 or rgs >= ways:
         return None
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    if wh.startswith("file:"):
-        wh = "/" + wh[len("file:"):].lstrip("/")
-    src_tag = hashlib.md5(path.encode()).hexdigest()[:8]
     key = hashlib.md5(
         f"{st.st_size}:{st.st_mtime_ns}:"
         f"{STAR_SCHEMAS[name].simpleString()}".encode()
     ).hexdigest()[:12]
-    return (
-        os.path.join(wh, f"scan_parallel_{name}_{src_tag}_{key}_w{ways}"),
-        ways,
-    )
+    return key, ways
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -162,10 +148,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     writer never silently corrupts timestamps.
 
     Single-file sources whose row-group layout cannot feed the session's
-    cores are transparently served from a cores-way multi-file copy
-    (``_scan_parallel_dir`` — written once per content fingerprint,
-    row-identical, so every result is unchanged by construction under
-    the engine's order-independence discipline).
+    cores are served from a row-identical multi-file copy
+    (``_scan_split``), so every result is unchanged under the engine's
+    order-independence discipline.
     """
     if name not in STAR_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
@@ -186,40 +171,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ).select(*[f.name for f in schema.fields])
         return spark.read.schema(schema).parquet(path)
 
-    layout = _scan_parallel_dir(spark, path, name)
-    if layout is None:
+    split = _scan_split(spark, path, name)
+    if split is None:
         return _source()
-    par, ways = layout
-    if not os.path.exists(os.path.join(par, "_SUCCESS")):
-        tmp = f"{par}.tmp-{os.getpid()}"
-        _source().repartition(ways).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, par)
-        except OSError:  # concurrent writer won the rename — use theirs
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(par, "_SUCCESS")):
-                raise  # rename failed for a real reason (perms, EXDEV)
-        # prune superseded copies for this source path (testdata regen,
-        # schema change) — each strands a dir.  Copies sharing the
-        # CONTENT key but differing in ``ways`` are kept: a concurrent
-        # session with a different defaultParallelism may be mid-read of
-        # its own width, and deleting it would fail that session's
-        # in-flight scans with missing-file errors.
-        base = os.path.basename(par)          # ..._{key}_w{ways}
-        prefix = base.rsplit("_", 2)[0] + "_"  # scan_parallel_{name}_{src}_
-        live_key = base.rsplit("_", 2)[1]      # content fingerprint
-        parent = os.path.dirname(par)
-        for d in os.listdir(parent):
-            if (
-                d.startswith(prefix)
-                and ".tmp-" not in d  # a concurrent writer's live dir
-                and d.rsplit("_", 2)[1] != live_key  # stale content only
-            ):
-                import shutil
-
-                shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+    key, ways = split
+    par = materialize_once(
+        spark,
+        f"scan_parallel_{name}",
+        path,
+        key,
+        lambda tmp: _source().repartition(ways).write.mode("overwrite").parquet(tmp),
+        suffix=f"_w{ways}",
+    )
     return spark.read.schema(schema).parquet(par)
 
 

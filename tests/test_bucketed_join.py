@@ -74,3 +74,27 @@ def test_registered_bucketed_query_is_exchange_free(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
     assert "Exchange" not in plan.split("SortMergeJoin")[-1]
+
+
+def test_registered_bucketed_tables_reused_from_disk(spark, sf_dir):
+    """The bucketed tables outlive the in-memory session catalog: once
+    they are dropped from it (as a new session starts without them),
+    join_bucketed re-registers the files on disk instead of rewriting
+    them."""
+    import os
+
+    from content_analytics_etl_spark.plans.relational_queries import join_bucketed
+
+    df = join_bucketed(spark, sf_dir)
+    rows = sorted(map(tuple, df.collect()))
+    files = {f: os.stat(f.removeprefix("file:")).st_mtime_ns for f in df.inputFiles()}
+    tables = {os.path.basename(os.path.dirname(f)) for f in files}
+    assert len(tables) == 2
+    for name in tables:
+        spark.sql(f"DROP TABLE {name}")
+
+    again = join_bucketed(spark, sf_dir)
+    assert sorted(map(tuple, again.collect())) == rows
+    assert {
+        f: os.stat(f.removeprefix("file:")).st_mtime_ns for f in again.inputFiles()
+    } == files

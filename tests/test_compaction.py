@@ -72,9 +72,9 @@ def test_mv_refresh_snapshot_reused_and_equals_full(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from content_analytics_etl_spark.plans._util import (
+    from content_analytics_etl_spark.index_store import (
+        layout_path,
         source_fingerprint,
-        warehouse_root,
     )
     from content_analytics_etl_spark.plans.analytics_queries import (
         events_daily_mv_refresh,
@@ -86,9 +86,11 @@ def test_mv_refresh_snapshot_reused_and_equals_full(spark, sf_dir):
     }
     from content_analytics_etl_spark.plans.analytics_queries import MV_CUTOFF
 
-    snap = os.path.join(
-        warehouse_root(spark),
-        f"events_daily_mv_{source_fingerprint(sf_dir, 'events')}_{MV_CUTOFF}",
+    snap = layout_path(
+        spark,
+        "events_daily_mv",
+        sf_dir,
+        f"{source_fingerprint(sf_dir, 'events')}_{MV_CUTOFF}",
     )
     mtime = os.path.getmtime(os.path.join(snap, "_SUCCESS"))
     time.sleep(0.05)
@@ -120,27 +122,26 @@ def test_mv_refresh_snapshot_reused_and_equals_full(spark, sf_dir):
 
 
 def test_warehouse_orc_roundtrip_write_once_and_prune(spark, sf_dir):
-    """The ORC materialization follows the scan-layout discipline: the
-    live fingerprint dir is written once (stable _SUCCESS mtime on a
+    """The ORC materialization is a derived layout (``index_store``):
+    the live fingerprint dir is written once (stable _SUCCESS mtime on a
     second call), stale-fingerprint dirs for the same source are
     pruned, and a concurrent writer's live ``.tmp-`` dir survives."""
     import time
 
-    from content_analytics_etl_spark.plans._util import (
+    from content_analytics_etl_spark.index_store import (
+        layout_path,
         source_fingerprint,
-        warehouse_root,
     )
     from content_analytics_etl_spark.plans.analytics_queries import (
         warehouse_orc_roundtrip,
     )
 
-    root = warehouse_root(spark)
-    stale = os.path.join(root, "orders_orc_deadbeef0000")
-    live_tmp = os.path.join(root, "orders_orc_deadbeef0000.tmp-99999")
+    stale = layout_path(spark, "orders_orc", sf_dir, "deadbeef0000")
+    live_tmp = f"{stale}.tmp-99999"
     # force a (re)write so the prune branch runs even if a prior test
     # session already materialized the live dir
     key = source_fingerprint(sf_dir, "orders")
-    live = os.path.join(root, f"orders_orc_{key}")
+    live = layout_path(spark, "orders_orc", sf_dir, key)
     import shutil
 
     shutil.rmtree(live, ignore_errors=True)
@@ -171,24 +172,23 @@ def test_warehouse_orc_roundtrip_write_once_and_prune(spark, sf_dir):
 
 
 def test_warehouse_json_roundtrip_write_once_and_lossless(spark, sf_dir):
-    """JSON-lines materialization follows the same write-once/prune
-    discipline as ORC, and doubles survive the text round-trip
-    bit-for-bit (shortest-repr write, nearest parse)."""
+    """JSON-lines materialization is a derived layout like the ORC one,
+    and doubles survive the text round-trip bit-for-bit (shortest-repr
+    write, nearest parse)."""
     import shutil
     import time
 
-    from content_analytics_etl_spark.plans._util import (
+    from content_analytics_etl_spark.index_store import (
+        layout_path,
         source_fingerprint,
-        warehouse_root,
     )
     from content_analytics_etl_spark.plans.analytics_queries import (
         warehouse_json_roundtrip,
     )
 
-    root = warehouse_root(spark)
-    stale = os.path.join(root, "customer_json_deadbeef0000")
+    stale = layout_path(spark, "customer_json", sf_dir, "deadbeef0000")
     key = source_fingerprint(sf_dir, "customer")
-    live = os.path.join(root, f"customer_json_{key}")
+    live = layout_path(spark, "customer_json", sf_dir, key)
     shutil.rmtree(live, ignore_errors=True)
     os.makedirs(stale, exist_ok=True)
     open(os.path.join(stale, "_SUCCESS"), "w").close()
@@ -222,3 +222,28 @@ def test_warehouse_json_roundtrip_write_once_and_lossless(spark, sf_dir):
     time.sleep(0.05)
     warehouse_json_roundtrip(spark, sf_dir).collect()
     assert os.path.getmtime(os.path.join(live, "_SUCCESS")) == mtime
+
+
+def test_layouts_of_two_sources_coexist(spark, sf_dir, sf001_dir):
+    """Publishing a layout prunes only its own source's stale content:
+    the ORC round-trip of one corpus directory survives the build of
+    another's."""
+    import shutil
+
+    from content_analytics_etl_spark.index_store import (
+        layout_path,
+        source_fingerprint,
+    )
+    from content_analytics_etl_spark.plans.analytics_queries import (
+        warehouse_orc_roundtrip,
+    )
+
+    live = [
+        layout_path(spark, "orders_orc", d, source_fingerprint(d, "orders"))
+        for d in (sf_dir, sf001_dir)
+    ]
+    for d, path in zip((sf_dir, sf001_dir), live):
+        shutil.rmtree(path, ignore_errors=True)  # force the build
+        warehouse_orc_roundtrip(spark, d).collect()
+    for path in live:
+        assert os.path.exists(os.path.join(path, "_SUCCESS")), path

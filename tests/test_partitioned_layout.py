@@ -62,3 +62,36 @@ def test_registered_pruned_query_plan_and_oracle_shape(spark):
     assert {str(r["date"]) for r in rows} <= {
         "2024-01-10", "2024-01-11", "2024-01-12",
     }
+
+
+def test_partitioned_events_dir_publishes_once_and_prunes(
+    spark, sf_dir, monkeypatch
+):
+    """The date-partitioned events are a derived layout: written into a
+    ``.tmp-`` dir and renamed into place, and publishing prunes the
+    layout of a superseded content key."""
+    import os
+    import shutil
+
+    from content_analytics_etl_spark import index_store
+    from content_analytics_etl_spark.plans import events_queries
+
+    live = index_store.layout_path(
+        spark, "events_by_date", sf_dir, index_store.source_fingerprint(sf_dir, "events")
+    )
+    stale = index_store.layout_path(spark, "events_by_date", sf_dir, "deadbeef0000")
+    shutil.rmtree(live, ignore_errors=True)
+    os.makedirs(stale, exist_ok=True)
+    open(os.path.join(stale, "_SUCCESS"), "w").close()
+    written = []
+    write = events_queries.write_parquet_partitioned
+
+    def recording_write(df, path, *cols, **kw):
+        written.append(path)
+        write(df, path, *cols, **kw)
+
+    monkeypatch.setattr(events_queries, "write_parquet_partitioned", recording_write)
+    assert events_queries._partitioned_events_dir(spark, sf_dir) == live
+    assert written and all(".tmp-" in p for p in written), written
+    assert os.path.exists(os.path.join(live, "_SUCCESS"))
+    assert not os.path.exists(stale), "superseded layout not pruned"

@@ -35,13 +35,14 @@ MAX_SHUFFLES = {
     "events_asof_join": 1,
     "events_range_join": 0,
     "doc_tfidf_top_terms": 4,
-    # dedup_minhash_lsh (reads the session-materialized _minhash_sig16
-    # producer), dedup_simhash (persists its 60-bit signature relation
-    # for both band self-join sides) and dedup_ngram_jaccard_prefix
-    # (persists the per-doc ranked array for its prefix and verify
-    # consumers, PERF 57) are unpinned: their pins were plan-text counts
-    # that repeated the cached lineage, and no walk count has been
-    # recorded for their current plans.
+    # each count includes, once, the build of the relation the query
+    # reads from the session cache or persists: the _minhash_sig16
+    # producer, the 60-bit signature relation feeding both band
+    # self-join sides, and the per-doc ranked array shared by the
+    # prefix and verify consumers (PERF 57)
+    "dedup_minhash_lsh": 6,
+    "dedup_simhash": 4,
+    "dedup_ngram_jaccard_prefix": 6,
     # the band relation, persisted since 49d84fe, feeds both sides of
     # the band-key join and is counted once: 9 before that persist, 6
     # after
@@ -76,12 +77,12 @@ MAX_SHUFFLES = {
     "doc_duplicated_spans": 6,
     # the plan text counted 4, repeating the prefix sum's persisted build
     "corpus_systematic_sample": 1,
-    # doc_kneser_ney_perplexity / doc_domain_surprisal (read the
-    # session-materialized _lm_token_counts/_lm_bigram_counts producers,
-    # VERDICT r8 #2) and doc_sparse_cosine_topk (persists its weight
-    # relation for 3 consumers) are unpinned: their pins were plan-text
-    # counts that repeated the cached lineage, and no walk count has
-    # been recorded for their current plans.
+    # the two LM queries' counts include the builds of the shared
+    # _lm_token_counts/_lm_bigram_counts producers; doc_sparse_cosine_topk's
+    # includes its weight relation, persisted for 3 consumers
+    "doc_kneser_ney_perplexity": 8,
+    "doc_domain_surprisal": 9,
+    "doc_sparse_cosine_topk": 11,
     # r9: 8 → 10 — the label join became FULL OUTER (one-sided labels
     # must appear; ADVICE r8), which Spark cannot broadcast, so both
     # sides exchange on label. Both are #labels-row constant-size

@@ -83,14 +83,15 @@ def test_band_tuning_reports_vacuous_configs(spark, alldistinct_dir):
 
 
 def test_warehouse_compact_write_once_and_prune(spark, sf_dir):
-    """The compaction materialization now follows the shared
-    materialize_once discipline (VERDICT r8 #6): stale-fingerprint dirs
-    are pruned, a concurrent writer's live .tmp- dir survives, and the
-    build-scoped fragment staging dir is removed after compaction."""
+    """The compaction materialization is a derived layout
+    (``index_store``): stale-content dirs are pruned, a concurrent
+    writer's live .tmp- dir survives, and the build-scoped fragment
+    staging dir is removed after compaction."""
     import os
     import shutil
 
-    from content_analytics_etl_spark.plans._util import (
+    from content_analytics_etl_spark.index_store import (
+        layout_path,
         source_fingerprint,
         warehouse_root,
     )
@@ -99,10 +100,10 @@ def test_warehouse_compact_write_once_and_prune(spark, sf_dir):
     )
 
     root = warehouse_root(spark)
-    stale = os.path.join(root, "orders_compact_deadbeef0000")
-    live_tmp = os.path.join(root, "orders_compact_deadbeef0000.tmp-99999")
+    stale = layout_path(spark, "orders_compact", sf_dir, "deadbeef0000")
+    live_tmp = f"{stale}.tmp-99999"
     key = source_fingerprint(sf_dir, "orders")
-    live = os.path.join(root, f"orders_compact_{key}")
+    live = layout_path(spark, "orders_compact", sf_dir, key)
     shutil.rmtree(live, ignore_errors=True)
     for d in (stale, live_tmp):
         os.makedirs(d, exist_ok=True)

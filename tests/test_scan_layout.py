@@ -7,17 +7,19 @@ pure per-file overhead on MB-scale tables."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from content_analytics_etl_spark.index_store import layout_path
 from content_analytics_etl_spark.session import get_spark
 from content_analytics_etl_spark.sources.readers import (
     SCAN_LAYOUT_MIN_ROWS,
     SCAN_ROWS_PER_TASK,
     SCAN_ROWS_PER_TASK_DEFAULT,
-    _scan_parallel_dir,
+    _scan_split,
     load_table,
 )
 
@@ -25,6 +27,28 @@ from content_analytics_etl_spark.sources.readers import (
 @pytest.fixture(scope="module")
 def spark():
     return get_spark("test-scan-layout")
+
+
+@pytest.fixture(autouse=True)
+def _remove_copies(spark, tmp_path):
+    """The sources are temp files, but their copies go to the session
+    warehouse: remove every copy of this test's source afterwards."""
+    yield
+    src = str(tmp_path / "customer.parquet")
+    prefix = layout_path(spark, "scan_parallel_customer", src, "")
+    root, base = os.path.split(prefix)
+    for d in os.listdir(root) if os.path.isdir(root) else []:
+        if d.startswith(base):
+            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+
+
+def _scan_parallel_dir(spark, src, name):
+    """``(dir, ways)`` of the copy ``load_table`` scans for ``src``."""
+    split = _scan_split(spark, src, name)
+    if split is None:
+        return None
+    key, ways = split
+    return layout_path(spark, f"scan_parallel_{name}", src, key, f"_w{ways}"), ways
 
 
 def _write_customer(dir_path, n):
@@ -112,23 +136,17 @@ def test_same_content_other_width_copy_survives_prune(spark, tmp_path):
     """A concurrent session with a different defaultParallelism keeps a
     same-content copy at a different ``ways``; our prune must leave it
     intact (deleting it would fail that session's in-flight scans with
-    missing-file errors — ADVICE r7), while stale-CONTENT dirs still go."""
+    missing-file errors), while stale-CONTENT dirs still go."""
     n = SCAN_ROWS_PER_TASK_DEFAULT * 2 + 500
     _write_customer(tmp_path, n)
     src = str(tmp_path / "customer.parquet")
-    par, ways = _scan_parallel_dir(spark, src, "customer")
-    other_width = par.rsplit("_", 1)[0] + f"_w{ways + 1}"
-    stale = par.rsplit("_", 2)[0] + "_deadbeef0000_w2"
+    key, ways = _scan_split(spark, src, "customer")
+    logical = "scan_parallel_customer"
+    other_width = layout_path(spark, logical, src, key, f"_w{ways + 1}")
+    stale = layout_path(spark, logical, src, "deadbeef0000", "_w2")
     for d in (other_width, stale):
         os.makedirs(d, exist_ok=True)
         open(os.path.join(d, "_SUCCESS"), "w").close()
     load_table(spark, str(tmp_path), "customer").count()  # write + prune
     assert os.path.exists(other_width), "live other-width copy was pruned"
     assert not os.path.exists(stale), "stale-content copy not pruned"
-
-
-def test_kill_switch(spark, tmp_path, monkeypatch):
-    _write_customer(tmp_path, SCAN_ROWS_PER_TASK_DEFAULT * 2)
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_LAYOUT", "off")
-    src = str(tmp_path / "customer.parquet")
-    assert _scan_parallel_dir(spark, src, "customer") is None
