@@ -10,7 +10,8 @@ dates on stdin and hard-code Windows paths (``ETL_full.py:17-18,153-154``).
     python -m content_analytics_etl_spark query NAME [--sf-dir DIR] [-n ROWS]
 
 ``etl`` runs the full pipeline (read → ETL → OLAP → save) over every
-``*.json(l)`` drop in ``--input``; a date range filters on the
+``*.json(l)`` drop at the top level of ``--input`` (subdirectories are
+not read); a date range filters on the
 ``log_date`` column parsed from the ``YYYYMMDD`` filename convention —
 on a date-partitioned lake the same predicate becomes partition pruning.
 ``ingest`` is the incremental (checkpointed, exactly-once-per-file)
@@ -27,6 +28,20 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 
+def _drop_files(spark, directory: str) -> list[str]:
+    """The ``*.json*`` files at the top level of ``directory``, listed on
+    the driver with Hadoop's ``globStatus``. Handing Spark the glob itself
+    reads the same files, but Spark first looks the literal pattern up as
+    a path and logs a WARN with a stack trace on every call."""
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(f"{directory}/*.json*")
+    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    files = sorted(st.getPath().toString() for st in fs.globStatus(pattern) or [] if st.isFile())
+    if not files:
+        raise FileNotFoundError(f"no *.json* drop files in {directory}")
+    return files
+
+
 def _cmd_etl(args: argparse.Namespace) -> int:
     from .pipeline import run_viewing_pipeline
     from .session import get_spark
@@ -35,7 +50,7 @@ def _cmd_etl(args: argparse.Namespace) -> int:
 
     spark = get_spark("etl")
     flat = read_viewing_log(
-        spark, f"{args.input}/*.json*", flatten=True, date_from_filename=True
+        spark, _drop_files(spark, args.input), flatten=True, date_from_filename=True
     )
     if args.start:
         flat = flat.filter(F.col("log_date") >= F.to_date(F.lit(args.start), "yyyyMMdd"))
@@ -90,7 +105,7 @@ def main(argv: list[str] | None = None) -> int:
     sub = p.add_subparsers(dest="cmd", required=True)
 
     etl = sub.add_parser("etl", help="run the viewing-log pipeline end-to-end")
-    etl.add_argument("--input", required=True, help="directory of *.json(l) drops")
+    etl.add_argument("--input", required=True, help="directory of *.json(l) drops (top level only)")
     etl.add_argument("--output", required=True)
     etl.add_argument("--start", help="YYYYMMDD inclusive")
     etl.add_argument("--end", help="YYYYMMDD inclusive")

@@ -15,7 +15,7 @@ Two tiers, per the scale story:
    100 TB path for near-dup detection.
 
 The Arrow kernels below (PQ codes, IVF cosine ranking, k-nearest by
-squared L2) score against a driver-collected matrix with the shared
+squared L2, within-cell cosine pairs) score with the shared
 NumPy core of functions/vectors.py (``fold_dot``/``fold_d2`` +
 ``select_topn``), so their scores and tie order are bit-identical to the
 fold expressions and the DuckDB oracles.
@@ -59,6 +59,7 @@ __all__ = [
     "exact_d2_topn_cogroup",
     "pq_argmin_codes",
     "cosine_rank_assign",
+    "cell_cosine_pairs",
 ]
 
 # Rows per kernel call: bounds a kernel's (rows × candidates) score
@@ -503,6 +504,61 @@ def cosine_rank_assign(
             StructField("crank", IntegerType(), False),
         ],
         assign if cent_sorted else None,
+    )
+
+
+def cell_cosine_pairs(index: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, vec_b, cosine) for every pair of ``index`` rows that share
+    a cell (``cid``), with ``vec_a < vec_b`` and ``cosine >= threshold``:
+    one grouped Arrow kernel in place of the self-join on ``cid`` and a
+    per-pair ``aggregate(zip_with(...))`` cosine.
+
+    BIT-IDENTICAL to that expression, ``dot_product(va, vb) / (na * nb)``:
+    the dot is ``fold_dot`` over ``CHUNK_ROWS``-row slices of the
+    id-sorted cell against the rows after the slice's first, and the
+    divide is the same single rounded operation. A pair sharing m cells
+    is emitted m times (bit-identical rows); the caller's ``distinct``
+    collapses them. A candidate pair whose norms multiply to zero, or
+    whose cosine is NaN (a NaN component), raises ``ValueError``: Spark
+    raised ``DIVIDE_BY_ZERO`` on the first under ANSI mode and emitted
+    the second, since its ``>=`` orders NaN above every number.
+
+    ``index`` needs (cid, vec_id, v array<double>, nrm double); per-task
+    memory is O(CHUNK_ROWS × |cell|) doubles."""
+    id_type = index.schema["vec_id"].dataType
+    schema = StructType(
+        [
+            StructField("vec_a", id_type),
+            StructField("vec_b", id_type),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id", kind="stable")
+        ids = pdf["vec_id"].to_numpy()
+        X = np.stack(pdf["v"].to_numpy())
+        nrm = pdf["nrm"].to_numpy()
+        outs = []
+        for s in range(0, len(ids), CHUNK_ROWS):  # a cell has ≥ 1 row
+            e = s + CHUNK_ROWS
+            upper = ids[s:e, None] < ids[None, s:]
+            den = nrm[s:e, None] * nrm[None, s:]
+            if (upper & (den == 0)).any():
+                raise ValueError("zero-norm vector in a candidate pair: its cosine is undefined")
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = fold_dot(X[s:e, None], X[None, s:]) / den
+            if (upper & np.isnan(cos)).any():
+                raise ValueError("NaN cosine in a candidate pair: a NaN vector component")
+            i, j = np.nonzero(upper & (cos >= threshold))
+            outs.append((ids[s + i], ids[s + j], cos[i, j]))
+        a, b, c = (np.concatenate(cols) for cols in zip(*outs))
+        return pd.DataFrame({"vec_a": a, "vec_b": b, "cosine": c})
+
+    return (
+        index.select("cid", "vec_id", "v", "nrm")
+        .groupBy("cid")
+        .applyInPandas(kernel, schema=schema)
     )
 
 

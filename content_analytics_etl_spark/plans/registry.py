@@ -92,6 +92,7 @@ DRIVER_WINDOW: list[str] = [
     "part_revenue_abc",
     "sim_ann_recall_audit",
     "sim_dim_truncation_recall",
+    "sim_neardup_clustered",
     "sim_neardup_recall_audit",
     "sim_range_search",
     "sim_semantic_decontaminate",
@@ -115,7 +116,6 @@ DRIVER_WINDOW: list[str] = [
     "doc_rake_keywords",
     "doc_winnow",
     "events_active_streaks",
-    "events_approx_percentile_bound",
 ]
 
 

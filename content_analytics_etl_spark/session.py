@@ -35,6 +35,17 @@ a ``-XX:Tier4...`` value included, still apply and win. They reach only a driver
 launches; a spark-submit'd driver and the executors keep HotSpot's
 defaults.
 
+Python workers fork from the package's own daemon
+(``spark.python.daemon.module`` = ``WORKER_DAEMON``), which runs
+PySpark's after one fix: on CPython < 3.12 every task's
+``importlib.invalidate_caches()`` re-read the zip directory of
+``pyspark.zip``, py4j and the spark-core jar once per importer (16 in
+an Arrow kernel's worker), 0.18-0.25 CPU-s per task; the daemon
+re-reads an archive only when its mtime or size changed
+(worker_daemon.py). So every worker must be able to import this
+package, as the Arrow kernels already require; a deployment that
+cannot sets ``pyspark.daemon`` back through ``extra_conf``.
+
 Streaming checkpoints are written through Hadoop's ``FileSystem`` API
 (``spark.sql.streaming.checkpointFileManagerClass``). Spark's default
 ``FileContext`` manager resolves symlinks on every rename, and without
@@ -63,6 +74,10 @@ DRIVER_JIT_OPTIONS = (
     " -XX:Tier4CompileThreshold=150000"
     " -XX:Tier4BackEdgeThreshold=400000"
 )
+
+# Python workers fork from this daemon (worker_daemon.py): PySpark's own,
+# after it stops every task from re-reading the zip archives it imports from.
+WORKER_DAEMON = f"{__package__}.worker_daemon"
 
 CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -118,6 +133,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
+        .config("spark.python.daemon.module", WORKER_DAEMON)
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _machine_driver_mem(),

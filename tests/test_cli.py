@@ -104,6 +104,21 @@ def test_cli_etl_matches_reference_simulation(spark, tmp_path, capsys):
     assert wrote == len(got)
 
 
+def test_cli_etl_reads_only_top_level_drops(spark, tmp_path, capsys):
+    # an archive of processed drops and a key=value folder under the drop
+    # directory are neither read nor taken for partition columns
+    drops = tmp_path / "drops"
+    _write_drops(drops)
+    for sub in ("archive", "date=20220402"):
+        (drops / sub).mkdir()
+        (drops / sub / "20220402.json").write_text(_src("SUBDIR", "SD", 100, "VOD") + "\n")
+    out = tmp_path / "profiles"
+    wrote = _etl(str(drops), str(out), capsys)
+    assert wrote == len(_reference_sim([r for d in ("20220402", "20220403") for r in DAYS[d]]))
+    (csv_file,) = glob.glob(f"{out}/part-*.csv")
+    assert "SUBDIR" not in open(csv_file).read()
+
+
 def test_cli_etl_leaves_nothing_cached(spark, tmp_path, capsys):
     # each call reads a new drop directory, as each day's job does; a
     # cached input of an earlier call would not be reused, only kept

@@ -160,8 +160,8 @@ def test_no_zero_norm_embeddings():
 def test_clus_index_persisted_bucketed_scan(spark, sf001_dir):
     """VERDICT r13 #3: the clustered near-dup index is a durable
     cid-bucketed warehouse table; the pair scan READS it (no rebuild)
-    and its cid self-join is exchange-free on both sides — the only
-    Exchange left in the whole plan is the final distinct's."""
+    and groups it by cid with no exchange — the only Exchange left in
+    the whole plan is the final distinct's."""
     from content_analytics_etl_spark.plans.similarity_queries import (
         _clus_assigned,
         sim_neardup_clustered,
@@ -204,9 +204,9 @@ def test_clus_index_persisted_bucketed_scan(spark, sf001_dir):
     )
     assert names[0] in plan  # the scan reads the persisted table
     assert "FlatMapCoGroupsInPandas" not in plan  # ...not a rebuild
-    # bucketed self-join: exactly one Exchange — the final distinct's
-    # (hashpartitioning on the pair columns); the cid join itself reads
-    # co-located buckets on both sides
+    # bucketed scan: exactly one Exchange — the final distinct's
+    # (hashpartitioning on the pair columns); the per-cid pair kernel
+    # reads co-located buckets
     import re as _re
 
     exchanges = _re.findall(r"^\(\d+\) Exchange", plan, _re.MULTILINE)

@@ -1,18 +1,25 @@
 """The shared NumPy scoring core (``functions/vectors.py``: ``fold_dot``,
 ``fold_d2``, ``select_topn``) and the loud preconditions of the Arrow
 kernels built on it: a score with no defined rank raises instead of
-being ranked where one engine would put it."""
+being ranked where one engine would put it, and a kernel's scores are
+the fold expressions' doubles."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from content_analytics_etl_spark.functions.vectors import (
+    dot_product,
     fold_d2,
     fold_dot,
+    l2_norm,
     select_topn,
 )
+from content_analytics_etl_spark.operators.similarity import cell_cosine_pairs
 
 
 def test_folds_match_python_left_fold():
@@ -84,3 +91,107 @@ def test_d2_argmin_nan_component_raises(spark):
     )
     with pytest.raises(Exception, match="NaN score"):
         d2_argmin_assign(corpus, [(0, [0.0, 0.0]), (1, [1.0, 1.0])]).collect()
+
+
+def _cells(spark, rows):
+    """(cid, vec_id, v, nrm) index rows, the norm from the fold expression."""
+    return spark.createDataFrame(
+        rows, "cid int, vec_id long, v array<double>"
+    ).withColumn("nrm", l2_norm(F.col("v")))
+
+
+def _hof_pairs(m, threshold):
+    """The cid self-join with the interpreted fold cosine that
+    ``cell_cosine_pairs`` replaces."""
+    av = m.select(
+        "cid", F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na_")
+    )
+    bv = m.select(
+        "cid", F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb_")
+    )
+    cos = dot_product(F.col("va"), F.col("vb")) / (F.col("na_") * F.col("nb_"))
+    return (
+        av.join(bv, "cid")
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b", cos.alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
+# cos(EDGE_A, EDGE_B) is exactly 0.45 as a double, norms included
+EDGE_A, EDGE_B = [1.0, 0.0], [0.45, 0.8930285549745876]
+
+
+def _edge_cells(spark):
+    return _cells(
+        spark,
+        [
+            (1, 1, EDGE_A),
+            (1, 2, EDGE_B),
+            (1, 3, [1.0, 0.01]),  # (1, 3) is a pair of cells 1 and 2
+            (1, 4, [-1.0, 0.0]),
+            (2, 3, [1.0, 0.01]),
+            (2, 1, EDGE_A),
+            (2, 5, [0.3, 0.9]),
+            (3, 6, [0.2, 0.7]),  # a one-row cell
+        ],
+    )
+
+
+@pytest.mark.parametrize("threshold", [0.45, 1.1])  # 1.1: an empty result
+def test_cell_cosine_pairs_matches_fold_expression(spark, threshold):
+    """Row for row and bit for bit, duplicates included: the kernel
+    emits a pair once per cell it shares, as the self-join did."""
+    m = _edge_cells(spark)
+    want_df = _hof_pairs(m, threshold)
+    got_df = cell_cosine_pairs(m, threshold)
+    assert [(f.name, f.dataType) for f in got_df.schema] == [
+        (f.name, f.dataType) for f in want_df.schema
+    ]
+    want = sorted(map(tuple, want_df.collect()))
+    got = sorted(map(tuple, got_df.collect()))
+    assert got == want
+    if threshold == 0.45:
+        assert (1, 2, 0.45) in got  # the boundary is kept
+        assert [r[:2] for r in got].count((1, 3)) == 2
+        assert not any(6 in r[:2] for r in got)
+    else:
+        assert got == []
+
+
+def test_cell_cosine_pairs_fold_parity_random(spark):
+    """Every pair of three random cells (threshold -2 keeps them all):
+    the kernel's cosines are the fold expression's doubles."""
+    rng = np.random.default_rng(14)
+    rows = [
+        (int(c), int(i), [float(x) for x in rng.uniform(-1, 1, 13)])
+        for i, c in enumerate(rng.integers(0, 3, 40))
+    ]
+    m = _cells(spark, rows)
+    want = sorted(map(tuple, _hof_pairs(m, -2.0).collect()))
+    got = sorted(map(tuple, cell_cosine_pairs(m, -2.0).collect()))
+    assert len(got) > 100 and got == want
+
+
+@pytest.mark.parametrize(
+    "vec, match",
+    [([0.0, 0.0], "zero-norm"), ([float("nan"), 1.0], "NaN cosine")],
+)
+def test_cell_cosine_pairs_undefined_cosine_raises(spark, vec, match):
+    """Under ANSI mode Spark raised DIVIDE_BY_ZERO on a zero-norm pair,
+    and it emitted a NaN cosine as a pair (its >= orders NaN above
+    0.45); the kernel raises on both."""
+    m = _cells(spark, [(1, 1, [1.0, 0.0]), (1, 2, vec), (2, 3, [0.5, 0.5])])
+    with pytest.raises(Exception, match=match):
+        cell_cosine_pairs(m, 0.45).collect()
+
+
+def test_neardup_clustered_scores_in_one_grouped_kernel(spark, sf001_dir):
+    """The warm pair scan reads the persisted index into one grouped
+    Arrow kernel: no interpreted fold cosine is left in its plan."""
+    from content_analytics_etl_spark.plans.similarity_queries import sim_neardup_clustered
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    plan = sim_neardup_clustered(spark, sf001_dir)._jdf.queryExecution().explainString(mode)
+    assert not re.search(r"\b(zip_with|aggregate)\(", plan), plan
+    assert len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.MULTILINE)) == 1, plan
