@@ -29,8 +29,7 @@ def materialize_and_release(result: DataFrame, *intermediates: DataFrame) -> Dat
     The intermediates are released in a ``finally`` so a failed
     materialize (executor OOM mid-sweep, cancelled job) cannot pin them
     for the session lifetime; only on failure is the half-built result
-    cache dropped too (ADVICE r8: the sparse-cosine weight relation
-    stayed pinned when the count threw)."""
+    cache dropped too, so a count that throws leaves nothing pinned."""
     out = result.persist()
     ok = False
     try:
@@ -62,7 +61,7 @@ _LOCK = threading.RLock()
 # (the part before the fingerprint).  The session cache makes every
 # later invocation a cache read, so without this a regression in the
 # producer pipeline itself is invisible to the bench — bench.py emits
-# it as ``producer_build_seconds`` (VERDICT r7 #3).
+# it as ``producer_build_seconds``.
 BUILD_SECONDS: dict[str, float] = {}
 
 

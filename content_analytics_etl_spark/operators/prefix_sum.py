@@ -22,11 +22,11 @@ Because the summed values are integers (callers pass fixed-point
 bit-identical to the global running fold a single-threaded oracle
 computes.
 
-Determinism matters beyond tidiness: the previous implementation tagged
-rows with ``spark_partition_id()`` after ``repartitionByRange``, whose
-boundary SAMPLING can differ between evaluations — on executor loss a
-recomputed partition could silently receive different pids between the
-offsets pass and the window pass (ADVICE r5). A pid computed from row
+Determinism matters beyond tidiness: a pid read from
+``spark_partition_id()`` after ``repartitionByRange`` would depend on
+boundary SAMPLING, which can differ between evaluations, so on executor
+loss a recomputed partition could receive different pids between the
+offsets pass and the window pass. A pid computed from row
 values alone is reproducible under any recomputation, so the persist
 below is purely a performance choice (avoid re-running the upstream
 aggregate for both passes), never a correctness dependency.

@@ -18,7 +18,10 @@ python tools/audit_plans.py > /tmp/round_gate_audit.log 2>&1 \
 tail -1 /tmp/round_gate_audit.log
 
 echo "== 2/4 pytest =="
-python -m pytest tests/ -x -q > /tmp/round_gate_pytest.log 2>&1 \
+# the ROADMAP's Tier-1 command: every test runs, none is masked by -x
+env SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors \
+  -p no:cacheprovider > /tmp/round_gate_pytest.log 2>&1 \
   || { tail -15 /tmp/round_gate_pytest.log; exit 1; }
 tail -1 /tmp/round_gate_pytest.log
 
