@@ -23,8 +23,13 @@ def materialize_and_release(result: DataFrame, *intermediates: DataFrame) -> Dat
     references; without this, each invocation leaks that cache for the
     session lifetime (bench/correctness sweeps run all queries in one
     session). After this call the only pinned storage is the final
-    result, which the ContextCleaner reclaims once the DataFrame is
-    garbage-collected.
+    result. Spark's CacheManager keeps that entry for the session: it
+    is not reclaimed when the returned DataFrame is garbage-collected,
+    and the next call that builds the same plan finds it, so that
+    call's ``persist()`` reuses the cached rows instead of recomputing
+    them. Repeated identical calls therefore share one entry, and each
+    distinct plan (another ``sf_dir``, say) keeps one until
+    ``spark.catalog.clearCache()`` or the session ends.
 
     The intermediates are released in a ``finally`` so a failed
     materialize (executor OOM mid-sweep, cancelled job) cannot pin them

@@ -1521,18 +1521,6 @@ def decode_properties(assets: DataFrame) -> DataFrame:
     )
 
 
-def _fake_features(payload: bytes) -> list[float]:
-    """Deterministic stand-in for decode→embed: bucketed byte histogram,
-    L1-normalized. Pure bytes → floats; replaced by a real model/codec
-    in production without touching the plan. (Kept as the scalar
-    reference kernel; ``extract_features`` uses the vectorized twin.)"""
-    counts = [0] * FEATURE_DIM
-    for b in payload:
-        counts[b % FEATURE_DIM] += 1
-    total = float(len(payload)) or 1.0
-    return [c / total for c in counts]
-
-
 def extract_features(assets: DataFrame, batch_size_hint: int | None = None) -> DataFrame:
     """Arrow-batched feature extraction over payload bytes
     (``mapInPandas``): (asset_id, kind, n_bytes, f0..f{FEATURE_DIM-1}).
@@ -1541,10 +1529,13 @@ def extract_features(assets: DataFrame, batch_size_hint: int | None = None) -> D
     emitted as FEATURE_DIM scalar double columns (not array<double>):
     downstream sinks, the driver's hash canonicalization, and columnar
     stats all want scalars, and the width is a compile-time constant.
-    Per PERF finding 20, the histogram is numpy (frombuffer → bincount,
-    one (rows × FEATURE_DIM) matrix sliced into columns), not a per-byte
-    Python loop — bit-identical to ``_fake_features`` (integer counts,
-    one float64 division) at ~the Arrow transfer cost."""
+    The features are a deterministic stand-in for decode→embed: each
+    payload's bucketed byte histogram (byte value mod FEATURE_DIM),
+    L1-normalized (integer counts, one float64 division), replaceable
+    by a real model or codec without touching the plan. The histogram
+    is numpy (frombuffer → bincount, one (rows × FEATURE_DIM) matrix
+    sliced into columns), not a per-byte Python loop (PERF finding 20),
+    so it runs at about the Arrow transfer cost."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -57,32 +57,30 @@ def ieee_bucket_asc(col: str, sub_bits: int = _IEEE_SUB_BITS) -> Column:
     """Deterministic ascending-order bucket id for a POSITIVE numeric
     column, derived from the IEEE-754 binade structure of the value —
     pid = binade_exponent · 2^(sub_bits+2) + top-``sub_bits`` mantissa
-    bits.  Monotone non-decreasing in the value (the r15 replacement
-    for ``quantile_bucket_asc`` at call sites whose order key is the
-    bucketed column): the binade exponent is monotone, the scaled
-    mantissa is monotone within a binade, and a ±1 exponent slop at an
+    bits.  Monotone non-decreasing in the value, so it serves as the
+    pid of any prefix sum whose order key is the bucketed column: the
+    binade exponent is monotone, the scaled mantissa is monotone
+    within a binade, and a ±1 exponent slop at an
     exact power of two (floor(log2) rounding) only shifts the value
     into the adjacent sub-range of the SAME composite ordering — the
     ·2^(sub_bits+2) stride leaves room for the slopped sub value, so
     the composite never decreases.  Equal values always share a bucket
     (pure function of the value).
 
-    Unlike the quantile buckets this needs NO data pass — the
-    per-invocation ``approxQuantile`` driver action (a full pass over
-    the ranked relation) disappears from every prefix-sum query (guide
-    §1.2 step 1 / §5: no driver round-trip, one fewer pass).  The
-    trade is balance: buckets are equal-width in log-value rather than
+    Unlike quantile buckets, whose boundaries come from an
+    ``approxQuantile`` driver action (a full pass over the ranked
+    relation), this needs NO data pass: no driver round-trip and one
+    fewer pass per prefix-sum query.  The trade is balance: buckets are equal-width in log-value rather than
     equal-count (2^sub_bits buckets per binade), so a column whose mass
     sits in one narrow value range fills few buckets; tie-heavy columns
-    collapse ties into one bucket exactly as quantile boundaries did.
+    collapse ties into one bucket exactly as quantile boundaries do.
     Values ≤ 0 and NULL land in one sentinel bucket BELOW every
     positive bucket, and NaN in one bucket ABOVE them all, which is
     where Spark sorts each under ascending order with its default
     NULLS FIRST (NaN is the largest double).
 
     At 100 TB the collect stays O(#binades · 2^sub_bits) ≤ ~4k rows
-    for the full double range — same control-plane contract as the
-    quantile form."""
+    for the full double range: an O(#buckets) control-plane collect."""
     x = F.col(col).cast("double")
     e = F.greatest(
         F.lit(-1074.0), F.least(F.lit(1024.0), F.floor(F.log2(x)))
@@ -111,35 +109,6 @@ def ieee_bucket_desc(col: str, sub_bits: int = _IEEE_SUB_BITS) -> Column:
     return -ieee_bucket_asc(col, sub_bits)
 
 
-def quantile_bucket_desc(
-    df: DataFrame, col: str, num_buckets: int, rel_err: float = 0.001
-) -> Column:
-    """Deterministic descending-order bucket id for ``col``: boundaries
-    come from one driver-side ``approxQuantile`` pass, embedded as
-    LITERALS, so the per-row bucket expression is a pure function of the
-    row — pid 0 holds the largest values. Equal values always share a
-    bucket (pid = count of boundaries strictly greater), so any
-    tie-break ordering stays intact within one bucket."""
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    bounds = df.stat.approxQuantile(col, probs, rel_err)
-    barr = F.array(*[F.lit(float(b)) for b in sorted(bounds, reverse=True)])
-    return F.size(F.filter(barr, lambda b: b > F.col(col)))
-
-
-def quantile_bucket_asc(
-    df: DataFrame, col: str, num_buckets: int, rel_err: float = 0.001
-) -> Column:
-    """Ascending twin of :func:`quantile_bucket_desc`: pid 0 holds the
-    SMALLEST values (pid = count of boundaries strictly below the row's
-    value), monotone non-decreasing along ``col`` ascending — the pid
-    contract for prefix sums ordered low→high (Gini / Lorenz-curve
-    shapes). Equal values always share a bucket."""
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    bounds = df.stat.approxQuantile(col, probs, rel_err)
-    barr = F.array(*[F.lit(float(b)) for b in sorted(bounds)])
-    return F.size(F.filter(barr, lambda b: b < F.col(col)))
-
-
 def distributed_prefix_sum(
     spark: SparkSession,
     df: DataFrame,
@@ -157,10 +126,12 @@ def distributed_prefix_sum(
     monotone NON-DECREASING along ``order`` (see module docstring).
     Returns ``(frame, grand_total)``; the frame is returned through
     ``materialize_and_release`` (persisted, with the tagged intermediate
-    released), so the only pinned storage is the small result, which the
-    ContextCleaner reclaims once the caller's DataFrame is
-    garbage-collected — repeated calls in one session (bench /
-    correctness sweeps) do not accumulate caches. ``rank_col`` is a
+    released), so the only pinned storage is the small result. Spark's
+    CacheManager keeps that entry for the session rather than
+    reclaiming it when the caller's DataFrame is garbage-collected; a
+    repeated identical call reuses it instead of recomputing, so
+    repeated calls in one session (bench / correctness sweeps) share
+    one entry per distinct plan. ``rank_col`` is a
     BIGINT global row number (a 32-bit rank overflows past ~2.1B rows —
     well inside a 100 TB corpus); callers whose domain is provably small
     may downcast. The window partitions by the pid COLUMN, so hash

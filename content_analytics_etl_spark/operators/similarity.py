@@ -53,7 +53,6 @@ __all__ = [
     "hyperplane_matrix",
     "brute_topk",
     "add_hyperplane_bucket",
-    "hyperplane_bucket_agg",
     "hyperplane_band_rows",
     "map_chunks",
     "exact_d2_topn_cogroup",
@@ -138,98 +137,6 @@ def add_hyperplane_bucket(
     return df.withColumn(out_col, bucket)
 
 
-def hyperplane_bucket_agg(
-    df: DataFrame,
-    n_planes: int,
-    dim: int,
-    *,
-    seed: str = "lsh",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Signature bucket via explode→aggregate instead of per-row folds —
-    the shape for wide plane matrices (see operators/dedup.py module
-    docstring for why: higher-order folds are CodegenFallback and
-    CollapseProject re-inlines them into every downstream reference,
-    while an Aggregate is a hard boundary and the sums are whole-stage
-    codegen'd with map-side partials).
-
-    The ±1 plane values are derived IN-ENGINE from the same md5 formula
-    as ``hyperplane_matrix`` (bit 0 of ``portable_hash64("seed|p|pos")``)
-    rather than embedded as n_planes×dim literals — a 2048-literal plan
-    costs seconds of Catalyst analysis per query; the hash form is a
-    handful of expression nodes per plane.
-
-    Plane dots are decimal-exact sums (order-independent, identical in
-    any engine — plans/_util.py policy), so the sign bits and therefore
-    the bucket are engine-reproducible even though the input order of
-    the (pos, x) rows is arbitrary.
-
-    Shape: the (plane_idx, pos, pval) relation is generated from
-    ``spark.range`` (n_planes·dim rows, hash evaluated once per cell)
-    and broadcast onto the exploded (id, pos, x) rows; per-(id, plane)
-    decimal sums then per-id bucket assembly. Two compact shuffles
-    (n·planes tiny rows, then n rows), everything whole-stage codegen,
-    linear in corpus size.
-
-    Parallelism guard: a small parquet file scans as ONE partition, and
-    the heavy map side (n·dim·planes decimal multiply-adds) would then
-    run single-threaded — measured 4.4 s for 2000×64×32 at sf0.1 vs
-    ~1 s parallel. When the input scan has fewer partitions than the
-    session default, the exploded (id, pos, x) rows are hash-spread on
-    (id, pos) before the plane join; the shuffle moves n·dim compact
-    rows and the decimal sums are order-independent, so the result is
-    bit-identical. Repartitioning the pre-explode DataFrame instead
-    measured WORSE end-to-end (8 s — the pinned user exchange defeats
-    AQE's downstream coalescing); the (id, pos) spread keeps every
-    later exchange AQE-managed. On a real cluster the scan already has
-    plentiful partitions and the branch is a no-op."""
-    spark = df.sparkSession
-    ex = df.select(
-        id_col, F.posexplode(to_double_array(vec_col)).alias("pos", "x")
-    )
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        ex = ex.repartition(target, id_col, "pos")
-    pl = (
-        spark.range(n_planes * dim)
-        .select(
-            (F.col("id") / dim).cast("int").alias("plane_idx"),
-            (F.col("id") % dim).cast("int").alias("pos"),
-            F.concat(
-                F.lit(f"{seed}|"),
-                (F.col("id") / dim).cast("int").cast("string"),
-                F.lit("|"),
-                (F.col("id") % dim).cast("int").cast("string"),
-            ).alias("cell_key"),
-        )
-        .select(
-            "plane_idx",
-            "pos",
-            F.when(
-                portable_hash64(F.col("cell_key")).bitwiseAND(F.lit(1)) == 1,
-                F.lit(1.0),
-            )
-            .otherwise(F.lit(-1.0))
-            .alias("pval"),
-        )
-    )
-    dots = (
-        ex.join(F.broadcast(pl), "pos")
-        .groupBy(id_col, "plane_idx")
-        .agg(F.sum((F.col("x") * F.col("pval")).cast("decimal(28,12)")).alias("dot"))
-    )
-    return dots.groupBy(id_col).agg(
-        F.sum(
-            F.when(
-                F.col("dot") > 0,
-                F.expr("shiftleft(CAST(1 AS BIGINT), plane_idx)"),
-            ).otherwise(F.lit(0).cast("bigint"))
-        ).alias(out_col)
-    )
-
-
 def hyperplane_band_rows(
     df: DataFrame,
     params_rel: DataFrame,
@@ -256,17 +163,35 @@ def hyperplane_band_rows(
     ``(nb, w)`` BEFORE the explode join, so the dot work is
     ``n·dim·nb·w`` — the signature cost scales with the data-dependent
     knobs, not the static maxima (which only fix the family LAYOUT:
-    band b owns plane indices [b·band_bits, (b+1)·band_bits)).
-    Unlike ``hyperplane_bucket_agg`` there is no packed single-BIGINT
-    bucket (max_bands·band_bits may exceed 63 bits); bands are emitted
-    directly as rows, which is the shape every banded-LSH consumer
-    explodes to anyway.
+    band b owns plane indices [b·band_bits, (b+1)·band_bits)). There
+    is no packed single-BIGINT bucket (max_bands·band_bits may exceed
+    63 bits); bands are emitted directly as rows, which is the shape
+    every banded-LSH consumer explodes to anyway.
 
-    Plane values, decimal-exact dots, and the parallelism guard are
-    identical to ``hyperplane_bucket_agg`` (see its docstring); for the
-    same (band_idx, plane) cells the two produce identical sign bits, so
-    fixed-parameter consumers migrating to this form keep their result
-    sets bit-for-bit."""
+    Signatures come from explode→aggregate rather than per-row folds
+    (see operators/dedup.py module docstring for why: higher-order
+    folds are CodegenFallback and CollapseProject re-inlines them into
+    every downstream reference, while an Aggregate is a hard boundary
+    and the sums are whole-stage codegen'd with map-side partials).
+    The ±1 plane values are derived IN-ENGINE from the md5 formula of
+    ``hyperplane_matrix`` (bit 0 of ``portable_hash64("seed|p|pos")``)
+    rather than embedded as literals, which would cost seconds of
+    Catalyst analysis per query. Plane dots are decimal-exact sums
+    (order-independent, identical in any engine — plans/_util.py
+    policy), so the sign bits are engine-reproducible although the
+    input order of the (pos, x) rows is arbitrary.
+
+    Parallelism guard: a small parquet file scans as ONE partition, and
+    the heavy map side (n·dim·planes decimal multiply-adds) would then
+    run single-threaded — measured 4.4 s for 2000×64×32 at sf0.1 vs
+    ~1 s parallel. When the input scan has fewer partitions than the
+    session default, the exploded (id, pos, x) rows are hash-spread on
+    (id, pos) before the plane join; the shuffle moves n·dim compact
+    rows and the decimal sums are order-independent, so the result is
+    bit-identical. Repartitioning the pre-explode DataFrame instead
+    measured WORSE end-to-end (8 s — the pinned user exchange defeats
+    AQE's downstream coalescing). On a real cluster the scan already
+    has plentiful partitions and the branch is a no-op."""
     spark = df.sparkSession
     ex = df.select(
         id_col, F.posexplode(to_double_array(vec_col)).alias("pos", "x")

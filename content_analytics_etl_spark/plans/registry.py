@@ -73,6 +73,7 @@ DRIVER_WINDOW: list[str] = [
     "dedup_simhash",
     "doc_perplexity_buckets",
     "doc_winnow_overlap",
+    "embedding_drift_monitor",
     "embedding_kmeans",
     "embedding_pca_top2",
     "embedding_power_iteration",
@@ -87,35 +88,34 @@ DRIVER_WINDOW: list[str] = [
     "graph_negative_samples",
     "join_bucketed",
     "kmeans_assign",
+    "multimodal_audio_windows",
+    "multimodal_decode",
+    "multimodal_features",
+    "multimodal_frame_decode",
+    "multimodal_frame_plan",
+    "multimodal_gif_decode",
+    "multimodal_image_resize",
+    "multimodal_jpeg_decode",
+    "multimodal_metadata",
+    "multimodal_phash_dedup",
+    "multimodal_png_decode",
+    "multimodal_video_decode",
     "orders_open_backlog",
     "part_affinity",
     "part_revenue_abc",
+    "sim_ann_ivfpq_topk",
     "sim_ann_recall_audit",
     "sim_dim_truncation_recall",
+    "sim_mmr_diversify",
     "sim_neardup_clustered",
+    "sim_neardup_clustered_audit",
     "sim_neardup_recall_audit",
+    "sim_range_recall_audit",
     "sim_range_search",
     "sim_semantic_decontaminate",
     "sim_semdedup",
     "vocab_coverage_curve",
     "warehouse_csv_roundtrip",
-    "warehouse_json_roundtrip",
-    "warehouse_orc_roundtrip",
-    "sim_ann_ivf_topk",
-    "sim_ann_lsh_topk",
-    "sim_ann_multiprobe_topk",
-    "sim_ann_pq_adc",
-    "sim_neardup_pairs",
-    "vocab_zipf_fit",
-    "warehouse_compact_roundtrip",
-    "category_recode",
-    "corpus_bigram_novelty_decay",
-    "corpus_training_manifest",
-    "dedup_containment",
-    "doc_dup_aware_sampling",
-    "doc_rake_keywords",
-    "doc_winnow",
-    "events_active_streaks",
 ]
 
 

@@ -1,12 +1,12 @@
 """Similarity-search queries over ``embeddings`` (BASELINE extension).
 
-Scale contract (round-2 revision — the two round-1 weak marks fixed):
+Scale contract:
 
 - **Bounded query sets.** Every top-k query's query side is
   ``vec_id % QUERY_MOD == 0 AND vec_id < QUERY_CAP`` — at most
   ``QUERY_CAP / QUERY_MOD`` = 20 rows at ANY corpus size, so the
   broadcast is a constant, not a corpus fraction.
-- **No unbounded quadratic scan.** ``sim_neardup_pairs`` is now banded
+- **No unbounded quadratic scan.** ``sim_neardup_pairs`` is banded
   hyperplane-LSH candidate generation (equi-join, linear shuffle) +
   exact cosine verification — the same physical shape as
   ``dedup_minhash_lsh``. The exhaustive all-pairs form survives only as
@@ -54,7 +54,6 @@ from ..operators.similarity import (
     cosine_rank_assign,
     exact_d2_topn_cogroup,
     hyperplane_band_rows,
-    hyperplane_bucket_agg,
     hyperplane_matrix,
     pq_argmin_codes,
 )
@@ -64,42 +63,27 @@ from ..index_store import index_version, persisted_index, source_fingerprint
 from ._util import t
 
 DIM = 64
-# Round-10 ANN operating point (VERDICT r9 #8): k = 10 (the audit is
-# recall@10), IVF probes 2 → 4 of 8 cells, PQ codebooks 8 → 32
-# sub-centroids, multi-probe extended to 2-bit flips (22 probed
-# buckets). Measured recall@10 before → after in the
-# sim_ann_recall_audit docstring; constants are shared with every
-# oracle, so hash-exactness is preserved by construction.
+# ANN operating point: k = 10 (the audit is recall@10) and multi-probe
+# to 2-bit flips (22 probed buckets). Measured recall@10 is in the
+# sim_ann_recall_audit docstring; the constants are shared with every
+# oracle, so hash-exactness holds by construction.
 TOPK = 10
 ANN_TOPK = 10
-# ADC→exact re-rank shortlist size for the IVF-PQ path (VERDICT r10
-# #2, the standard FAISS posture): the ADC top-RERANK_K per query is
-# re-ranked by exact cosine against the raw vectors. A per-query
-# CONSTANT — the re-rank join is ≤ |queries|·RERANK_K rows at any
-# corpus size. 500 = 50·k, the deep end of the FAISS k′ range, chosen
-# from the MEASURED recall@10-vs-K curve on the scratch sf0.1 corpus
-# (ADC rank of each true top-10 neighbor, ~1017 probed candidates per
-# query): K=100 → 0.24, 200 → 0.37, 300 → 0.46, 500 → 0.56,
-# 1000 → 0.73 (= the in-probed-cells ceiling, ivf's recall). The curve
-# is barely above the diagonal because THIS corpus is near-random unit
-# vectors — 4×32 residual codebooks carry little ranking signal when
-# there is no low-dimensional structure to quantize, so the shortlist
-# must be deep to clear the ≥ 0.5 bar; on real embedding corpora
-# (strong cluster structure) the same plan holds recall at K ≈ 10·k.
-# Honest either way: the audit now reports both recall AND per-query
-# candidate cost, so the trade is visible, and the re-rank join cost
-# is noise next to the ADC pass at any K in this range.
-#
-# Round 13 (VERDICT r12 #4): the shortlist SCALES with the probed set.
-# A constant K=500 covered 49% of the ~1k probed candidates at sf0.1
-# but 8.8% of the ~5.7k at sf1 (recall@10 0.765 → 0.59) and keeps
-# shrinking at N^0.75; rerank_k = clamp(floor(RERANK_FRAC · nprobe ·
-# N / cells), RERANK_K, RERANK_K_CAP) holds the covered FRACTION at
-# sf0.1's measured operating point (0.5) instead, so recall stops
-# decaying with scale. Cost: the re-rank join is |queries| · rerank_k
-# rows ∝ N^0.75 — the same sublinear shape as the ADC pass it follows,
-# and a broadcast-sized relation at any N under the cap. RERANK_K
-# stays as the floor (small-N behavior unchanged below ~1k probed).
+# ADC→exact re-rank shortlist for the IVF-PQ path (the FAISS posture):
+# each query's ADC top-rerank_k is re-ranked by exact cosine against the
+# raw vectors, with rerank_k = clamp(floor(RERANK_FRAC · nprobe · N /
+# cells), RERANK_K, RERANK_K_CAP) (``_rerank_params_rel``). The
+# shortlist covers a fixed half of the probed candidates, so recall does
+# not decay with scale: a constant K = 500 covered 49% of the ~1k probed
+# candidates at sf0.1 but 8.8% of the ~5.7k at sf1 (recall@10 0.765 →
+# 0.59). The re-rank join is |queries| · rerank_k rows ∝ N^0.75, the
+# same sublinear shape as the ADC pass before it, and broadcast-sized
+# under the cap. RERANK_K is the floor. The shortlist is deep because
+# this corpus is near-random unit vectors, whose residual codes carry
+# little ranking signal: at sf0.1 recall@10 reads 0.24 / 0.37 / 0.46 /
+# 0.56 / 0.73 at K = 100 / 200 / 300 / 500 / 1000, the last being the
+# in-probed-cells ceiling. Corpora with cluster structure hold recall at
+# K ≈ 10·k with the same plan.
 RERANK_K = 500
 RERANK_FRAC = 0.5
 RERANK_K_CAP = 65536
@@ -108,75 +92,62 @@ NEARDUP_COSINE = 0.45
 SEMDECON_COSINE = 0.25  # looser than near-dup: eval leakage flags need recall
 QUERY_MOD = 50
 QUERY_CAP = 1000  # query set ≤ QUERY_CAP/QUERY_MOD = 20 rows at any scale
-# sim_neardup_exact diagnostic: ≤ C(3000,2) ≈ 4.5M pairs, ever. 1000
-# through round 10; raised in round 11 because the capped subpopulation
-# held only ~50 true pairs at the scratch scales, putting ±40% binomial
-# noise on the recall estimates the operating point is judged by.
+# sim_neardup_exact diagnostic: ≤ C(3000,2) ≈ 4.5M pairs, ever. A cap of
+# 1000 held only ~50 true pairs at the scratch scales, putting ±40%
+# binomial noise on the recall estimates the operating point is judged by.
 EXACT_CAP = 3000
-# IVF_CELLS survives only as the embedding_kmeans trainer's k (its
-# unrolled oracle inits from the k lowest vec_ids); the SERVING IVF
-# family's cell count and probe depth are data-derived since round 12
-# (_ivf_params_rel: cells = sqrt(N), nprobe = 3.4*sqrt(cells)).
+# IVF_CELLS is the embedding_kmeans trainer's k (its unrolled oracle
+# inits from the k lowest vec_ids); the serving IVF family's cell count
+# and probe depth are data-derived (_ivf_params_rel: cells = sqrt(N),
+# nprobe = 3.4*sqrt(cells)).
 IVF_CELLS = 8
 KMEANS_K = 8
-# Round 12: PQ_M 4 → 8 and PQ_KS 32 → 256 (a full byte per code, the
-# standard FAISS PQ8 configuration — codes are 8 bytes/vector, 32×
-# smaller than float32). Measured on the scratch corpora: 4×32
-# codebooks were information-starved on 64-d near-random vectors
-# (ADC-only recall@10 0.075; ivfpq post-re-rank 0.53 at 2k and a
-# shortlist-starved 0.25 at 20k). With 8×256: ADC-only 0.255/0.195,
-# ivfpq 0.765/0.59 at 2k/20k — past the ≥0.5 bar at BOTH scales with
-# the same fixed RERANK_K=500 shortlist. The ladder (evidence in the
-# audit docstring history): KS 32→256 at M=4 bought 0.25→0.43 at 20k;
-# M 4→8 at KS=256 bought 0.43→0.59. Costs: the code table build pays
-# N·M·KS sub-distance argmins (a one-time session-materialized index
-# build, exactly where production PQ spends its training budget), ADC
-# pays 8 partials per (query, cand) instead of 4.
+# PQ8: 8 subspaces × 256 sub-centroids, one byte per code, so codes are
+# 8 bytes/vector, 32× smaller than float32. Measured on the scratch
+# corpora at 2k/20k vectors: 4×32 codebooks were information-starved on
+# 64-d near-random vectors (ADC-only recall@10 0.075; ivfpq re-ranked
+# 0.53 / 0.25); 8×256 reads ADC-only 0.255 / 0.195 and ivfpq 0.765 / 0.59
+# with the same 500-row shortlist. KS 32 → 256 at M = 4 bought 0.25 →
+# 0.43 at 20k, M 4 → 8 at KS = 256 bought 0.43 → 0.59. Costs: the code
+# table build pays N·M·KS sub-distance argmins (a one-time index build),
+# and ADC sums 8 partials per (query, cand).
 PQ_M = 8  # subspaces
 PQ_SUB_DIM = DIM // PQ_M
 PQ_KS = 256  # sub-centroids per subspace (full 1-byte codes)
 
-# 4 bands × 8 bits for near-dup candidates (planes derived in-engine by
-# hyperplane_band_rows from the same md5 formula); 6 literal planes for
-# the ANN buckets.
-ND_BANDS = 4
-ND_BAND_BITS = 8
-# Corpus-size scaling for the near-dup LSH — the round-11 measured
-# operating point (VERDICT r9 #2 → r10 #1 → the round-11 sweep):
+# Near-dup LSH over the md5-seeded plane family (hyperplane_band_rows
+# derives the planes in-engine from the same md5 formula the oracle
+# uses); 6 literal planes for the ANN buckets. Corpus-size scaling
+# (measured, SCALE.md rounds 9-11):
 #
-# - band WIDTH w = clamp(8 + Δ, 8, 27), Δ = round(log₂(N/anchor)) from
-#   ONE count aggregate both engines compute: with a fixed width,
-#   random band collisions grow as N²/2^w (measured exp 1.12 sf1→sf3
-#   at w = 8); 2^w ∝ N keeps candidates per band LINEAR in N (round 10
-#   measured exp 0.63 with this knob alone).
+# - band WIDTH w = clamp(ND_BAND_BITS + Δ, 8, 27), Δ =
+#   round(log₂(N/anchor)) from ONE count aggregate both engines compute.
+#   With a fixed width, random band collisions grow as N²/2^w (measured
+#   exp 1.12 sf1→sf3 at w = 8); 2^w ∝ N keeps candidates per band
+#   LINEAR in N (exp 0.63 with this knob alone).
 # - Hamming-≤1 MULTI-PROBE key matching carries the recall the width
 #   bits spend: per-band true-pair probability ×(1 + w·q/p) ≈ 5-8 at a
 #   (1 + w) candidate factor (Lv et al. 2007).
-# - band COUNT nb = 6, FIXED. Round 11 first implemented the knob
-#   VERDICT r10 #1 named — nb = clamp(4 + Δ, 4, 12) — and MEASURED it:
-#   with probing already multiplying per-pair cost by (1 + w) (which
-#   itself grows with Δ), also growing nb pushed the full-registry wall
-#   exponent to 1.47 sf1→sf3 while recall was already met. Per unit
+# - band COUNT nb = 6, FIXED. Growing it with Δ as well (nb = clamp(4 +
+#   Δ, 4, 12)) was measured: with probing already multiplying per-pair
+#   cost by (1 + w), which itself grows with Δ, the full-registry wall
+#   exponent reached 1.47 sf1→sf3 while recall was already met. Per unit
 #   candidate cost, probing dominates band count (×5-8 recall for ×14
-#   cost vs ×2.25 for ×2.25), so the shipped point fixes nb and lets
-#   width hold cost and probing hold recall: candidates/decade =
-#   3 × (1+w growth ≈ 1.17) → exponent ~1.1, recall decay ≤ ~2×/decade
-#   (theory 0.67/0.31/0.16 at the three scratch scales; measured rows
-#   in SCALE.md round 11).
+#   cost vs ×2.25 for ×2.25), so width holds cost and probing holds
+#   recall: candidates/decade = 3 × (1+w growth ≈ 1.17) → exponent
+#   ~1.1, recall decay ≤ ~2×/decade (measured rows in SCALE.md round 11).
 #
-# ND_MAX_BITS = 27 (round 12, VERDICT r11 #2 — was 15): the family
-# LAYOUT constant (band b owns planes [27b, 27b+27) of the md5 family)
-# and the width clamp's ceiling.  At 15 the clamp saturated at Δ = 7
-# (N ≈ 260k) — an un-lifted engineering constant far below target
-# scale; at 27 it saturates at Δ = 19 (N ≈ 10⁹), and keys stay well
-# inside a signed BIGINT.  Raising the ceiling is FREE at small N:
-# only planes for bands < nb AND in-key positions < w are ever
-# generated (hyperplane_band_rows cuts the plane relation by the
-# broadcast (nb, w) before the explode join), so the dot work is
-# n·dim·nb·w — it tracks the data-derived width, not this maximum.
-# The honest asymptote still stands: holding recall at threshold 0.45
-# costs N^(1+ρ), ρ ≈ 0.63, for ANY hyperplane-LSH knob setting — the
-# scale-path default is the clustered finder (SCALE.md round 12).
+# ND_MAX_BITS = 27 is the family LAYOUT constant (band b owns planes
+# [27b, 27b+27) of the md5 family) and the width clamp's ceiling, which
+# saturates at Δ = 19 (N ≈ 10⁹) with keys well inside a signed BIGINT.
+# The ceiling costs nothing at small N: only planes for bands < nb AND
+# in-key positions < w are generated (hyperplane_band_rows cuts the
+# plane relation by the broadcast (nb, w) before the explode join), so
+# the dot work is n·dim·nb·w. The asymptote stands: holding recall at
+# threshold 0.45 costs N^(1+ρ), ρ ≈ 0.63, for ANY hyperplane-LSH knob
+# setting, which is why the scale-path default is the clustered finder
+# (SCALE.md round 12).
+ND_BAND_BITS = 8
 ND_MAX_BITS = 27
 ND_MAX_BANDS = 12
 ND_NB_FIXED = 6
@@ -185,7 +156,7 @@ PLANES = hyperplane_matrix(N_PLANES, DIM)
 # Multi-probe masks: the query's own bucket, every 1-bit flip, and
 # every 2-bit flip (Lv et al.'s probing sequence truncated at Hamming
 # distance 2) — 1 + 6 + 15 = 22 disjoint buckets of the 64, the
-# round-10 recall lever (same index table, zero extra corpus passes).
+# recall lever (same index table, zero extra corpus passes).
 MP_PROBES: list[int] = (
     [0]
     + [1 << i for i in range(N_PLANES)]
@@ -202,6 +173,14 @@ def _query_side(col: F.Column = None) -> F.Column:
     return (c % QUERY_MOD == 0) & (c < QUERY_CAP)
 
 
+def _vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, nrm): each embedding as a double array with its L2
+    norm, the payload every exact-cosine verify reads."""
+    return emb.select(
+        "vec_id", to_double_array("embedding").alias("v")
+    ).withColumn("nrm", l2_norm(F.col("v")))
+
+
 def sim_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for the bounded query subset (≤ 20 rows by
     construction — see module docstring). The corpus side never
@@ -211,32 +190,11 @@ def sim_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_topk(e, q, k=TOPK)
 
 
-def _band_rows(bucketed: DataFrame) -> DataFrame:
-    """Explode a 32-bit signature into its 4 (band_idx, band_key) rows."""
-    mask = (1 << ND_BAND_BITS) - 1
-    return bucketed.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.expr(f"(bucket >> {ND_BAND_BITS * i}) & {mask}").alias(
-                            "band_key"
-                        ),
-                    )
-                    for i in range(ND_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("vec_id", "band.band_idx", "band.band_key")
-
-
 def _nd_params_rel(e: DataFrame) -> DataFrame:
     """1-row (w int, nb int) relation: the corpus-size-scaled band
     width w = clamp(8 + Δ, 8, 27) with Δ = round(log₂(N/anchor)), and
     the FIXED band count nb = ND_NB_FIXED (see the operating-point
-    comment at ND_MAX_BITS — growing nb alongside the probe factor
+    comment at ND_BAND_BITS — growing nb alongside the probe factor
     double-pays, measured wall exp 1.47). Control-plane: a single count
     aggregate, broadcast onto the plane relation and the band masking —
     never a driver value; nb stays in the relation so both engines and
@@ -253,39 +211,48 @@ def _nd_params_rel(e: DataFrame) -> DataFrame:
     )
 
 
+def _probe_keys(bands: DataFrame, params: DataFrame, *payload: str) -> DataFrame:
+    """(vec_id, band_idx, band_key, *payload) probe rows of a band
+    relation: each w-bit band key and its w single-bit flips, from one
+    explode over sequence(0, w) against the broadcast 1-row params
+    relation. Probes join RAW band keys, so probing one side of a join
+    finds every pair whose keys in some band agree or differ in one
+    bit."""
+    return bands.crossJoin(F.broadcast(params.select("w"))).select(
+        "vec_id",
+        "band_idx",
+        F.explode(
+            F.expr(
+                "transform(sequence(0, w), j -> CASE WHEN j = 0 "
+                "THEN band_key ELSE band_key ^ "
+                "shiftleft(CAST(1 AS BIGINT), j - 1) END)"
+            )
+        ).alias("band_key"),
+        *payload,
+    )
+
+
+def _band_collisions(probes: DataFrame, bands: DataFrame) -> DataFrame:
+    """Probe rows (aliased ``a``) joined to band rows (aliased ``b``)
+    on (band_idx, band_key), one row per a.vec_id < b.vec_id collision:
+    the symmetric self-join of the near-dup paths."""
+    a, b = probes.alias("a"), bands.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band_idx") == F.col("b.band_idx"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.vec_id") < F.col("b.vec_id")),
+    )
+
+
 def _nd_candidates(emb: DataFrame) -> DataFrame:
     """Distinct (vec_a < vec_b) candidate pairs of the scaled banded
-    hyperplane LSH with Hamming-≤1 multi-probe: pairs whose w-bit keys
-    in some band agree exactly or differ in one bit. Probe keys are one
-    explode over sequence(0, w) (identity + w single-bit flips) against
-    the broadcast 1-row params relation; probes join RAW band keys —
-    probing one side of a symmetric self-join covers every pair.
-    Shared verbatim by ``sim_neardup_pairs`` (the production path) and
-    ``sim_neardup_recall_audit`` (which also counts this relation)."""
+    hyperplane LSH with Hamming-≤1 multi-probe (``_probe_keys``).
+    ``sim_neardup_recall_audit`` counts and verifies this relation."""
     params = _nd_params_rel(emb)
     bands = hyperplane_band_rows(emb, params, ND_MAX_BANDS, ND_MAX_BITS, DIM)
-    probes = (
-        bands.crossJoin(F.broadcast(params.select("w")))
-        .select(
-            "vec_id",
-            "band_idx",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, w), j -> CASE WHEN j = 0 "
-                    "THEN band_key ELSE band_key ^ "
-                    "shiftleft(CAST(1 AS BIGINT), j - 1) END)"
-                )
-            ).alias("band_key"),
-        )
-    )
-    a, b = probes.alias("a"), bands.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        _band_collisions(_probe_keys(bands, params), bands)
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
@@ -293,111 +260,72 @@ def _nd_candidates(emb: DataFrame) -> DataFrame:
 
 def sim_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs at cosine ≥ 0.45 via banded hyperplane LSH with
-    corpus-size-scaled width (VERDICT r10 #1) plus Hamming-≤1
-    multi-probe banding (Lv et al. 2007): nb = 6 fixed bands of 15
-    md5-seeded planes each, every band keyed by the low-w-bit prefix
-    of its sign signature with w = clamp(8 + Δ, 8, 27), where
-    Δ = round(log₂(N/2048)) is ONE count aggregate of the corpus;
-    candidates are pairs whose keys in some band agree exactly OR
-    differ in exactly one bit.
+    corpus-size-scaled width plus Hamming-≤1 multi-probe banding (Lv et
+    al. 2007): nb = 6 fixed bands of md5-seeded planes, every band
+    keyed by the low-w-bit prefix of its sign signature with w =
+    clamp(8 + Δ, 8, 27), where Δ = round(log₂(N/2048)) is ONE count
+    aggregate of the corpus; candidates are pairs whose keys in some
+    band agree exactly OR differ in exactly one bit.
 
     Why this knob setting (measured, SCALE.md rounds 9-11): at fixed
     (4, 8-bit) bands candidates grow ~N²/2^w — exp 1.12 sf1→sf3.
-    Widening the bands (2^w ∝ N, round 10) made cost linear (exp 0.63)
-    but each extra bit multiplies a true pair's per-band match
-    probability by p ≈ 0.65 (at cosine 0.45) and recall@0.45 collapsed
-    0.27 → 0.023. Growing band COUNT with the same Δ (round 11, first
-    attempt, as VERDICT r10 #1 named) adds recall only LINEARLY per
+    Widening the bands (2^w ∝ N) made cost linear (exp 0.63) but each
+    extra bit multiplies a true pair's per-band match probability by
+    p ≈ 0.65 (at cosine 0.45), and recall@0.45 collapsed 0.27 → 0.023.
+    Growing band COUNT with the same Δ adds recall only LINEARLY per
     band while width costs it geometrically — measured 0.26 → 0.044 →
     0.017, still collapsing. Hamming-≤1 probing multiplies a true
     pair's per-band probability by (1 + w·q/p) ≈ 5-8 (q = 1-p) at a
     (1 + w) random-collision factor; probing + Δ-grown band count
-    together then DOUBLE-pay (both factors grow with Δ — measured
-    full-registry wall exp 1.47 sf1→sf3), so the shipped point fixes
-    nb = 6: candidates ~6·(1+w)·N, exponent ~1.1, recall decay
-    ≤ ~2× per decade. No knob setting of THIS family does better
-    asymptotically: holding recall at threshold p with background
-    p_bg = 0.5 costs N^(1+ρ), ρ = ln(1/p)/ln(1/p_bg) ≈ 0.63 — the
-    shipped point is the engineering compromise, documented rather
-    than hidden.
-
-    Mechanics: probe keys are generated from the band rows by one
-    explode over sequence(0, w) (identity + w single-bit flips) against
-    the broadcast 1-row params relation; probes join RAW band keys
-    (probing one side of a symmetric self-join covers all pairs), then
-    exact cosine verification. The identical integer function of
-    count(*) drives the oracle — deterministic cross-engine with no
-    pinned constant. ``sim_neardup_exact`` is the capped exhaustive
-    diagnostic that measures this query's recall.
+    together DOUBLE-pay (both factors grow with Δ — measured
+    full-registry wall exp 1.47 sf1→sf3), so nb is fixed at 6:
+    candidates ~6·(1+w)·N, exponent ~1.1, recall decay ≤ ~2× per
+    decade. No knob setting of THIS family does better asymptotically:
+    holding recall at threshold p with background p_bg = 0.5 costs
+    N^(1+ρ), ρ = ln(1/p)/ln(1/p_bg) ≈ 0.63 — the operating point is
+    the engineering compromise, documented rather than hidden.
+    ``sim_neardup_exact`` is the capped exhaustive diagnostic that
+    measures this query's recall; the identical integer function of
+    count(*) drives the oracle, so both engines agree with no pinned
+    constant.
 
     The signature comes from ``hyperplane_band_rows`` (explode →
-    decimal-exact conditional sums; plane relation cut to nb·15 planes
+    decimal-exact conditional sums; plane relation cut to nb·w planes
     BEFORE the explode join, so the dot work scales with the
-    data-dependent band count): aggregates are codegen'd and form a
+    data-dependent width): aggregates are codegen'd and form a
     projection barrier, so each band signature is computed exactly
     once however many times it is referenced downstream.
 
-    Round 13 (VERDICT r12 #3): the verify is BUCKET-LOCAL — the vector
-    payload rides the band/probe rows into the (band_idx, band_key)
-    equi-join and the cosine is computed inside it, replacing the old
-    distinct-candidates-then-join-raw-vectors chain whose second join
-    shuffled C·512 B (the ~250 GB spill PERF 74 measured at 600k
-    vectors).  Payload traffic is now nb·(1+w)·N rows on the probe
-    side + nb·N on the band side (~34 GB at 600k vs ~250 GB); a pair
-    colliding in m (band, probe) slots is verified m times and
-    collapsed by the final distinct on bit-identical rows — the result
-    SET is exactly the old chain's, which the unchanged oracle
-    replays.  Parity is pinned by
+    The verify is BUCKET-LOCAL (``_nd_pairs_bucket_local``): the
+    vector payload rides the band/probe rows into the (band_idx,
+    band_key) equi-join and the cosine is computed inside it, so no
+    candidate-sized relation joins the raw vectors (that second join
+    shuffled C·512 B, ~250 GB of spill at 600k vectors, PERF 74).
+    Payload traffic is nb·(1+w)·N rows on the probe side + nb·N on the
+    band side; a pair colliding in m (band, probe) slots is verified m
+    times and collapsed by the final distinct on bit-identical rows, so
+    the result SET is the distinct-then-verify chain's, which the
+    oracle replays. Parity is pinned by
     ``tests/test_round13_ops.py::test_lsh_bucket_local_verify_parity``."""
-    emb = t(spark, sf_dir, "embeddings")
-    e = (
-        emb.select("vec_id", to_double_array("embedding").alias("v"))
-        .withColumn("nrm", l2_norm(F.col("v")))
-    )
-    return _nd_pairs_bucket_local(emb, e)
+    return _nd_pairs_bucket_local(t(spark, sf_dir, "embeddings"))
 
 
-def _nd_pairs_bucket_local(emb: DataFrame, e: DataFrame) -> DataFrame:
+def _nd_pairs_bucket_local(emb: DataFrame) -> DataFrame:
     """Verified near-dup pairs of the scaled+probed LSH with the
-    cosine computed INSIDE the band-key join (see sim_neardup_pairs).
-    ``e`` carries (vec_id, v, nrm); the probe explode and join
-    predicate are byte-identical to ``_nd_candidates`` — only WHERE
-    the raw vectors meet changes."""
+    cosine computed INSIDE the band-key join (see sim_neardup_pairs);
+    the probe rows and join are ``_nd_candidates``' with the vector
+    payload attached."""
     params = _nd_params_rel(emb)
     bands = hyperplane_band_rows(emb, params, ND_MAX_BANDS, ND_MAX_BITS, DIM)
-    # r14 optimization (guide §5): the signature+payload relation feeds
-    # BOTH sides of the band-key join (probe explode + raw band rows) —
-    # persisted for the invocation so the plane-dot aggregation and the
-    # payload join run once; released via materialize_and_release by the
-    # callers' shared return path below.
-    bands_v = bands.join(e, "vec_id").persist()
-    probes_v = (
-        bands_v.crossJoin(F.broadcast(params.select("w")))
-        .select(
-            "vec_id",
-            "band_idx",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, w), j -> CASE WHEN j = 0 "
-                    "THEN band_key ELSE band_key ^ "
-                    "shiftleft(CAST(1 AS BIGINT), j - 1) END)"
-                )
-            ).alias("band_key"),
-            "v",
-            "nrm",
-        )
-    )
-    a, b = probes_v.alias("a"), bands_v.alias("b")
+    # the signature + payload relation feeds both sides of the band-key
+    # join: persisted so the plane-dot aggregation and the payload join
+    # run once, and released on return
+    bands_v = bands.join(_vectors(emb), "vec_id").persist()
     cos = dot_product(F.col("a.v"), F.col("b.v")) / (
         F.col("a.nrm") * F.col("b.nrm")
     )
     return materialize_and_release(
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        _band_collisions(_probe_keys(bands_v, params, "v", "nrm"), bands_v)
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
@@ -416,83 +344,23 @@ def sim_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_query_side`` subset, ≤ 20 rows at any corpus size) reaches the
     ``SEMDECON_COSINE`` threshold (looser than the near-dup 0.45:
     leakage screening optimizes recall, borderline hits get human or
-    exact-pipeline review). Candidates come from the corpus-size-scaled
-    band index WITH Hamming-≤1 probing on the EVAL side — since round
-    12 the SAME generator as ``sim_range_search`` (ADVICE r11 #3: the
-    hit-level view and these per-doc flags previously used different
-    indexes and could disagree on marginal hits; measured at the three
-    scratch scales, tools/range_recall_report.py, the scaled+probed
-    posture's recall ≥ the legacy fixed 4×8-bit path everywhere —
-    0.49 vs 0.08 / 0.15 vs 0.06 / 0.066 vs 0.065 — so the migration
-    costs nothing and the two contamination views now share one recall
-    profile by construction). The probe explode runs on the ≤ 20-row
-    eval side only, so the train side never pays the (1+w) factor and
-    NEVER shuffles after its signature aggregation — at 100 TB this is
-    a map-side probe of a benchmark fingerprint table, the exact shape
-    eval-set decontamination runs in production. Exact cosine
-    verification after the LSH candidates; per-train-vector rollup
-    (hit count, max cosine) keeps the output compact."""
-    emb = t(spark, sf_dir, "embeddings")
-    e = (
-        emb.select("vec_id", to_double_array("embedding").alias("v"))
-        .withColumn("nrm", l2_norm(F.col("v")))
-    )
-    params = _nd_params_rel(emb)
-    # r14 optimization (guide §5): the band relation feeds the eval-probe
-    # side AND the corpus side — persisted for the invocation (compact
-    # nb·N (vec_id, band_idx, band_key) rows) so the plane-dot signature
-    # aggregation runs once; released on return.
-    bands = hyperplane_band_rows(
-        emb, params, ND_MAX_BANDS, ND_MAX_BITS, DIM
-    ).persist()
-    eval_probes = (
-        bands.filter(_query_side())
-        .crossJoin(F.broadcast(params.select("w")))
-        .select(
-            F.col("vec_id").alias("eval_id"),
-            "band_idx",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, w), j -> CASE WHEN j = 0 "
-                    "THEN band_key ELSE band_key ^ "
-                    "shiftleft(CAST(1 AS BIGINT), j - 1) END)"
-                )
-            ).alias("band_key"),
-        )
-    )
-    cand = (
-        bands.filter(~_query_side())
-        .withColumnRenamed("vec_id", "train_id")
-        .join(F.broadcast(eval_probes), ["band_idx", "band_key"])
-        .select("train_id", "eval_id")
-        .distinct()
-    )
-    et = e.select(
-        F.col("vec_id").alias("train_id"),
-        F.col("v").alias("tv"),
-        F.col("nrm").alias("tn"),
-    )
-    # Only the ≤20-row eval subset may be broadcast — hinting the full
-    # corpus-derived frame would materialize every vector on the driver
-    # at scale even though the join keys would prune it afterwards.
-    ee = e.filter(_query_side()).select(
-        F.col("vec_id").alias("eval_id"),
-        F.col("v").alias("ev"),
-        F.col("nrm").alias("en"),
-    )
-    cos = dot_product(F.col("tv"), F.col("ev")) / (F.col("tn") * F.col("en"))
-    hits = (
-        cand.join(et, "train_id")
-        .join(F.broadcast(ee), "eval_id")
-        .select("train_id", "eval_id", cos.alias("cosine"))
-        .filter(F.col("cosine") >= SEMDECON_COSINE)
-    )
-    return materialize_and_release(
-        hits.groupBy("train_id").agg(
+    exact-pipeline review), with its hit count and max cosine.
+
+    A per-train-vector rollup of ``sim_range_search``'s hits (eval =
+    query, train = candidate), so the per-doc flags and the hit-level
+    view come from one candidate generator and one verify and cannot
+    disagree on marginal hits. The rollup stays lazy over the range
+    search's cached hits. It is not passed through
+    ``materialize_and_release``: releasing the hits without cascade
+    under the rollup's own cache makes Spark rebuild that cache, so
+    every later call would recompute the rollup."""
+    return (
+        sim_range_search(spark, sf_dir)
+        .groupBy(F.col("cand_id").alias("train_id"))
+        .agg(
             F.count(F.lit(1)).alias("n_eval_hits"),
             F.max("cosine").alias("max_cosine"),
-        ),
-        bands,
+        )
     )
 
 
@@ -531,55 +399,42 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Radius (range) search — the third ANN query shape next to top-k
     and pair mining: for every vector of the bounded query subset, ALL
     corpus vectors within cosine ≥ ``SEMDECON_COSINE``, with scores.
-    This is the hit-level view contamination review reads after
-    ``sim_semantic_decontaminate``'s per-train rollup flags a corpus:
-    which benchmark item leaked, where, and how close.
+    This is the hit-level view contamination review reads; its
+    per-train rollup is ``sim_semantic_decontaminate``.
 
-    Candidates come from the corpus-size-scaled band
-    index WITH Hamming-≤1 probing — the same `hyperplane_band_rows` +
-    probe machinery as ``sim_neardup_pairs`` (and, since round 12,
-    the rollup twin ``sim_semantic_decontaminate`` — the two
-    contamination views share this one generator). Recall vs the
-    uncapped exact truth is measured by ``sim_range_recall_audit``. The probe explode runs
-    on the QUERY side only (≤ 20·nb band rows at any corpus size), so
-    the corpus never pays the (1+w) factor: its band relation is built
-    once and the candidate join broadcasts the probed query keys — at
-    100 TB this is a map-side probe of a benchmark fingerprint table,
-    with exact cosine verification behind it."""
+    Candidates come from the corpus-size-scaled band index WITH
+    Hamming-≤1 probing — the ``hyperplane_band_rows`` + ``_probe_keys``
+    machinery of ``sim_neardup_pairs``. Recall vs the uncapped exact
+    truth is measured by ``sim_range_recall_audit``. The probe explode
+    runs on the QUERY side only (≤ 20·nb band rows at any corpus size),
+    so the corpus never pays the (1+w) factor and never shuffles after
+    its signature aggregation: its band relation is built once and the
+    candidate join broadcasts the probed query keys — at 100 TB this is
+    a map-side probe of a benchmark fingerprint table, with exact
+    cosine verification behind it."""
     emb = t(spark, sf_dir, "embeddings")
     params = _nd_params_rel(emb)
-    # r14 optimization: same both-sides band persist as
-    # sim_semantic_decontaminate (released on return)
+    # the band relation feeds the query probes and the corpus side:
+    # persisted so the plane-dot signature aggregation runs once, and
+    # released on return
     bands = hyperplane_band_rows(
         emb, params, ND_MAX_BANDS, ND_MAX_BITS, DIM
     ).persist()
-    qprobes = (
-        bands.filter(_query_side())
-        .crossJoin(F.broadcast(params.select("w")))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "band_idx",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, w), j -> CASE WHEN j = 0 "
-                    "THEN band_key ELSE band_key ^ "
-                    "shiftleft(CAST(1 AS BIGINT), j - 1) END)"
-                )
-            ).alias("band_key"),
-        )
-    )
+    qprobes = _probe_keys(bands.filter(_query_side()), params)
     cand = (
         bands.filter(~_query_side())
         .withColumnRenamed("vec_id", "cand_id")
-        .join(F.broadcast(qprobes), ["band_idx", "band_key"])
+        .join(
+            F.broadcast(qprobes.withColumnRenamed("vec_id", "query_id")),
+            ["band_idx", "band_key"],
+        )
         .select("query_id", "cand_id")
         .distinct()
     )
-    e = (
-        emb.select("vec_id", to_double_array("embedding").alias("v"))
-        .withColumn("nrm", l2_norm(F.col("v")))
-    )
-    eq = e.select(
+    e = _vectors(emb)
+    # only the ≤ 20-row query subset may be broadcast: hinting the whole
+    # corpus-derived frame would collect every vector on the driver
+    eq = e.filter(_query_side()).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("nrm").alias("qn"),
@@ -600,8 +455,8 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sim_range_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row recall audit for the radius-search shape (VERDICT r11
-    #4): ``sim_range_search``'s hits over the EXACT truth at the same
+    """One-row recall audit for the radius-search shape:
+    ``sim_range_search``'s hits over the EXACT truth at the same
     threshold — and unlike the pair-mining audits, the truth here
     needs no cap: the query side is the bounded ≤ 20-row subset, so
     the exhaustive scan is 20·N cosines, the same linear cost as
@@ -609,16 +464,12 @@ def sim_range_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter can only lose pairs), so the count ratio IS recall.
     Columns: corpus size, the (w, nb) knobs the scaled band index
     derived, hit/truth counts, recall. Registered so any retuning of
-    the index shows up as an oracle-checked hash change; the
-    legacy-vs-scaled posture comparison for the rollup twin
-    (ADVICE r11 #3) lives in tools/range_recall_report.py with the
-    decision in SCALE.md round 12."""
+    the index shows up as an oracle-checked hash change. The same
+    recall holds for ``sim_semantic_decontaminate``, a rollup of these
+    hits."""
     emb = t(spark, sf_dir, "embeddings")
     hits = sim_range_search(spark, sf_dir)
-    e = (
-        emb.select("vec_id", to_double_array("embedding").alias("v"))
-        .withColumn("nrm", l2_norm(F.col("v")))
-    )
+    e = _vectors(emb)
     eq = e.filter(_query_side()).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -658,8 +509,8 @@ def sim_range_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_neardup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row operating-point report for the near-dup LSH: corpus
     size, the data-derived (w, nb) knobs, candidate volume, verified
-    pair count, and — the number rounds 9-11 fought over — measured
-    recall@cosine≥0.45 (``NEARDUP_COSINE``) on the ``vec_id < EXACT_CAP``
+    pair count, and — the number the operating point is judged by —
+    measured recall@cosine≥0.45 (``NEARDUP_COSINE``) on the ``vec_id < EXACT_CAP``
     subpopulation (banded pairs under the cap over
     ``sim_neardup_exact``'s exhaustive pairs under the same cap; both
     verify the same threshold, so banded ⊆ exact and the ratio IS
@@ -677,15 +528,11 @@ def sim_neardup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     files). Every component is a 1-row aggregate crossJoined (broadcast
     1-row builds) onto the params relation; nothing is collected."""
     emb = t(spark, sf_dir, "embeddings")
-    # r14 optimization (guide §5): the candidate relation feeds the
-    # count AND the verify chain — persisted for the invocation
-    # (compact (vec_a, vec_b) rows) so banded candidate generation runs
-    # once; released on return.
+    # the candidate relation feeds the count AND the verify chain:
+    # persisted for the call (compact (vec_a, vec_b) rows) so banded
+    # candidate generation runs once, and released on return
     cand = _nd_candidates(emb).persist()
-    e = (
-        emb.select("vec_id", to_double_array("embedding").alias("v"))
-        .withColumn("nrm", l2_norm(F.col("v")))
-    )
+    e = _vectors(emb)
     ea = e.select(
         F.col("vec_id").alias("vec_a"),
         F.col("v").alias("va"),
@@ -703,12 +550,10 @@ def sim_neardup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_a", "vec_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= NEARDUP_COSINE)
     )
-    # r14 optimization (guide §2.4): n_pairs and n_banded_cap come from
-    # ONE aggregate over the verify join — the old separate
-    # `capped = pairs.filter(...)` branch re-ran the whole candidate +
-    # verify chain a third time (the pre-AQE plan shows no
-    # ReusedExchange; plans/r14/sim_neardup_recall_audit_before.txt).
-    # count(when(...)) counts non-nulls = the old filtered count.
+    # n_pairs and n_banded_cap come from ONE aggregate over the verify
+    # join (count(when(...)) counts the capped rows): a separate
+    # filtered branch would re-run the candidate + verify chain, since
+    # the pre-AQE plan reuses no exchange between them.
     pstats = pairs.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.count(
@@ -812,8 +657,8 @@ def _ivf_params_rel(e: DataFrame) -> DataFrame:
 
 def _rerank_params_rel(e: DataFrame) -> DataFrame:
     """1-row (rerank_k int) relation: the ADC→exact shortlist depth,
-    proportional to the probed-set size (RERANK_FRAC · nprobe·N/cells
-    — VERDICT r12 #4), floored at the legacy RERANK_K and capped.
+    proportional to the probed-set size (RERANK_FRAC · nprobe·N/cells),
+    floored at RERANK_K and capped at RERANK_K_CAP.
     floor() (not round) so there is no tie semantics to reconcile
     cross-engine; the product 0.5·nprobe·N is exact in double and the
     single division is the same IEEE op in both engines."""
@@ -906,12 +751,12 @@ def _ann_topk(
     the recall audit can count candidates from the SAME producer the
     served query ranks — the two can never drift.
 
-    ``count_col`` (r14 optimization, audit-only): additionally carry the
+    ``count_col`` (audit-only): additionally carry the
     per-query candidate count as a second window over the SAME
     partitioning — the audit then takes recall AND n_candidates from one
     relation with one exchange, instead of re-running the scored
-    producer through a separate groupBy branch (guide §2.4: two
-    operations keyed the same way share one exchange). The count window
+    producer through a separate groupBy branch (two operations keyed
+    the same way share one exchange). The count window
     has no ordering (whole-partition count), so it cannot perturb the
     rank; registered top-k queries leave it None and are unchanged."""
     o = F.col(score).asc() if ascending else F.col(score).desc()
@@ -924,42 +769,19 @@ def _ann_topk(
     return df.filter(F.col("rank") <= k)
 
 
-def _lsh_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, cand_id, cosine) — single-probe LSH candidates."""
-    bucketed = _lsh_bucket_table(spark, sf_dir)
-    q = bucketed.filter(_query_side()).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("bucket").alias("qbucket"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-    )
-    c = bucketed.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("bucket").alias("cbucket"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cn"),
-    )
-    cos = dot_product(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    return c.join(
-        F.broadcast(q),
-        (F.col("cbucket") == F.col("qbucket"))
-        & (F.col("cand_id") != F.col("query_id")),
-    ).select("query_id", "cand_id", cos.alias("cosine"))
-
-
 def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN: 6-plane signature buckets (64 buckets), candidates = bucket
     collisions, exact cosine re-rank, top-k per query. The bucket join is
     linear in corpus size; the query side is the bounded ≤ 20-row
     relation. Index table from the session-materialized producer."""
-    return _ann_topk(_lsh_scored(spark, sf_dir), "cosine")
+    return _ann_topk(_mp_scored(spark, sf_dir, [0]), "cosine")
 
 
 def sim_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH ANN (Lv et al., VLDB 2007): each query probes its
     own 6-plane signature bucket AND every bucket at Hamming distance
-    ≤ 2 (``MP_PROBES``, 22 of the 64 buckets — round 10 extended the
-    probe sequence from distance 1 to buy recall@10) — the standard
+    ≤ 2 (``MP_PROBES``, 22 of the 64 buckets; the distance-2 probes
+    buy recall@10 over distance 1) — the standard
     recall lever that costs ZERO extra index tables and no extra corpus
     passes, only a 22× wider (still bounded: ≤ 20×22 rows) broadcast
     query side. Candidates remain an equi-join on the bucket id — the
@@ -974,15 +796,19 @@ def sim_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_topk(_mp_scored(spark, sf_dir), "cosine")
 
 
-def _mp_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, cand_id, cosine) — multi-probe LSH candidates (22
-    disjoint buckets per query, so no per-pair duplicates)."""
+def _mp_scored(
+    spark: SparkSession, sf_dir: str, masks: list[int] = MP_PROBES
+) -> DataFrame:
+    """(query_id, cand_id, cosine) — LSH candidates in the buckets
+    ``bucket ^ m`` for each probe mask m: ``MP_PROBES`` (22 buckets)
+    for multi-probe, ``[0]`` for the query's own bucket. The buckets
+    are disjoint, so no pair is scored twice."""
     bucketed = _lsh_bucket_table(spark, sf_dir)
     q = bucketed.filter(_query_side()).select(
         F.col("vec_id").alias("query_id"),
         F.explode(
             F.array(
-                *[F.col("bucket").bitwiseXOR(F.lit(m)) for m in MP_PROBES]
+                *[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks]
             )
         ).alias("qbucket"),
         F.col("v").alias("qv"),
@@ -1005,7 +831,7 @@ def _mp_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: coarse quantization into √N cells, queries
     probe their √cells nearest cells (both from the broadcast 1-row
-    ``_ivf_params_rel`` — VERDICT r11 #3), exact cosine re-rank, top-3.
+    ``_ivf_params_rel``), exact cosine re-rank, top-k.
 
     Centroids are the first ``cells`` corpus vectors (a deterministic
     seed choice — production would k-means them; the *plan shape* is the
@@ -1069,6 +895,7 @@ def _pq_subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sq_l2(a, b):
+    """Σ (aᵢ−bᵢ)² as the deterministic left fold."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -1131,13 +958,12 @@ def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, cand_id, adc_d2) — ADC over the full code table."""
     sub = _pq_subvectors(spark, sf_dir)
     cb = _pq_codebook(sub)
-    sq_l2 = _sq_l2
     codes = _pq_code_table(spark, sf_dir)
     qlut = (
         sub.filter(_query_side())
         .select(F.col("vec_id").alias("query_id"), "m", F.col("subv").alias("qsubv"))
         .join(F.broadcast(cb), "m")
-        .select("query_id", "m", "k", sq_l2(F.col("qsubv"), F.col("cv")).alias("pd2"))
+        .select("query_id", "m", "k", _sq_l2(F.col("qsubv"), F.col("cv")).alias("pd2"))
     )
     return (
         codes.join(F.broadcast(qlut), ["m", "k"])
@@ -1159,12 +985,11 @@ def sim_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest cells with a PER-CELL residual lookup table, ADC runs only
     against codes in probed cells, and the ADC top-``RERANK_K``
     shortlist is re-ranked by EXACT cosine against the raw vectors
-    (VERDICT r10 #2: every production PQ deployment re-ranks — 4×32
-    codebooks alone can't rank fine neighbors on near-random 64-d
-    vectors; recall@10 measured 0.075 ADC-only → 0.560 re-ranked at the
-    round-10/11 4×32 codebooks; the round-12 8×256 codebooks lift the
-    pair to 0.255 ADC-only → 0.765 re-ranked at the same scale — see
-    ``sim_ann_recall_audit`` and the RERANK_K curve).
+    (every production PQ deployment re-ranks: codes alone cannot rank
+    fine neighbors on near-random 64-d vectors — recall@10 0.255
+    ADC-only → 0.765 re-ranked with the 8×256 codebooks, 0.075 → 0.560
+    with 4×32 ones; see ``sim_ann_recall_audit`` and the RERANK_K
+    curve).
 
     Deterministic seeds per the module policy (centroids = first
     ``cells`` vectors, √N of them — ``_ivf_params_rel``; PQ codebooks
@@ -1199,11 +1024,7 @@ def sim_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rr") <= F.col("rerank_k"))
         .drop("rr", "rerank_k")
     )
-    e = (
-        t(spark, sf_dir, "embeddings")
-        .select("vec_id", to_double_array("embedding").alias("v"))
-        .withColumn("nrm", l2_norm(F.col("v")))
-    )
+    e = _vectors(t(spark, sf_dir, "embeddings"))
     eq = e.filter(_query_side()).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1236,15 +1057,6 @@ def _ivfpq_resid_sub(c):
     )
 
 
-def _sq_l2(a, b):
-    """Σ (aᵢ−bᵢ)² as the deterministic left fold."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _ivfpq_cb(ranked: DataFrame) -> DataFrame:
     """(m, k, cbv) — the shared residual codebooks (first PQ_KS
     vectors' residual sub-slices), from the coarse-assign index."""
@@ -1263,14 +1075,12 @@ def _ivfpq_cb(ranked: DataFrame) -> DataFrame:
 
 def _ivfpq_code_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cand_id, cell, m, k) — the residual-PQ CODES, the 8-byte-per-
-    vector compressed index FAISS persists.  And persist it we do
-    (round 14, VERDICT r13 #3): a cand_id-bucketed parquet table in
-    the warehouse, written once per (corpus fingerprint × algorithm
-    version) and read by every consumer in every session — the code
-    argmin is an N·PQ_M × PQ_KS join + per-(vec, m) rank window, by
-    far the heaviest stage of the ivfpq chain, and before round 13 it
-    was re-executed by every consumer (the served query AND the
-    audit) in every sweep."""
+    vector compressed index FAISS persists, and persisted here too: a
+    cand_id-bucketed parquet table in the warehouse, written once per
+    (corpus fingerprint × algorithm version) and read by every consumer
+    in every session. The code argmin is by far the heaviest stage of
+    the ivfpq chain, so building it per consumer (the served query AND
+    the audit) would repeat it in every sweep."""
 
     def build() -> DataFrame:
         # row-local Arrow argmin against the driver-collected residual
@@ -1325,7 +1135,6 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid = F.zip_with("v", "cv", lambda x, y: x - y)
     sub_of = _ivfpq_resid_sub
     cb = _ivfpq_cb(ranked)
-    sq_l2 = _sq_l2
     codes = _ivfpq_code_table(spark, sf_dir)
     # the producer already cut crank <= nprobe (data-derived)
     qsub = ranked.filter(_query_side()).select(
@@ -1335,7 +1144,7 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "cell", F.col("s.m").alias("m"), F.col("s.subr").alias("qsubr"))
     qlut = qsub.join(F.broadcast(cb), "m").select(
         "query_id", "cell", "m", "k",
-        sq_l2(F.col("qsubr"), F.col("cbv")).alias("pd2"),
+        _sq_l2(F.col("qsubr"), F.col("cbv")).alias("pd2"),
     )
     return (
         codes.join(F.broadcast(qlut), ["cell", "m", "k"])
@@ -1396,11 +1205,7 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: cosine is the left-fold dot (bit-identical to DuckDB's
     sequential list_sum), MAX/MIN aggregates are order-independent, so
     the hash matches the oracle under any partitioning."""
-    e = (
-        t(spark, sf_dir, "embeddings")
-        .select("vec_id", to_double_array("embedding").alias("v"))
-        .withColumn("nrm", l2_norm(F.col("v")))
-    )
+    e = _vectors(t(spark, sf_dir, "embeddings"))
     # nrm rides through the kernel as a passthrough column, so the
     # assigned frame needs no re-join with e
     cent_rows = [
@@ -1447,78 +1252,58 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- clustered (SemDeDup-posture) near-dup pair mining --------------------
-# VERDICT r11 #1: the hyperplane-LSH family provably cannot hold recall
-# at linear cost (N^(1+rho), rho ~ 0.63 — PERF 67); partition-then-scan
-# is not subject to that bound.  With k = round(sqrt(f·N)) cells and
-# nearest-CLUS_PROBE (= p) assignment, both cost terms are N^1.5·dim —
-# assignment N·k = sqrt(f)·N^1.5 row-local distances, within-cell pair
-# scan ~(p²/sqrt(f))·N^1.5 candidates — and the (p, f) knobs trade
-# recall against the constants.  The round-12 ladder (evidence/r12/,
-# all at .scratch/sf3, N = 60k, exact truth 412 pairs): (p=2, f=2)
-# 20.9M candidates recall 0.291; (3, 8) 23.4M → 0.524; (4, 32) 20.8M →
-# 0.769; (5, 50) 25.8M → 0.867; (6, 72) 30.8M → 0.932.  At a ~fixed
-# candidate budget, splitting FINER and probing MORE cells strictly
-# wins — each probe is an independent chance for a true pair to share
-# a cell, and finer cells waste fewer candidates per probe.  Shipped
-# point (5, 50): the LSH's own sf3 candidate budget (26.5M) bought
-# recall 0.187 there vs 0.867 here, and recall RISES with N (0.665 /
-# 0.711 / 0.867 at 2k/20k/60k) instead of halving per decade — cells
-# grow as sqrt(N), so the probed neighborhood widens with the corpus.
-# Round 13 (VERDICT r12 #1) ships the documented evolution: a
-# TWO-level quantizer with FIXED target cell size, split into a
-# session-materialized assignment INDEX (build) and a linear pair SCAN
-# (the registered query) — the _ivf_coarse_assign posture.
-#   Partitioner: k = round(N/T) cells (T = CLUS_TARGET, fixed → cell
-# size no longer widens with the corpus), grouped under s =
-# round(sqrt(k)) super-cells; each CELL is owned by its
-# CLUS_CELL_SPILL nearest supers (spilled assignment, ScaNN-SOAR:
-# boundary cells stay visible from both sides); each VECTOR ranks the
-# s supers, keeps the CLUS_SUPER_PROBE nearest, and ranks ONLY their
-# owned cells for its CLUS_PROBE cells.
+# The hyperplane-LSH family cannot hold recall at linear cost
+# (N^(1+rho), rho ~ 0.63 — PERF 67); partition-then-scan is not subject
+# to that bound. The partitioner is a TWO-level quantizer with FIXED
+# target cell size, split into a persisted assignment INDEX (build) and
+# a linear pair SCAN (the registered query) — the _ivf_coarse_assign
+# posture.
+#   Partitioner: k = round(N/T) cells (T = CLUS_TARGET, fixed, so cell
+# size does not widen with the corpus), grouped under s = round(sqrt(k))
+# super-cells; each CELL is owned by its CLUS_CELL_SPILL nearest supers
+# (spilled assignment, ScaNN-SOAR: boundary cells stay visible from both
+# sides); each VECTOR ranks the s supers, keeps the CLUS_SUPER_PROBE
+# nearest, and ranks ONLY their owned cells for its CLUS_PROBE cells.
+# k is uncapped: the cell ranking is a sid equi-join, where every vector
+# ships CLUS_SUPER_PROBE payload rows to meet its probed supers' cell
+# groups in a cogrouped Arrow kernel, so no cell relation is broadcast.
+# The only broadcast is the 1-row params relation; the super matrix
+# rides the cogroup exchange as g·s replicated rows (s = √(N/T) grows
+# as the corpus root — 1581 rows at 60M vectors). All three ranking
+# passes (vector→super, cell→super ownership, vector→cells-of-probed-
+# supers) run through ``operators/similarity.exact_d2_topn_cogroup`` —
+# vectorized numpy with the EXACT dot_product fold order, bit-identical
+# to the HOF form in tests/vector_refs.py (parity test) and to the
+# DuckDB oracle windows.
 #   Cost split: the pair scan (bucket-local verify inside one cid
-# equi-join) is k·(p·N/k)²/2 = (p²·T/2)·N candidates — LINEAR (the
-# single-level's candidates exp 1.51 measured 1.02 in r13); the index
-# build is N·(s + p1·R·k/s) row-local dots — N^1.5/sqrt(T) with a
-# small constant, paid once per corpus snapshot and reported by
-# bench.py as producer_build_seconds (measured 15.2 s / 31.5 s at
-# 20k/60k on local[32]).
-#   Knobs (r13 ladders, evidence/r13/CLUS_KNOBS_*.json, all at the
-# ~437·N candidate budget the r12 default spent): finer cells + more
-# probes keep strictly winning — (p=6, T=24, p1=12, R=2) reads
-# recall@0.45 0.704/0.939 at 20k/60k vs the single-level (5, 50)'s
-# 0.711/0.867, with candidates 8.4M/25.8M vs 4.9M/25.8M (fixed T
-# spends relatively more of its budget at SMALL N — that is exactly
-# the linearity trade).  Decoupling s from sqrt(k) (more, finer
-# supers) cuts build dots but collapses the probed pool fraction and
-# with it recall (0.704 → 0.601); prefix-subspace cell ranking (8/16
-# of 64 dims) collapses it outright (0.939 → 0.16/0.29) — cell choice
-# needs the full metric on near-random vectors.
-# Round 14 (VERDICT r13 #1 + #4): k is UNCAPPED — the r13 CLUS_K_CAP
-# existed only to bound the broadcast grouped-centroid matrix, which no
-# longer exists.  Stage 2 is now the documented sid equi-join: every
-# vector ships CLUS_SUPER_PROBE payload rows to meet its probed supers'
-# cell groups (a cogrouped Arrow kernel — no broadcast of cells at
-# all), so cell count tracks N/T forever and the pair scan stays
-# (p²·T/2)·N at ANY corpus size.  The only broadcast left is the 1-row
-# params relation; the super matrix rides the cogroup exchange as
-# g·s replicated rows (s = √(N/T) grows as the corpus root — 1581 rows
-# at 60M vectors).  All three ranking passes (vector→super,
-# cell→super ownership, vector→cells-of-probed-supers) run through
-# ``operators/similarity.exact_d2_topn_cogroup`` — vectorized numpy
-# with the EXACT dot_product fold order, bit-identical to the HOF form
-# in tests/vector_refs.py (parity test) and to the DuckDB oracle windows.
+# equi-join) is k·(p·N/k)²/2 = (p²·T/2)·N candidates — LINEAR (measured
+# exponent 1.02, against 1.51 for a single level of sqrt(N) cells); the
+# index build is N·(s + p1·R·k/s) row-local dots — N^1.5/sqrt(T) with a
+# small constant, paid once per corpus snapshot and reported by bench.py
+# as producer_build_seconds.
+#   Knobs (ladders in evidence/r12/ and evidence/r13/CLUS_KNOBS_*.json,
+# at a ~fixed candidate budget): splitting FINER and probing MORE cells
+# strictly wins — each probe is an independent chance for a true pair
+# to share a cell, and finer cells waste fewer candidates per probe. At
+# 60k vectors (exact truth 412 pairs) a single level of sqrt(f·N) cells
+# read recall@0.45 0.291 / 0.524 / 0.769 / 0.867 for (p, f) = (2, 2) /
+# (3, 8) / (4, 32) / (5, 50) at 21-26M candidates, where the LSH's own
+# 26.5M budget bought 0.187; the two-level (p=6, T=24, p1=12, R=2)
+# reads 0.704 / 0.939 at 20k / 60k. Decoupling s from sqrt(k) (more,
+# finer supers) cuts build dots but collapses the probed pool fraction
+# and with it recall (0.704 → 0.601); prefix-subspace cell ranking
+# (8/16 of 64 dims) collapses it outright (0.939 → 0.16/0.29) — cell
+# choice needs the full metric on near-random vectors.
 CLUS_PROBE = 6  # cells per vector (p)
 CLUS_TARGET = 24  # target vectors per cell (T, fixed — this is what
 # makes the pair scan linear: candidates ≈ (p²·T/2)·N at any N)
-CLUS_SUPER_PROBE = 20  # supers probed at level 1 (p1).  12 → 20 in
-# round 14 (VERDICT r13 #7): with the vectorized build the p1 ladder
-# at 600k (evidence/r14/CLUS_KNOBS_600k.json) reads recall@0.45
+CLUS_SUPER_PROBE = 20  # supers probed at level 1 (p1).  The p1
+# ladder at 600k (evidence/r14/CLUS_KNOBS_600k.json) reads recall@0.45
 # 0.811 / 0.881 / 0.923 / 0.952 for p1 = 12/16/20/24 at a ~CONSTANT
 # ~262M candidate budget (p1 widens the probed pool, not the scan —
 # candidates are (p²·T/2)·N in p and T only), with build wall 134.7 /
-# 106.3 / 162.3 / 191.4 s.  p1 = 20 takes the 0.92 point at 1.2× the
-# p1=12 build — the r13 600k "recall dip" was pure probed-pool
-# fraction, and the vectorized build makes buying it back cheap.
+# 106.3 / 162.3 / 191.4 s; p1 = 20 takes the 0.92 point at 1.2× the
+# p1 = 12 build.
 CLUS_CELL_SPILL = 2  # supers each CELL is owned by (R — spilled /
 # replicated assignment, the ScaNN-SOAR posture): a cell near a super
 # boundary is visible from both sides, which is exactly where the
@@ -1807,14 +1592,11 @@ def sim_neardup_clustered_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured on the identical ``vec_id < EXACT_CAP`` subpopulation
     against the same ``sim_neardup_exact`` truth set."""
     emb = t(spark, sf_dir, "embeddings")
-    e = (
-        emb.select("vec_id", to_double_array("embedding").alias("v"))
-        .withColumn("nrm", l2_norm(F.col("v")))
-    )
+    e = _vectors(emb)
     cand, pairs = _clus_cand_pairs(spark, sf_dir)
-    # r14 optimization (guide §2.4, the sim_neardup_recall_audit fix):
-    # one aggregate yields n_pairs AND the capped count — the separate
-    # filter branch re-ran the whole cid-join verify a second time.
+    # one aggregate yields n_pairs AND the capped count, as in
+    # sim_neardup_recall_audit: a separate filtered branch would re-run
+    # the whole cid-join verify.
     pstats = pairs.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.count(
@@ -1850,7 +1632,6 @@ def sim_neardup_clustered_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MMR_LAMBDA = 0.7
 MMR_POOL = 10
-MMR_SELECT = 3
 
 
 def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1871,10 +1652,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size frames. Pool and sims persist once (PERF 27: they
     feed every selection stage)."""
     emb = t(spark, sf_dir, "embeddings")
-    e = (
-        emb.select("vec_id", to_double_array("embedding").alias("v"))
-        .withColumn("nrm", l2_norm(F.col("v")))
-    )
+    e = _vectors(emb)
     pool = (
         brute_topk(emb, emb.filter(_query_side()), k=MMR_POOL)
         .select("query_id", "cand_id", F.col("cosine").alias("rel"))
@@ -2018,13 +1796,11 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizes every x_d·dot cell to fixed point and column-sums to ONE
     64-long partial vector per partition; a 64-group aggregation merges
     the partials. Linear in corpus size, shuffle payload O(64 ×
-    #partitions) longs. Replaced the posexplode + 64-group aggregation
-    form at VERDICT r5 #5: pushing 64·N exploded rows through the
-    aggregate was the suite's sf1 hotspot (17 s), the numpy column
-    reduction does the identical integer arithmetic in-batch (measured
-    sf0.1 3.2→<2 s, sf1 15→<6 s with the repartition below; the even
-    older 64-conditional-sum single-row form was slower still, PERF
-    30). The reduction integers are unchanged: multiply/add/floor are
+    #partitions) longs. A posexplode + 64-group aggregation form pushes
+    64·N exploded rows through the aggregate (17 s at sf1); the numpy
+    column reduction does the identical integer arithmetic in-batch
+    (measured sf0.1 3.2→<2 s, sf1 15→<6 s with the repartition below;
+    a 64-conditional-sum single-row form is slower still, PERF 30). The reduction integers are unchanged: multiply/add/floor are
     single IEEE ops in both numpy and the JVM, and the per-element
     quantize-then-BIGINT-sum is associative across batches."""
     # persist once: each of the 3 iterations re-references the decoded
@@ -2309,10 +2085,10 @@ def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF-PQ with exact re-rank) against exact brute-force ground truth —
     the measure-don't-guess table you publish before trusting an ANN
     index: per (method, query), |ANN top-k ∩ exact top-k| / k, plus
-    ``n_candidates`` (VERDICT r10 #7) — the number of scored candidate
+    ``n_candidates`` — the number of scored candidate
     rows the method paid for that query, so the recall-vs-probe-cost
     frontier (e.g. ivf-vs-lsh_mp) is a measured trade, not two recall
-    numbers with invisible costs. Multi-probe ('lsh_mp', VERDICT r9 #5)
+    numbers with invisible costs. Multi-probe ('lsh_mp')
     is the recall lever over 'lsh': same index table, 22 probed buckets
     (Hamming ≤ 2, ``MP_PROBES``) — its recall must dominate
     single-probe per-query (pinned in tests/test_round9_ops.py).
@@ -2330,36 +2106,31 @@ def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 20·k rows — driver-free and constant-size regardless of corpus
     scale.
 
-    Measured at the round-12 operating point (√N cells, nprobe =
-    3.4·√cells — VERDICT r11 #3; scratch sf0.1 → sf1, means over the
+    Measured at the current operating point (√N cells, nprobe =
+    3.4·√cells; scratch sf0.1 → sf1, means over the
     20 queries, recall@10 / mean candidates): **ivf 0.775 / 1031 →
-    0.775 / 5685** — the fixed-8-cell design paid 1017 → 10086
+    0.775 / 5685** — a fixed-8-cell design pays 1017 → 10086
     candidates (LINEAR, the probed-cells-degenerate-to-half-corpus
     failure) for 0.735 → 0.775; scaled cells hold the same recall at
     N^0.75 candidate growth, and the matched-budget frontier strictly
     dominates (nprobe ladder: 0.77 vs 0.735 at ~1k, 0.925 vs 0.775 at
-    ~10k — evidence/r12/IVF_NPROBE_ladder.json). **ivfpq 0.765 / 1031
-    → 0.59 / 5685** (after the round-12 PQ_M=8 / PQ_KS=256 codebook
-    upgrade — the 4×32 configuration was information-starved, see the
-    PQ_M comment: with it, ivfpq read 0.53 → 0.25 as the fixed
-    RERANK_K=500 shortlist covered a shrinking fraction of the probed
-    set; richer codes fixed the ranking rather than growing the
-    fetch; round 13 then scaled the shortlist with the probed set —
-    VERDICT r12 #4 — and ivfpq reads 0.770 at sf1, the ivf ceiling,
-    evidence/r13/),
+    ~10k — evidence/r12/IVF_NPROBE_ladder.json). **ivfpq 0.765 → 0.770**
+    at sf0.1 → sf1, the ivf ceiling (evidence/r13/): the 8×256
+    codebooks rank where 4×32 ones were information-starved (see the
+    PQ_M comment), and the shortlist scales with the probed set (a
+    fixed 500-row shortlist read 0.59 at sf1),
     **lsh_mp 0.605 / 710** (22 of 64 buckets), lsh 0.080 / 38 (single
     probe — the untuned baseline), pq 0.075 / 1999 (ADC-only: scores
     EVERY code, and still can't rank 64-d near-random vectors from
     4×32 codebooks — the compression trade shown honestly, and why
     the re-rank stage exists)."""
-    # r14 optimization: (a) the exact ground truth is persisted for the
-    # invocation — it was referenced 6× (the base counts + five hit
-    # joins), re-running the brute-force pass each time; (b) the four
+    # (a) the exact ground truth is persisted for the call: it is
+    # referenced 6× (the base counts + five hit joins); (b) the four
     # single-stage methods take recall AND n_candidates from ONE
     # _ann_topk(count_col=...) relation — same rank window, same scored
     # producer, plus a whole-partition count over the same exchange —
-    # instead of a separate groupBy branch that re-ran the scored
-    # producer (guide §2.4). ivfpq keeps the two-relation shape: its
+    # instead of a separate groupBy branch that would re-run the scored
+    # producer. ivfpq keeps the two-relation shape: its
     # candidate cost is the ADC relation while its served query re-ranks
     # a shortlist, so the two are genuinely different dataframes. The
     # result is materialized (≤ 20·5 rows) and the truth cache released
@@ -2420,7 +2191,7 @@ def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _assemble(method, _hits(ann), cand)
 
     out = (
-        per_method_fused("lsh", _lsh_scored(spark, sf_dir), "cosine")
+        per_method_fused("lsh", _mp_scored(spark, sf_dir, [0]), "cosine")
         .unionByName(
             per_method_fused("lsh_mp", _mp_scored(spark, sf_dir), "cosine")
         )
@@ -2668,7 +2439,7 @@ def embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # appearing/disappearing population — the strongest drift signal a
     # monitor exists to catch) must still appear in the report, with
     # count/share 0 on the missing side and null centroid columns
-    # (ADVICE r8). The oracle mirrors the outer join + coalesces.
+    # The oracle mirrors the outer join + coalesces.
     j = side("a").join(side("b"), ["label"], "full_outer")
     cos = dot_product(F.col("cv_a"), F.col("cv_b")) / (
         l2_norm(F.col("cv_a")) * l2_norm(F.col("cv_b"))
@@ -3554,10 +3325,11 @@ ORACLES = {
 # (query_id, cand_id, <score>) candidate rows — the oracle mirror of
 # the Spark ``_*_scored`` producers. The served top-k oracle and the
 # recall audit's candidate counts are BOTH derived from the same chain
-# text (no-drift, VERDICT r10 #7), exactly as the Spark side derives
+# text (no drift), exactly as the Spark side derives
 # both from the same producer dataframe.
 
-# Mirror of _lsh_scored: same bucket expression, bucket equi-join.
+# Mirror of _mp_scored with the single mask 0: same bucket expression,
+# bucket equi-join.
 _LSH_CHAIN = f"""
         WITH e AS ({_E_CTE}),
         bucketed AS (

@@ -43,18 +43,14 @@ MAX_SHUFFLES = {
     "dedup_minhash_lsh": 6,
     "dedup_simhash": 4,
     "dedup_ngram_jaccard_prefix": 6,
-    # the band relation, persisted since 49d84fe, feeds both sides of
-    # the band-key join and is counted once: 9 before that persist, 6
-    # after
-    "sim_neardup_pairs": 9,
-    # 6 → 8 in round 12: migrated to the scaled+probed band index
-    # (hyperplane_band_rows: posexplode spread + per-(id, plane) and
-    # per-(id, band) aggregations replace the packed single-bucket
-    # aggregation) — two extra COMPACT n·nb-row exchanges bought
-    # recall 0.062 → 0.153 at sf1 and view-agreement with
-    # sim_range_search (PERF 75). Its band relation is persisted like
-    # sim_neardup_pairs' since 49d84fe: 8 before that persist, 5 after
-    "sim_semantic_decontaminate": 8,
+    # the persisted band + payload relation feeds both sides of the
+    # band-key join and is counted once
+    "sim_neardup_pairs": 6,
+    # a rollup of sim_range_search's cached hits: the persisted band
+    # relation's 3 (hyperplane_band_rows: posexplode spread, per-(id,
+    # plane) and per-(id, band) aggregations) counted once, the
+    # candidate distinct and the rollup's groupBy
+    "sim_semantic_decontaminate": 5,
     # 2 serving-side + the session-materialized PQ code table's one-time
     # argmin shuffle (PERF 52), counted once in its cached build. The
     # plan text counted 4: that build printed twice, under the AQE final

@@ -98,11 +98,10 @@ def test_range_recall_audit_consistent(spark, sf001_dir):
 
 
 def test_decontaminate_agrees_with_range_search(spark, sf001_dir):
-    """ADVICE r11 #3's exact complaint, inverted into a contract: the
-    per-train contamination flags and the hit-level radius view now
-    share one candidate generator, so a (train, eval) hit appears in
-    BOTH views or NEITHER — flagged docs always have hits, and every
-    hit's train doc is flagged."""
+    """The per-train contamination flags are a rollup of the hit-level
+    radius view, so a (train, eval) hit appears in BOTH views or
+    NEITHER: flagged docs always have hits, every hit's train doc is
+    flagged, and each flag counts its train doc's hits."""
     from content_analytics_etl_spark.plans.similarity_queries import (
         SEMDECON_COSINE,
         sim_range_search,

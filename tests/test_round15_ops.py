@@ -14,7 +14,7 @@ each change).
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import functions as F
 
 
 def test_pq_argmin_drops_unknown_m(spark):
@@ -170,16 +170,29 @@ def test_ieee_bucket_monotone_and_ranges(spark):
     assert set(neg) == {_IEEE_SENTINEL} and min(pos) > _IEEE_SENTINEL
 
 
+def quantile_bucket_desc(
+    df, col: str, num_buckets: int, rel_err: float = 0.001
+):
+    """Descending-order bucket id for ``col`` from one driver-side
+    ``approxQuantile`` pass, its boundaries embedded as literals: pid 0
+    holds the largest values, and equal values share a bucket (pid =
+    count of boundaries strictly greater). The reference pid the ieee
+    bucket is checked against."""
+    probs = [i / num_buckets for i in range(1, num_buckets)]
+    bounds = df.stat.approxQuantile(col, probs, rel_err)
+    barr = F.array(*[F.lit(float(b)) for b in sorted(bounds, reverse=True)])
+    return F.size(F.filter(barr, lambda b: b > F.col(col)))
+
+
 def test_prefix_sum_ieee_pid_parity(spark):
     """distributed_prefix_sum yields IDENTICAL (cum, rank) under the
-    r15 ieee pid and the old quantile pid — the rank/cum contract is
+    ieee pid and a quantile pid — the rank/cum contract is
     pid-invariant for any monotone pid."""
     import numpy as np
 
     from content_analytics_etl_spark.operators.prefix_sum import (
         distributed_prefix_sum,
         ieee_bucket_desc,
-        quantile_bucket_desc,
     )
 
     rng = np.random.default_rng(11)
