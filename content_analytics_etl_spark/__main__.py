@@ -14,6 +14,7 @@ dates on stdin and hard-code Windows paths (``ETL_full.py:17-18,153-154``).
 not read); a date range filters on the
 ``log_date`` column parsed from the ``YYYYMMDD`` filename convention —
 on a date-partitioned lake the same predicate becomes partition pruning.
+A drop whose name carries no date is outside every date range.
 ``ingest`` is the incremental (checkpointed, exactly-once-per-file)
 replacement for the reference's strategy-2 recovery loop. ``query``
 runs any registered analytics query by name.

@@ -1,23 +1,24 @@
 """Multimodal columns (BASELINE extension): image/audio/video as opaque
-``binary`` payloads with typed metadata, processed via Arrow-batched
-``mapInPandas``.
+``binary`` payloads with typed metadata, encoded and decoded in
+Arrow-batched ``mapInPandas`` stages.
 
-The Spark-side plumbing is real and tested — schema, partition-parallel
-batch iteration, UDF signatures, feature output shape. The codec step is
-REAL for all three kinds: payloads are genuine BMP (24-bit uncompressed)
-files, WAV (16-bit PCM) files, and AVI (RIFF container, uncompressed
-24-bit DIB 'vids' stream) videos, and ``decode_payload`` parses the
-actual byte formats with the stdlib (no external codec needed) — RIFF
-chunk walking, header fields, row padding, sample frames and all.
-``multimodal_decode`` / ``multimodal_video_decode`` round-trip
-encode→Spark→decode and are oracle-checked against the generative
-formulas recomputed in SQL, so a bug in either codec direction fails the
-gate. (Compressed codecs — H.264, MP3, JPEG — would plug in at the same
-``decode_payload`` seam via PyAV/ffmpeg in a deployment that ships
-native codec libraries; the container parsing here is the real thing.)
+Every codec is a real byte-format implementation in numpy and the
+stdlib: BMP (24-bit uncompressed), PNG (8-bit grayscale, DEFLATE, all
+five scanline filters), GIF87a (LZW), baseline JPEG (Huffman entropy
+coding, DCT), WAV (16-bit PCM) and AVI (RIFF container, uncompressed
+24-bit DIB 'vids' stream). The synthetic generators build payloads from
+``doc_id`` by formulas that the oracle SQL recomputes without seeing
+the bytes, so a bug in either codec direction fails the hash gate.
+``decode_payload`` dispatches a payload to its decoder by kind; a
+deployment that ships native codec libraries (PyAV/ffmpeg for H.264 or
+MP3) would add those decoders there.
+
+Each row-wise stage is one ``_row_stage``: a per-payload function that
+yields output tuples, declared once with its DDL schema. Only
+``extract_features`` runs its own whole-batch NumPy kernel.
 
 At 100 TB: payloads stay in parquet binary columns (never strings),
-feature extraction is ``mapInPandas`` over whatever partitioning the
+every decode stage is ``mapInPandas`` over whatever partitioning the
 scan produces (no shuffle), and metadata predicates (kind, width,
 duration) push down to the parquet scan before any payload is touched.
 """
@@ -26,11 +27,11 @@ from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,6 +55,11 @@ __all__ = [
     "decode_avi24",
     "synthetic_video_assets",
     "decode_video_properties",
+    "png_asset",
+    "gif_asset",
+    "jpeg_asset",
+    "synthetic_gray_assets",
+    "decode_gray_properties",
     "decode_payload",
     "decode_properties",
     "extract_features",
@@ -80,7 +86,27 @@ ASSET_SCHEMA = T.StructType(
 )
 
 FEATURE_DIM = 8
-KINDS = ("image", "audio", "video")
+
+
+def _row_stage(
+    df: DataFrame, cols: list[str], schema: str, fn: Callable[..., Iterable[tuple]]
+) -> DataFrame:
+    """Map each row of ``df.select(*cols)`` to zero or more output rows in
+    an Arrow-batched ``mapInPandas``: narrow, no shuffle, so the scan
+    partitioning is the decode parallelism. ``fn`` takes one row's values
+    in ``cols`` order and returns an iterable of tuples in ``schema``
+    order; ``schema`` is flat DDL (``"name type, ..."``). pandas infers
+    each output column's dtype from its values, so a column that mixes
+    ints and ``None`` arrives as float64/NaN and leaves as the declared
+    integer type with NULLs."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [out for row in zip(*(pdf[c] for c in cols)) for out in fn(*row)]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(run, schema=schema)
 
 
 def synthetic_assets(documents: DataFrame) -> DataFrame:
@@ -211,26 +237,13 @@ def resize_images(assets: DataFrame) -> DataFrame:
     cells keep every downstream canonicalizer happy (same policy as
     extract_features)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_px = RESIZE_W * RESIZE_H
-        for pdf in batches:
-            out: dict[str, list] = {"asset_id": [], "width": [], "height": []}
-            for k in range(n_px):
-                out[f"p{k}"] = []
-            out["mean_thumb"] = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, thumb = resize_bmp_nn(bytes(payload))
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                for k in range(n_px):
-                    out[f"p{k}"].append(thumb[k])
-                out["mean_thumb"].append(sum(thumb) / n_px)
-            yield pd.DataFrame(out)
+    def resize(aid: int, payload: bytes) -> list[tuple]:
+        w, h, thumb = resize_bmp_nn(payload)
+        return [(aid, w, h, *thumb, sum(thumb) / len(thumb))]
 
     px_cols = ", ".join(f"p{k} int" for k in range(RESIZE_W * RESIZE_H))
     schema = f"asset_id long, width int, height int, {px_cols}, mean_thumb double"
-    return assets.select("asset_id", "payload").mapInPandas(run, schema=schema)
+    return _row_stage(assets, ["asset_id", "payload"], schema, resize)
 
 
 PHASH_SCALE = 1024  # DCT basis scaled to integers: round(1024·cos)
@@ -282,25 +295,11 @@ def phash_bmp(data: bytes) -> tuple[int, int, int]:
 def phash_images(assets: DataFrame) -> DataFrame:
     """Arrow-batched perceptual hashing over real BMP payloads
     (``mapInPandas``, no shuffle): (asset_id, width, height, phash)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "asset_id": [],
-                "width": [],
-                "height": [],
-                "phash": [],
-            }
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, ph = phash_bmp(bytes(payload))
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["phash"].append(ph)
-            yield pd.DataFrame(out)
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema="asset_id long, width int, height int, phash long"
+    return _row_stage(
+        assets,
+        ["asset_id", "payload"],
+        "asset_id long, width int, height int, phash long",
+        lambda aid, payload: [(aid, *phash_bmp(payload))],
     )
 
 
@@ -366,33 +365,18 @@ def audio_window_stats(assets: DataFrame) -> DataFrame:
     fan-out never materializes on the driver. Integer sample sums are
     exact, and IEEE sqrt/division are correctly rounded, so every output
     double is bit-reproducible at any parallelism."""
-    import math
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": [], "window_idx": [], "n_samples": [],
-                "mean_abs": [], "rms": [],
-            }
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _sr, samples = decode_wav16_samples(bytes(payload))
-                for w in range(0, len(samples), AUDIO_WIN):
-                    chunk = samples[w : w + AUDIO_WIN]
-                    n_w = len(chunk)
-                    sum_abs = sum(abs(s) for s in chunk)  # exact int
-                    sum_sq = sum(s * s for s in chunk)  # exact int
-                    out["asset_id"].append(aid)
-                    out["window_idx"].append(w // AUDIO_WIN)
-                    out["n_samples"].append(n_w)
-                    out["mean_abs"].append(sum_abs / n_w)
-                    out["rms"].append(math.sqrt(sum_sq / n_w))
-            yield pd.DataFrame(out)
+    def windows(aid: int, payload: bytes) -> Iterator[tuple]:
+        _sr, samples = decode_wav16_samples(payload)
+        for w in range(0, len(samples), AUDIO_WIN):
+            chunk = samples[w : w + AUDIO_WIN]
+            n_w = len(chunk)
+            sum_abs = sum(abs(s) for s in chunk)  # exact int
+            sum_sq = sum(s * s for s in chunk)  # exact int
+            yield aid, w // AUDIO_WIN, n_w, sum_abs / n_w, math.sqrt(sum_sq / n_w)
 
-    schema = (
-        "asset_id long, window_idx int, n_samples int, "
-        "mean_abs double, rms double"
-    )
-    return assets.select("asset_id", "payload").mapInPandas(run, schema=schema)
+    schema = "asset_id long, window_idx int, n_samples int, mean_abs double, rms double"
+    return _row_stage(assets, ["asset_id", "payload"], schema, windows)
 
 
 def _frame_dib24(width: int, height: int, base: int, t: int) -> bytes:
@@ -568,28 +552,11 @@ def decode_planned_frames(assets: DataFrame, plan: DataFrame) -> DataFrame:
     broadcasts it — payloads never reshuffle), then a narrow
     ``mapInPandas``; at 100 TB this is the decode-farm stage fed by
     ``multimodal_frame_plan``'s work list."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": [], "frame_idx": [],
-                "width": [], "height": [], "mean_pixel": [],
-            }
-            for aid, fidx, payload in zip(
-                pdf["asset_id"], pdf["frame_idx"], pdf["payload"]
-            ):
-                w, h, mean = decode_avi24_frame(bytes(payload), int(fidx))
-                out["asset_id"].append(aid)
-                out["frame_idx"].append(fidx)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_pixel"].append(mean)
-            yield pd.DataFrame(out)
-
-    joined = assets.select("asset_id", "payload").join(plan, "asset_id")
-    schema = "asset_id long, frame_idx int, width int, height int, mean_pixel double"
-    return joined.select("asset_id", "frame_idx", "payload").mapInPandas(
-        run, schema=schema
+    return _row_stage(
+        assets.select("asset_id", "payload").join(plan, "asset_id"),
+        ["asset_id", "frame_idx", "payload"],
+        "asset_id long, frame_idx int, width int, height int, mean_pixel double",
+        lambda aid, fidx, payload: [(aid, fidx, *decode_avi24_frame(payload, fidx))],
     )
 
 
@@ -725,58 +692,10 @@ def decode_png_gray(data: bytes) -> tuple[int, int, float, int]:
     return width, height, total / (width * height), wsum
 
 
-def synthetic_png_assets(documents: DataFrame) -> DataFrame:
-    """Real compressed-image payloads: every doc_id % 3 == 0 becomes a
-    genuine PNG (8-bit grayscale, zlib DEFLATE, all 5 scanline filters;
-    width 8 + d%9, height 4 + d%8, pixel (d%241 + 3x + 5y) % 256)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "payload": [
-                        encode_png_gray(8 + int(d) % 9, 4 + int(d) % 8, int(d) % 241)
-                        for d in ids
-                    ],
-                }
-            )
-
-    return (
-        documents.select("doc_id")
-        .filter(F.col("doc_id") % 3 == 0)
-        .mapInPandas(build, schema="asset_id long, payload binary")
-    )
-
-
-def decode_png_properties(assets: DataFrame) -> DataFrame:
-    """Arrow-batched PNG decode: chunk walk + CRC check + inflate +
-    unfilter per payload, emitting (width, height, mean_pixel,
-    weighted_sum)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": pdf["asset_id"],
-                "width": [],
-                "height": [],
-                "mean_pixel": [],
-                "weighted_sum": [],
-            }
-            for payload in pdf["payload"]:
-                w, h, mean, ws = decode_png_gray(bytes(payload))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_pixel"].append(mean)
-                out["weighted_sum"].append(ws)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        run,
-        schema="asset_id long, width int, height int, "
-        "mean_pixel double, weighted_sum long",
-    )
+def png_asset(d: int) -> bytes:
+    """The PNG asset of doc ``d``: width 8 + d%9, height 4 + d%8, pixel
+    (d%241 + 3x + 5y) % 256."""
+    return encode_png_gray(8 + d % 9, 4 + d % 8, d % 241)
 
 
 _GIF_SIG = b"GIF87a"
@@ -958,62 +877,14 @@ def decode_gif_gray(data: bytes) -> tuple[int, int, float, int]:
     return w, h, float(gray.mean()), int((gray * weights).sum())
 
 
-def synthetic_gif_assets(documents: DataFrame) -> DataFrame:
-    """Real LZW-compressed payloads: every doc_id % 3 == 1 becomes a
-    genuine GIF87a (width 6 + d%10, height 4 + d%7, pixel index
-    (d%239 + 7x + 11y) % 256)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "payload": [
-                        encode_gif_gray(6 + int(d) % 10, 4 + int(d) % 7, int(d) % 239)
-                        for d in ids
-                    ],
-                }
-            )
-
-    return (
-        documents.select("doc_id")
-        .filter(F.col("doc_id") % 3 == 1)
-        .mapInPandas(build, schema="asset_id long, payload binary")
-    )
-
-
-def decode_gif_properties(assets: DataFrame) -> DataFrame:
-    """Arrow-batched GIF decode: header/palette/descriptor parse,
-    sub-block reassembly, LZW decompression, palette lookup."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": pdf["asset_id"],
-                "width": [],
-                "height": [],
-                "mean_pixel": [],
-                "weighted_sum": [],
-            }
-            for payload in pdf["payload"]:
-                w, h, mean, ws = decode_gif_gray(bytes(payload))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_pixel"].append(mean)
-                out["weighted_sum"].append(ws)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        run,
-        schema="asset_id long, width int, height int, "
-        "mean_pixel double, weighted_sum long",
-    )
+def gif_asset(d: int) -> bytes:
+    """The GIF asset of doc ``d``: width 6 + d%10, height 4 + d%7, pixel
+    index (d%239 + 7x + 11y) % 256."""
+    return encode_gif_gray(6 + d % 10, 4 + d % 7, d % 239)
 
 
 # --- JPEG baseline (ITU T.81), grayscale, from scratch ---------------------
-# Round 12 (VERDICT r11 #8): the one mainstream format missing from the
-# BMP/PNG/GIF/WAV/AVI matrix. Real baseline JFIF: DQT/SOF0/DHT/SOS
+# The one lossy codec here. Real baseline JFIF: DQT/SOF0/DHT/SOS
 # markers, canonical Huffman coding from the Annex K standard tables,
 # byte stuffing, DC prediction, zigzag, and a general float FDCT/IDCT
 # pair. JPEG is lossy, so the oracle trick differs from PNG/GIF: the
@@ -1054,7 +925,7 @@ _JPEG_AC_VALS = [
 # Odd anti-diagonals (row+col odd) are walked top-right -> bottom-left
 # (row ascending); even anti-diagonals bottom-left -> top-right (col
 # ascending).  tests/test_multimodal_decode.py pins the published prefix
-# so encoder and decoder cannot share a transposed table (ADVICE r12).
+# so encoder and decoder cannot share a transposed table.
 _JPEG_ZZ = sorted(
     ((u, v) for u in range(8) for v in range(8)),
     key=lambda t: (t[0] + t[1], t[0] if (t[0] + t[1]) % 2 else t[1]),
@@ -1324,66 +1195,50 @@ def decode_jpeg_gray(data: bytes) -> tuple[int, int, float, int]:
     return width, height, total / (width * height), wsum
 
 
-def synthetic_jpeg_assets(documents: DataFrame) -> DataFrame:
-    """Real baseline-JPEG payloads: every doc_id % 3 == 2 becomes a
-    genuine JFIF grayscale JPEG (dims 8·(1 + d%4) × 8·(1 + d%3), pixel
-    CONSTANT per 8×8 block: v = (d%253 + 3·bx + 5·by) % 256 — the
-    pattern for which the lossy round-trip is exact, see the module
-    comment above)."""
+def jpeg_asset(d: int) -> bytes:
+    """The JPEG asset of doc ``d``: 8·(1 + d%4) wide, 8·(1 + d%3) high,
+    pixel CONSTANT per 8×8 block: v = (d%253 + 3·bx + 5·by) % 256 — the
+    pattern for which the lossy round-trip is exact (see the comment at
+    the top of the JPEG section)."""
+    w, h = 8 * (1 + d % 4), 8 * (1 + d % 3)
+    bxs = np.arange(w, dtype=np.int64)[None, :] // 8
+    bys = np.arange(h, dtype=np.int64)[:, None] // 8
+    return encode_jpeg_gray(w, h, (d % 253 + 3 * bxs + 5 * bys) % 256)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            payloads = []
-            for d in ids:
-                d = int(d)
-                w, h = 8 * (1 + d % 4), 8 * (1 + d % 3)
-                bxs = np.arange(w, dtype=np.int64)[None, :] // 8
-                bys = np.arange(h, dtype=np.int64)[:, None] // 8
-                px = (d % 253 + 3 * bxs + 5 * bys) % 256
-                payloads.append(encode_jpeg_gray(w, h, px))
-            yield pd.DataFrame({"asset_id": ids, "payload": payloads})
 
-    return (
-        documents.select("doc_id")
-        .filter(F.col("doc_id") % 3 == 2)
-        .mapInPandas(build, schema="asset_id long, payload binary")
+def synthetic_gray_assets(
+    documents: DataFrame, residue: int, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """Real grayscale-image payloads: every doc_id % 3 == ``residue``
+    becomes the asset ``encode(doc_id)`` — ``png_asset`` (residue 0),
+    ``gif_asset`` (1) or ``jpeg_asset`` (2): (asset_id, payload)."""
+    return _row_stage(
+        documents.filter(F.col("doc_id") % 3 == residue),
+        ["doc_id"],
+        "asset_id long, payload binary",
+        lambda d: [(d, encode(d))],
     )
 
 
-def decode_jpeg_properties(assets: DataFrame) -> DataFrame:
-    """Arrow-batched JPEG decode: marker walk + Huffman entropy decode +
-    dequantize + IDCT per payload, emitting (width, height, mean_pixel,
-    weighted_sum)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": pdf["asset_id"],
-                "width": [],
-                "height": [],
-                "mean_pixel": [],
-                "weighted_sum": [],
-            }
-            for payload in pdf["payload"]:
-                w, h, mean, ws = decode_jpeg_gray(bytes(payload))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_pixel"].append(mean)
-                out["weighted_sum"].append(ws)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        run,
-        schema="asset_id long, width int, height int, "
-        "mean_pixel double, weighted_sum long",
+def decode_gray_properties(
+    assets: DataFrame, decode: Callable[[bytes], tuple[int, int, float, int]]
+) -> DataFrame:
+    """Arrow-batched grayscale-image decode with ``decode_png_gray``,
+    ``decode_gif_gray`` or ``decode_jpeg_gray`` per payload: (asset_id,
+    width, height, mean_pixel, weighted_sum)."""
+    return _row_stage(
+        assets,
+        ["asset_id", "payload"],
+        "asset_id long, width int, height int, mean_pixel double, weighted_sum long",
+        lambda aid, payload: [(aid, *decode(payload))],
     )
 
 
 def decode_payload(payload: bytes, kind: str):
     """Decode a payload by kind — real byte-format parsing, stdlib only:
     BMP for image, WAV for audio, AVI (uncompressed DIB frames) for
-    video. Compressed codecs would plug in here via PyAV/ffmpeg."""
+    video. A native codec (H.264 or MP3 via PyAV/ffmpeg) would be added
+    here as another kind."""
     if kind == "image":
         return decode_bmp24(payload)
     if kind == "audio":
@@ -1402,27 +1257,13 @@ def synthetic_media_assets(documents: DataFrame) -> DataFrame:
     relational operation); the generative formulas are SQL-expressible,
     which is what makes the decode round-trip oracle-checkable."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            payloads, kinds = [], []
-            for d in ids:
-                d = int(d)
-                if d % 2 == 0:
-                    kinds.append("image")
-                    payloads.append(encode_bmp24(8 + d % 8, 4 + d % 4, d % 251))
-                else:
-                    kinds.append("audio")
-                    n = 64 + d % 64
-                    samples = [(d * 31 + i * 7) % 2048 - 1024 for i in range(n)]
-                    payloads.append(encode_wav16(16000, samples))
-            yield pd.DataFrame(
-                {"asset_id": ids, "kind": kinds, "payload": payloads}
-            )
+    def media(d: int) -> list[tuple]:
+        if d % 2 == 0:
+            return [(d, "image", encode_bmp24(8 + d % 8, 4 + d % 4, d % 251))]
+        samples = [(d * 31 + i * 7) % 2048 - 1024 for i in range(64 + d % 64)]
+        return [(d, "audio", encode_wav16(16000, samples))]
 
-    return documents.select("doc_id").mapInPandas(
-        build, schema="asset_id long, kind string, payload binary"
-    )
+    return _row_stage(documents, ["doc_id"], "asset_id long, kind string, payload binary", media)
 
 
 def synthetic_video_assets(documents: DataFrame) -> DataFrame:
@@ -1432,18 +1273,11 @@ def synthetic_video_assets(documents: DataFrame) -> DataFrame:
     Arrow-batched ``mapInPandas``; the generative formulas are
     SQL-expressible, which makes the decode round-trip oracle-checkable
     (same contract as ``synthetic_media_assets``)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            payloads = [
-                encode_avi24(8 + d % 8, 4 + d % 4, 3 + d % 5, 10, d % 251)
-                for d in map(int, ids)
-            ]
-            yield pd.DataFrame({"asset_id": ids, "payload": payloads})
-
-    return documents.select("doc_id").mapInPandas(
-        build, schema="asset_id long, payload binary"
+    return _row_stage(
+        documents,
+        ["doc_id"],
+        "asset_id long, payload binary",
+        lambda d: [(d, encode_avi24(8 + d % 8, 4 + d % 4, 3 + d % 5, 10, d % 251))],
     )
 
 
@@ -1452,76 +1286,35 @@ def decode_video_properties(assets: DataFrame) -> DataFrame:
     Arrow batch: (asset_id, width, height, n_frames, fps, mean_pixel).
     No shuffle — runs over the scan partitioning; at 100 TB this is the
     exact stage shape a GPU/ffmpeg decode farm consumes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": [], "width": [], "height": [],
-                "n_frames": [], "fps": [], "mean_pixel": [],
-            }
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, nf, fps, mean = decode_avi24(bytes(payload))
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_frames"].append(nf)
-                out["fps"].append(fps)
-                out["mean_pixel"].append(mean)
-            yield pd.DataFrame(out)
-
-    schema = (
-        "asset_id long, width int, height int, n_frames int, "
-        "fps int, mean_pixel double"
+    return _row_stage(
+        assets,
+        ["asset_id", "payload"],
+        "asset_id long, width int, height int, n_frames int, fps int, mean_pixel double",
+        lambda aid, payload: [(aid, *decode_avi24(payload))],
     )
-    return assets.select("asset_id", "payload").mapInPandas(run, schema=schema)
 
 
 def decode_properties(assets: DataFrame) -> DataFrame:
-    """Decode real payloads (BMP/WAV byte parsing) per Arrow batch:
-    (asset_id, kind, width, height, mean_pixel, sample_rate, n_samples,
-    mean_abs). Inapplicable columns are NULL per kind. No shuffle —
-    runs over the scan partitioning like any decode stage would."""
+    """Decode real image and audio payloads through ``decode_payload``
+    per Arrow batch: (asset_id, kind, width, height, mean_pixel,
+    sample_rate, n_samples, mean_abs). Inapplicable columns are NULL per
+    kind. No shuffle — runs over the scan partitioning like any decode
+    stage would."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": [], "kind": [], "width": [], "height": [],
-                "mean_pixel": [], "sample_rate": [], "n_samples": [],
-                "mean_abs": [],
-            }
-            for aid, kind, payload in zip(
-                pdf["asset_id"], pdf["kind"], pdf["payload"]
-            ):
-                out["asset_id"].append(aid)
-                out["kind"].append(kind)
-                if kind == "image":
-                    w, h, mean = decode_bmp24(bytes(payload))
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["mean_pixel"].append(mean)
-                    out["sample_rate"].append(None)
-                    out["n_samples"].append(None)
-                    out["mean_abs"].append(None)
-                else:
-                    sr, n, mean_abs = decode_wav16(bytes(payload))
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["mean_pixel"].append(None)
-                    out["sample_rate"].append(sr)
-                    out["n_samples"].append(n)
-                    out["mean_abs"].append(mean_abs)
-            yield pd.DataFrame(out)
+    def props(aid: int, kind: str, payload: bytes) -> list[tuple]:
+        a, b, c = decode_payload(payload, kind)
+        if kind == "image":
+            return [(aid, kind, a, b, c, None, None, None)]
+        return [(aid, kind, None, None, None, a, b, c)]
 
     schema = (
         "asset_id long, kind string, width int, height int, "
         "mean_pixel double, sample_rate int, n_samples long, mean_abs double"
     )
-    return assets.select("asset_id", "kind", "payload").mapInPandas(
-        run, schema=schema
-    )
+    return _row_stage(assets, ["asset_id", "kind", "payload"], schema, props)
 
 
-def extract_features(assets: DataFrame, batch_size_hint: int | None = None) -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over payload bytes
     (``mapInPandas``): (asset_id, kind, n_bytes, f0..f{FEATURE_DIM-1}).
     Runs partition-parallel with no shuffle; the iterator shape is the

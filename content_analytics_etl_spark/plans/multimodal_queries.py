@@ -15,20 +15,22 @@ from pyspark.sql import functions as F
 from ..multimodal import (
     DCT_C,
     audio_window_stats,
-    phash_images,
-    decode_gif_properties,
-    decode_jpeg_properties,
+    decode_gif_gray,
+    decode_gray_properties,
+    decode_jpeg_gray,
     decode_planned_frames,
-    decode_png_properties,
+    decode_png_gray,
     decode_properties,
     decode_video_properties,
     extract_features,
+    gif_asset,
+    jpeg_asset,
+    phash_images,
+    png_asset,
     resize_images,
     synthetic_assets,
-    synthetic_gif_assets,
-    synthetic_jpeg_assets,
+    synthetic_gray_assets,
     synthetic_media_assets,
-    synthetic_png_assets,
     synthetic_video_assets,
 )
 from ._util import t
@@ -121,8 +123,8 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     miscomputes ANY pixel hash-fails — this is the compressed-codec
     counterpart of the BMP/WAV/AVI round-trips (DEFLATE entropy coding
     included, not just container parsing)."""
-    assets = synthetic_png_assets(t(spark, sf_dir, "documents"))
-    return decode_png_properties(assets)
+    assets = synthetic_gray_assets(t(spark, sf_dir, "documents"), 0, png_asset)
+    return decode_gray_properties(assets, decode_png_gray)
 
 
 def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,8 +138,8 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-packed literal-code stream in tests/test_multimodal_decode.py,
     so encoder and decoder cannot be wrong together. Same
     position-weighted checksum oracle as the PNG path."""
-    assets = synthetic_gif_assets(t(spark, sf_dir, "documents"))
-    return decode_gif_properties(assets)
+    assets = synthetic_gray_assets(t(spark, sf_dir, "documents"), 1, gif_asset)
+    return decode_gray_properties(assets, decode_gif_gray)
 
 
 def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,8 +159,8 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoder against a hand-packed stream
     (tests/test_multimodal_decode.py) — encoder and decoder cannot be
     wrong together."""
-    assets = synthetic_jpeg_assets(t(spark, sf_dir, "documents"))
-    return decode_jpeg_properties(assets)
+    assets = synthetic_gray_assets(t(spark, sf_dir, "documents"), 2, jpeg_asset)
+    return decode_gray_properties(assets, decode_jpeg_gray)
 
 
 def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,7 +19,7 @@ import hashlib
 import os
 from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,6 +29,7 @@ from ..schemas import STAR_SCHEMAS, TABLE_NAMES, VIEWING_LOG_SCHEMA
 __all__ = [
     "load_table",
     "load_tables",
+    "log_date_from_filename",
     "read_viewing_log",
     "read_viewing_log_quarantine",
     "read_table",
@@ -192,6 +193,20 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
+def log_date_from_filename() -> Column:
+    """``log_date``: the DateType day of the reference's ``YYYYMMDD.json``
+    drop-file convention (``ETL_full.py:26,30``), read from
+    ``input_file_name`` per row. A file whose name does not end in
+    ``YYYYMMDD.json(l)`` extracts '', which ANSI ``to_date`` refuses to
+    parse; ``nullif`` makes that a NULL ``log_date`` instead of a failed
+    job, so a date range excludes the file and the streaming ingest can
+    route its rows to the dead-letter channel."""
+    return F.to_date(
+        F.nullif(F.regexp_extract(F.input_file_name(), r"(\d{8})\.jsonl?$", 1), F.lit("")),
+        "yyyyMMdd",
+    ).alias("log_date")
+
+
 def read_viewing_log(
     spark: SparkSession,
     path: str | list[str],
@@ -208,22 +223,15 @@ def read_viewing_log(
     nested-schema pruning means the envelope fields are never
     materialized.
 
-    ``date_from_filename`` stamps a ``log_date`` DateType column parsed
-    from the reference's ``YYYYMMDD.json`` filename convention
-    (``ETL_full.py:26,30``) via ``input_file_name`` — a distributed
-    replacement for the driver-side date loop (S3). On a real deployment
-    the data would instead live in a ``date=``-partitioned layout and
-    this becomes a partition column.
+    ``date_from_filename`` stamps the ``log_date_from_filename`` column —
+    a distributed replacement for the driver-side date loop (S3); a drop
+    without a date in its name gets a NULL ``log_date``. On a real
+    deployment the data would instead live in a ``date=``-partitioned
+    layout and this becomes a partition column.
     """
     df = spark.read.schema(VIEWING_LOG_SCHEMA).json(path)
     if date_from_filename:
-        df = df.withColumn(
-            "log_date",
-            F.to_date(
-                F.regexp_extract(F.input_file_name(), r"(\d{8})\.jsonl?$", 1),
-                "yyyyMMdd",
-            ),
-        )
+        df = df.select("*", log_date_from_filename())
     if flatten:
         cols = ["_source.*"] + (["log_date"] if date_from_filename else [])
         df = df.select(*cols)

@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import VIEWING_LOG_SCHEMA
+from ..sources.readers import log_date_from_filename
 
 __all__ = ["ingest_viewing_logs", "ingest_viewing_logs_with_dlq"]
 
@@ -48,16 +49,7 @@ def ingest_viewing_logs(
     raw = spark.readStream.schema(VIEWING_LOG_SCHEMA).json(input_dir)
     flat = raw.select(
         "_source.*",
-        # nullif: a non-matching filename extracts '' which ANSI
-        # to_date refuses to parse — NULL instead, so the row is
-        # routable (DLQ) rather than a batch-failing exception
-        F.to_date(
-            F.nullif(
-                F.regexp_extract(F.input_file_name(), r"(\d{8})\.jsonl?$", 1),
-                F.lit(""),
-            ),
-            "yyyyMMdd",
-        ).alias("log_date"),
+        log_date_from_filename(),
     )
     q = (
         flat.writeStream.format("parquet")
@@ -104,16 +96,7 @@ def ingest_viewing_logs_with_dlq(
     stamped = raw.select(
         "*",
         F.input_file_name().alias("_src_file"),
-        # nullif: a non-matching filename extracts '' which ANSI
-        # to_date refuses to parse — NULL instead, so the row is
-        # routable (DLQ) rather than a batch-failing exception
-        F.to_date(
-            F.nullif(
-                F.regexp_extract(F.input_file_name(), r"(\d{8})\.jsonl?$", 1),
-                F.lit(""),
-            ),
-            "yyyyMMdd",
-        ).alias("log_date"),
+        log_date_from_filename(),
     )
 
     def split_batch(batch, batch_id: int) -> None:

@@ -78,15 +78,13 @@ def _etl(drops: str, out: str, capsys) -> int:
     return int(m.group(1))
 
 
-def test_cli_etl_matches_reference_simulation(spark, tmp_path, capsys):
-    out = str(tmp_path / "profiles")
-    wrote = _etl(_write_drops(tmp_path / "drops"), out, capsys)
+def _profiles(out: str) -> dict[str, tuple]:
     files = glob.glob(f"{out}/part-*.csv")
     assert len(files) == 1  # coalesce(1): single CSV, no shuffle
     with open(files[0], newline="") as fh:
         reader = csv.DictReader(fh)
         assert reader.fieldnames == COLUMNS
-        got = {
+        return {
             r["Contract"]: tuple(
                 r[c] for c in (
                     "ChildDuration", "MovieDuration", "RelaxDuration", "SportDuration",
@@ -95,12 +93,34 @@ def test_cli_etl_matches_reference_simulation(spark, tmp_path, capsys):
             )
             for r in reader
         }
+
+
+def _want_in_range() -> dict[str, tuple]:
     in_range = [r for day in ("20220402", "20220403") for r in DAYS[day]]
-    want = {
-        c: tuple(str(v) for v in row) for c, row in _reference_sim(in_range).items()
-    }
+    return {c: tuple(str(v) for v in row) for c, row in _reference_sim(in_range).items()}
+
+
+def test_cli_etl_matches_reference_simulation(spark, tmp_path, capsys):
+    out = str(tmp_path / "profiles")
+    wrote = _etl(_write_drops(tmp_path / "drops"), out, capsys)
+    got = _profiles(out)
+    want = _want_in_range()
     assert "ONLY_DAY1" not in want and "ERROR_ONLY" not in want and "ZERO" in want
     assert got == want
+    assert wrote == len(got)
+
+
+def test_cli_etl_date_range_skips_undated_drops(spark, tmp_path, capsys):
+    # a top-level drop whose name carries no YYYYMMDD date gets a NULL
+    # log_date, so a date range leaves it out instead of failing the job
+    drops = tmp_path / "drops"
+    _write_drops(drops)
+    (drops / "notes.json").write_text(_src("UNDATED", "U1", 100, "VOD") + "\n")
+    out = str(tmp_path / "profiles")
+    wrote = _etl(str(drops), out, capsys)
+    got = _profiles(out)
+    assert "UNDATED" not in got
+    assert got == _want_in_range()
     assert wrote == len(got)
 
 
@@ -114,7 +134,7 @@ def test_cli_etl_reads_only_top_level_drops(spark, tmp_path, capsys):
         (drops / sub / "20220402.json").write_text(_src("SUBDIR", "SD", 100, "VOD") + "\n")
     out = tmp_path / "profiles"
     wrote = _etl(str(drops), str(out), capsys)
-    assert wrote == len(_reference_sim([r for d in ("20220402", "20220403") for r in DAYS[d]]))
+    assert wrote == len(_want_in_range())
     (csv_file,) = glob.glob(f"{out}/part-*.csv")
     assert "SUBDIR" not in open(csv_file).read()
 

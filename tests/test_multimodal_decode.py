@@ -522,3 +522,55 @@ def test_jpeg_zigzag_matches_published_t81_sequence():
     assert _JPEG_ZZ[62] == (7, 6)
     assert _JPEG_ZZ[63] == (7, 7)
     assert len(set(_JPEG_ZZ)) == 64
+
+
+def test_row_stage_fans_out_and_drops_rows(spark):
+    """One input row may yield several output rows or none."""
+    from content_analytics_etl_spark.multimodal import _row_stage
+
+    df = spark.createDataFrame([(1, 3), (2, 0), (3, 1)], "k long, n long")
+    out = _row_stage(
+        df, ["k", "n"], "k long, i int", lambda k, n: [(k, i) for i in range(n)]
+    )
+    assert out.schema.simpleString() == "struct<k:bigint,i:int>"
+    assert sorted(map(tuple, out.collect())) == [(1, 0), (1, 1), (1, 2), (3, 0)]
+
+
+def test_row_stage_null_cells(spark):
+    """NULL cells survive in both batch shapes pandas can infer: a column
+    mixing ints and None (float64/NaN) and a column of only None
+    (object)."""
+    from content_analytics_etl_spark.multimodal import _row_stage
+
+    schema = "k long, even_k long, label string"
+
+    def fn(k):
+        return [(k, k if k % 2 == 0 else None, None if k == 3 else str(k))]
+
+    mixed = spark.createDataFrame([(1,), (2,), (3,)], "k long").coalesce(1)
+    out = _row_stage(mixed, ["k"], schema, fn)
+    assert out.schema.simpleString() == "struct<k:bigint,even_k:bigint,label:string>"
+    assert sorted(map(tuple, out.collect())) == [(1, None, "1"), (2, 2, "2"), (3, None, None)]
+    only_null = spark.createDataFrame([(1,), (3,)], "k long").coalesce(1)
+    assert sorted(map(tuple, _row_stage(only_null, ["k"], schema, fn).collect())) == [
+        (1, None, "1"),
+        (3, None, None),
+    ]
+
+
+def test_row_stage_empty_input(spark):
+    """An empty frame, and a batch whose every row maps to nothing, both
+    give no rows under the declared schema."""
+    from content_analytics_etl_spark.multimodal import _row_stage
+
+    schema = "k long, n int, payload binary"
+
+    def fn(k, payload):
+        return [(k, len(payload), payload)] if payload else []
+
+    empty = spark.createDataFrame([], "k long, payload binary")
+    dropped = spark.createDataFrame([(1, b""), (2, b"")], "k long, payload binary")
+    for df in (empty, dropped.coalesce(1)):
+        out = _row_stage(df, ["k", "payload"], schema, fn)
+        assert out.schema.simpleString() == "struct<k:bigint,n:int,payload:binary>"
+        assert out.collect() == []
